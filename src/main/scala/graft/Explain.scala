@@ -45,7 +45,13 @@ object Explain {
           val bus = spark.sparkContext.getClass.getMethod("listenerBus")
             .invoke(spark.sparkContext)
           bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: Throwable => Thread.sleep(150) }
+        } catch {
+          // the drain was interrupted: keep the flag for the caller
+          case e: java.lang.reflect.InvocationTargetException
+              if e.getCause.isInstanceOf[InterruptedException] =>
+            Thread.currentThread().interrupt()
+          case scala.util.control.NonFatal(_) => Thread.sleep(150)
+        }
         println(f"$name%-26s RUN$i rows=$n time=$sec%.2f s jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get}")
       }
     }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
 
 import InfluxQLAst.InfluxQLParseException
 
+import scala.util.control.NonFatal
+
 /** The InfluxDB 1.x HTTP query surface — what the reference's consumers
   * actually talk to: its data lands in InfluxDB 1.7 and Grafana reads it
   * back over the `/query` endpoint (ref README.md:13-14 InfluxDB 1.7.x
@@ -471,7 +473,7 @@ object InfluxQLHttp {
       // (db, rp) (see forwardToSubscriptions)
       forwardToSubscriptions(storeDir, wparams, body)
     } catch {
-      case e: Throwable => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
+      case NonFatal(e) => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
     }
   }
 
@@ -550,7 +552,7 @@ object InfluxQLHttp {
       ex.sendResponseHeaders(204, -1)
       ex.close()
     } catch {
-      case e: Throwable => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
+      case NonFatal(e) => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
     }
   }
 
@@ -608,8 +610,8 @@ object InfluxQLHttp {
       // a probe of the wrong dimensionality can never match — reject it
       // as a client error instead of letting a distance call blow up.
       // (match, not foreach: a `return` inside a lambda is a
-      // NonLocalReturnControl throw that the Throwable handler below
-      // would intercept and double-respond on)
+      // NonLocalReturnControl throw, which a catch-all handler would
+      // intercept and double-respond on)
       graft.sinks.VectorIndexStore.dimOf(idx) match {
         case Some(d) if probe.size != d =>
           respond(ex, 400, errJson(
@@ -633,7 +635,7 @@ object InfluxQLHttp {
       } finally lock.readLock.unlock()
       respond(ex, 200, out)
     } catch {
-      case e: Throwable => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
+      case NonFatal(e) => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
     }
   }
 
@@ -1006,7 +1008,7 @@ object InfluxQLHttp {
       }
     } catch {
       case e: InfluxQLParseException => respond(ex, 400, errJson(e.getMessage))
-      case e: Throwable              => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
+      case NonFatal(e)               => respond(ex, 500, errJson(String.valueOf(e.getMessage)))
     }
   }
 

@@ -1,43 +1,39 @@
 package graft.sinks
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedWriter, FileWriter}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 
 /** InfluxDB line-protocol sink (SURVEY.md §2.1 S3) — replaces the
   * reference's one-HTTP-POST-per-sample write (Linux/InfluxConnector2.py:176)
   * with batched, per-partition writes.
   *
-  * The line format (`measurement field=value timestamp_ns`) is built with
-  * codegen'd column functions, so formatting runs distributed; only the
-  * final append happens in the sink. `foreachBatch(append(dir))` wires it
+  * The line format (`measurement field=value timestamp_ns`) is built by the
+  * codegen'd `format_line` kernel ([[FormatLine]]), so formatting runs
+  * distributed; only the final append happens in the sink.
+  * `foreachBatch(append(dir))` wires it
   * into Structured Streaming with one writer per micro-batch — connection
   * (here: file handle) reuse amortized across the whole batch, the fix for
   * the reference's per-sample write amplification (BASELINE.md).
   */
 object LineProtocol {
 
-  /** Escape a measurement name (line-protocol: commas + spaces). */
-  def escapeMeasurement(c: Column): Column =
-    regexp_replace(regexp_replace(c, ",", "\\\\,"), " ", "\\\\ ")
-
-  /** Escape a tag/field key or tag value (line-protocol: commas, spaces,
-    * AND equals — one more than measurements).
+  /** One line-protocol line per row: `measurement alias=value tsNs`, built
+    * by the native [[FormatLine]] kernel. The measurement escapes commas
+    * and spaces; the alias is a FIELD KEY on the wire, so it also escapes
+    * `=` — an alias with a space or comma must not tear the line apart.
+    * A NULL in any input gives a NULL line, which the sinks skip.
+    * `format_line` is registered in the active session, the one whose
+    * plans take the column.
     */
-  def escapeKey(c: Column): Column =
-    regexp_replace(escapeMeasurement(c), "=", "\\\\=")
-
-  /** One line-protocol line per row: `measurement alias=value tsNs`. The
-    * alias is a FIELD KEY on the wire, so it carries key escaping — an
-    * alias with a space or comma must not tear the line apart.
-    */
-  def lineCol(measurement: Column, alias: Column, value: Column, tsNs: Column): Column =
-    concat(escapeMeasurement(measurement), lit(" "),
-      escapeKey(alias), lit("="), format_string("%.2f", value), lit(" "),
-      tsNs.cast("string"))
+  def lineCol(measurement: Column, alias: Column, value: Column, tsNs: Column): Column = {
+    FormatLine.register(SparkSession.active)
+    call_function("format_line", measurement, alias, value.cast("double"), tsNs.cast("long"))
+  }
 
   /** Shape an events-like frame into line-protocol strings. */
   def format(df: DataFrame): DataFrame =
@@ -55,7 +51,7 @@ object LineProtocol {
       lineCol(col("measurement"), col("alias"), col("value"),
         expr("unix_micros(ts) * 1000L")).as("line"))
 
-  /** Unescape a measurement name (inverse of [[escapeMeasurement]]). */
+  /** Unescape a measurement name (inverse of [[lineCol]]'s escaping). */
   def unescapeMeasurement(c: Column): Column =
     regexp_replace(regexp_replace(c, "\\\\ ", " "), "\\\\,", ",")
 
@@ -147,6 +143,8 @@ object LineProtocol {
     * (Linux/InfluxConnector2.py:176). At 100 TB this is the difference
     * between a driver OOM and an embarrassingly parallel ingest.
     *
+    * NULL lines (a NULL in any input of [[lineCol]]) are skipped.
+    *
     * Idempotent under foreachBatch's at-least-once replay: a replayed
     * batchId first clears its own `part-<batchId>-*` files (a failed
     * attempt may have run with a different partition count), then each
@@ -159,12 +157,18 @@ object LineProtocol {
     try stale.filter(_.getFileName.toString.startsWith(s"part-$batchId-"))
       .forEach(p => Files.deleteIfExists(p))
     finally stale.close()
-    batch.select("line").foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val pid = TaskContext.getPartitionId()
-        val w = new BufferedWriter(new FileWriter(s"$dir/part-$batchId-$pid.lp", false))
-        try it.foreach { r => w.write(r.getString(0)); w.newLine() }
-        finally w.close()
+    // the lines' UTF-8 bytes go to disk as they are: no String round trip,
+    // and no JVM default charset to mangle a non-ASCII name
+    val qe = batch.select("line").queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("append")) {
+      qe.toRdd.foreachPartition { it =>
+        val lines = it.filterNot(_.isNullAt(0))
+        if (lines.hasNext) {
+          val pid = TaskContext.getPartitionId()
+          val out = new BufferedOutputStream(new FileOutputStream(s"$dir/part-$batchId-$pid.lp", false))
+          try lines.foreach { r => r.getUTF8String(0).writeTo(out); out.write('\n') }
+          finally out.close()
+        }
       }
     }
   }
@@ -232,7 +236,7 @@ object LineProtocol {
         buf = new java.lang.StringBuilder
         true
       }
-      override def process(row: Row): Unit = {
+      override def process(row: Row): Unit = if (!row.isNullAt(0)) {
         buf.append(row.getString(0)).append('\n')
         if (buf.length >= maxPayload) { conn.post(buf.toString); buf.setLength(0) }
       }

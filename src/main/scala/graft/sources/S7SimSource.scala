@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -72,6 +73,9 @@ object S7SimSource {
   val BaseMicros: Long = 1704067200000000L
 
   private val TypeCycle = Array(S7.WLReal, S7.WLWord, S7.WLDWord, S7.WLBit)
+
+  /** The register name (the `alias` column) of tag `tagIdx` on device `plc`. */
+  def register(plc: String, tagIdx: Int): String = s"${plc}_tag$tagIdx"
 
   /** Deterministic "device register" for (tick, plcIdx, tagIdx). */
   def sample(tick: Long, plcIdx: Int, tagIdx: Int): (Array[Byte], Int, Int) = {
@@ -156,6 +160,10 @@ private[sources] case class S7SimPartition(
 private[sources] class S7SimReader(p: S7SimPartition) extends PartitionReader[InternalRow] {
   private var tick = p.startTick
   private var tag = -1
+  // the names repeat every tick: encode them once per partition
+  private val plc = UTF8String.fromString(p.plc)
+  private val aliases = Array.tabulate(p.tagsPerPlc)(i =>
+    UTF8String.fromString(S7SimSource.register(p.plc, i)))
 
   override def next(): Boolean = {
     tag += 1
@@ -165,13 +173,8 @@ private[sources] class S7SimReader(p: S7SimPartition) extends PartitionReader[In
 
   override def get(): InternalRow = {
     val (buf, typeCode, bit) = S7SimSource.sample(tick, p.plcIdx, tag)
-    InternalRow(
-      S7SimSource.BaseMicros + tick * p.intervalMs * 1000L,
-      UTF8String.fromString(p.plc),
-      UTF8String.fromString(s"${p.plc}_tag$tag"),
-      buf,
-      typeCode,
-      bit)
+    new GenericInternalRow(Array[Any](
+      S7SimSource.BaseMicros + tick * p.intervalMs * 1000L, plc, aliases(tag), buf, typeCode, bit))
   }
 
   override def close(): Unit = ()

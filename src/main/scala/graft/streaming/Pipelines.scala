@@ -773,18 +773,16 @@ object Pipelines {
         "(check the config document; ref create_my_data_groups, InfluxConnector2.py:250-270)")
     val plcs = tags.map(_.plc).distinct.sorted
     val maxTags = tags.groupBy(_.plc).map(_._2.size).max
-    // (plc, tag_idx, alias, active): positional register map per device.
+    // (plc, register, alias, active): positional register map per device,
+    // keyed by the register name the source emits for tag i of a PLC
     val catalog = tags.groupBy(_.plc).toSeq.flatMap { case (plc, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (plc, i, t.alias, t.active) }
-    }.toDF("cfg_plc", "cfg_idx", "cfg_alias", "active")
+      ts.zipWithIndex.map { case (t, i) => (plc, graft.sources.S7SimSource.register(plc, i),
+        t.alias, t.active) }
+    }.toDF("cfg_plc", "cfg_register", "cfg_alias", "active")
 
-    val decoded = s7DecodedStream(spark, plcs, tagsPerPlc = maxTags,
-      sourceOptions = sourceOptions)
-      .withColumn("tag_idx",
-        regexp_extract(col("alias"), "_tag([0-9]+)$", 1).cast("int"))
-    decoded
+    s7DecodedStream(spark, plcs, tagsPerPlc = maxTags, sourceOptions = sourceOptions)
       .join(broadcast(catalog),
-        col("measurement") === col("cfg_plc") && col("tag_idx") === col("cfg_idx"))
+        col("measurement") === col("cfg_plc") && col("alias") === col("cfg_register"))
       .filter(col("active"))                                  // P1
       .select(col("ts"), col("measurement"), col("cfg_alias").as("alias"), col("value"))
   }

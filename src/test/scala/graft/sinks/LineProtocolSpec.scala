@@ -2,7 +2,9 @@ package graft.sinks
 
 import graft.SparkTestBase
 import graft.influxql.InfluxQLPlanner
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
@@ -51,6 +53,71 @@ class LineProtocolSpec extends SparkTestBase {
       "plc-1", "t0", 1.25)).toDF("ts", "measurement", "alias", "value")
     val line = LineProtocol.formatPoints(df).as[String].head()
     assert(line === "plc-1 t0=1.25 1704067200000000000")
+  }
+
+  /** The column spelling the kernel replaced: five `regexp_replace` escapes
+    * and `format_string("%.2f")`, concatenated. The reference for the
+    * kernel's byte-for-byte equivalence.
+    */
+  private def regexLine(m: Column, a: Column, v: Column, ts: Column): Column = {
+    def escM(c: Column) = regexp_replace(regexp_replace(c, ",", "\\\\,"), " ", "\\\\ ")
+    concat(escM(m), lit(" "), regexp_replace(escM(a), "=", "\\\\="), lit("="),
+      format_string("%.2f", v), lit(" "), ts.cast("string"))
+  }
+
+  test("property: the line kernel is byte-identical to the regex + format_string spelling") {
+    import org.scalacheck.Gen
+    val special = Gen.oneOf(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 0.125, 2.675, 999.995, -0.005, 0.015, 1.005, -2.5,
+      Double.MinPositiveValue, 2.2250738585072014e-308, 1e-310, -4.9e-324,
+      Double.MaxValue, -Double.MaxValue, 1e15, -1e15, 999999999999999.0,
+      -999999999999999.0, 1e15 + 2, 4503599627370497.0, Long.MaxValue.toDouble)
+    val value = Gen.frequency(
+      3 -> special,
+      3 -> Gen.chooseNum(-1e6, 1e6),
+      2 -> Gen.chooseNum(-1e16, 1e16).map(math.rint),
+      2 -> Gen.long.map(java.lang.Double.longBitsToDouble),
+      1 -> Gen.chooseNum(-1000, 1000).map(_ / 8.0))
+    val char = Gen.frequency(6 -> Gen.alphaNumChar,
+      4 -> Gen.oneOf(',', ' ', '=', '\\', '.', '-', '_', '"', 'é', '温', '\u00a0'),
+      1 -> Gen.const("\ud83d\ude00")) // a surrogate pair: one 4-byte UTF-8 character
+    val name = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, char).map(_.mkString))
+    val ts = Gen.frequency(4 -> Gen.chooseNum(0L, 4102444800000000000L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, -1L, 0L, 9L, 10L), 1 -> Gen.long)
+    val rows = Gen.listOfN(2000, Gen.zip(name, name, value, ts))
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20240101L))
+      .map { case (m, a, v, t) => Row(m, a, v, t) }
+    val schema = StructType(Seq(StructField("m", StringType), StructField("a", StringType),
+      StructField("v", DoubleType), StructField("ts", LongType)))
+    // an RDD-backed frame: the projection runs in whole-stage codegen, not
+    // folded into a local relation by the optimizer
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val (m, a, v, t) = (col("m"), col("a"), col("v"), col("ts"))
+    // generated code, then the interpreted eval path
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    for ((mode, wholeStage) <- modes) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val got = try df.select(LineProtocol.lineCol(m, a, v, t), regexLine(m, a, v, t)).collect()
+        finally Seq("factoryMode", "wholeStage").foreach(k => spark.conf.unset(s"spark.sql.codegen.$k"))
+      val bad = got.filterNot(r => java.util.Arrays.equals(
+        r.getString(0).getBytes("UTF-8"), r.getString(1).getBytes("UTF-8")))
+      assert(got.length == rows.length)
+      assert(bad.isEmpty, s"$mode: " + bad.take(3).map(r => s"'${r.getString(0)}' != '${r.getString(1)}'")
+        .mkString("; "))
+    }
+    val plan = df.select(LineProtocol.lineCol(m, a, v, t)).queryExecution.executedPlan
+    val stages = plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+    assert(stages.exists(_.toString.contains("format_line")),
+      s"expected format_line inside a WholeStageCodegen stage in:\n$plan")
+  }
+
+  test("a NULL value gives a NULL line, not the malformed `m a=nu ts`") {
+    import spark.implicits._
+    val df = Seq(("m", "a", Some(1.0), 5L), ("m", "a", None, 6L)).toDF("m", "a", "v", "ts")
+    val lines = df.select(LineProtocol.lineCol(col("m"), col("a"), col("v"), col("ts")))
+      .collect().map(r => Option(r.getString(0)))
+    assert(lines.toSeq == Seq(Some("m a=1.00 5"), None))
   }
 
   test("parseLines inverts the format: general grammar incl. tags, escapes, missing ts") {
@@ -167,6 +234,27 @@ class LineProtocolSpec extends SparkTestBase {
     LineProtocol.append(dir)(batch.repartition(3).toDF(), 8L)
     assert(lpFiles.count(_.getFileName.toString.startsWith("part-7-")) === 2)
     assert(lpFiles.count(_.getFileName.toString.startsWith("part-8-")) === 3)
+  }
+
+  test("append writes UTF-8 and skips NULL lines: non-ASCII names round-trip through parseLine") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("lp_utf8").toString
+    val pts = Seq(("Presse-Straße 3,Halle", "Temperatur °C", 21.5, 1704067200000000L),
+      ("温度计", "压力=bar", -0.25, 1704067200000001L),
+      ("plc", "dropped", Double.NaN, 1704067200000002L))
+      .toDF("measurement", "alias", "value", "us")
+      .select(col("measurement"), col("alias"),
+        // the NaN row stands in for a failed decode: its NULL value must
+        // leave no line behind
+        when(!isnan(col("value")), col("value")).as("value"), timestamp_micros(col("us")).as("ts"))
+    LineProtocol.append(dir)(LineProtocol.formatPoints(pts).coalesce(1), 0L)
+    val file = Paths.get(dir, "part-0-0.lp")
+    val text = new String(Files.readAllBytes(file), java.nio.charset.StandardCharsets.UTF_8)
+    assert(text == "Presse-Straße\\ 3\\,Halle Temperatur\\ °C=21.50 1704067200000000000\n" +
+      "温度计 压力\\=bar=-0.25 1704067200000001000\n")
+    val parsed = text.split('\n').toSeq.map(l => LineProtocolLocal.parseLine(l).toOption.get)
+    assert(parsed.map(_.measurement) == Seq("Presse-Straße 3,Halle", "温度计"))
+    assert(parsed.map(_.fields.map(_.key)) == Seq(Seq("Temperatur °C"), Seq("压力=bar")))
   }
 
   test("HttpLineConnectionFactory streams line protocol to a live /write endpoint") {
