@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native text-hashing expressions for the dedup pipeline.
@@ -21,40 +22,81 @@ object TextHash {
 
   /** The 8 universal-hash (a, b) pairs of the MinHash signature and their
     * modulus — the ONE definition both sides read: QDedup's DuckDB oracle
-    * fragments interpolate these, and [[MinHashSig]] evaluates them
-    * natively (r12 optimization: the 8 interpreted
-    * `array_min(transform(hs, hv -> (a*hv+b) % p))` lambda trees cost
-    * ~µs/element × 8 passes; this is one codegen'd call per row).
+    * fragments interpolate these, and [[MinHashText]] evaluates them
+    * natively (the 8 interpreted `array_min(transform(hs, hv -> (a*hv+b) % p))`
+    * lambda trees cost ~µs/element × 8 passes; this is one codegen'd call
+    * per row).
     */
   val MinHashP = 100003L
   val MinHashA: Array[Long] = Array(131L, 137L, 139L, 149L, 151L, 157L, 163L, 167L)
   val MinHashB: Array[Long] = Array(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
 
-  /** All 8 minhashes of a shingle-hash array in ONE pass. Null elements
-    * are skipped and an empty (or all-null) array yields null minhashes —
-    * exactly `array_min(transform(...))`'s null semantics. */
-  def minHashSig(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
+  /** `minhash_text` body: the 8-hash MinHash signature of a text's 3-token
+    * shingles in ONE pass over its UTF-8 bytes — no token strings, no
+    * shingle set, no boxing. Element j equals
+    * `array_min(transform(shingle_hashes(split(s, ' ')), hv -> (Aⱼ*hv+Bⱼ) % P))`:
+    *  - tokens are the runs between 0x20 bytes, empty runs included, so the
+    *    token count is (spaces + 1), exactly `split(s, ' ')`;
+    *  - each token's polynomial hash h and 31^len come from one fold (ASCII
+    *    bytes inline; a non-ASCII token folds its codepoints like
+    *    [[hashToken]]);
+    *  - the shingle "t1 t2 t3" hashes as
+    *    ((h1·31+32)·31^L2 + h2)·31+32)·31^L3 + h3 mod 1e9+7, which is
+    *    [[hashShingle]] (the polynomial fold of a concatenation);
+    *  - every shingle hash folds into the 8 running minimums. A minimum over
+    *    the shingle multiset equals the minimum over its distinct set, so
+    *    repeats need no dedup.
+    * Null below 3 tokens (no shingle): the `size(toks) >= 3` cut.
+    */
+  def minHashText(s: UTF8String): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes()
     val nh = MinHashA.length
-    val out = new Array[Any](nh)
-    var j = 0
-    while (j < nh) {
-      val a = MinHashA(j); val b = MinHashB(j)
-      var m = Long.MaxValue
-      var seen = false
-      var i = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) {
-          val v = (a * arr.getLong(i) + b) % MinHashP
-          if (v < m) m = v
-          seen = true
+    val mins = Array.fill(nh)(Long.MaxValue)
+    // rolling window: tokens k-2 (h1), k-1 (h2, p2) and the current one (h, p)
+    var h1, h2, p2 = 0L
+    var ntok = 0
+    var start = 0
+    var h = 0L
+    var p = 1L
+    var ascii = true
+    var i = 0
+    while (i <= n) {
+      val b = if (i < n) Platform.getByte(base, off + i) else ' '.toByte
+      if (b == ' ') {
+        if (!ascii) {
+          val str = UTF8String.fromAddress(base, off + start, i - start).toString
+          h = 0L; p = 1L
+          var j = 0
+          while (j < str.length) {
+            val cp = str.codePointAt(j)
+            h = (h * 31 + cp) % Mod
+            p = p * 31 % Mod
+            j += Character.charCount(cp)
+          }
         }
-        i += 1
-      }
-      out(j) = if (seen) m else null
-      j += 1
+        ntok += 1
+        if (ntok >= 3) {
+          val x = ((h1 * 31 + 32) % Mod * p2 + h2) % Mod
+          val hv = ((x * 31 + 32) % Mod * p + h) % Mod
+          var j = 0
+          while (j < nh) {
+            val v = (MinHashA(j) * hv + MinHashB(j)) % MinHashP
+            if (v < mins(j)) mins(j) = v
+            j += 1
+          }
+        }
+        h1 = h2; h2 = h; p2 = p
+        h = 0L; p = 1L; ascii = true
+        start = i + 1
+      } else if (b >= 0) {
+        h = (h * 31 + b) % Mod
+        p = p * 31 % Mod
+      } else ascii = false
+      i += 1
     }
-    new GenericArrayData(out)
+    if (ntok < 3) null else UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   private[functions] def requireStringArray(
@@ -183,9 +225,9 @@ object TextHash {
       new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
       (children: Seq[Expression]) => PolyHash(children.head))
     registry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children.head))
+      FunctionIdentifier("minhash_text"),
+      new ExpressionInfo(classOf[MinHashText].getName, "minhash_text"),
+      (children: Seq[Expression]) => MinHashText(children.head))
     registry.registerFunction(
       FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
@@ -236,32 +278,35 @@ case class WordNgrams(tokens: Expression, n: Expression)
     copy(tokens = newLeft, n = newRight)
 }
 
-/** `minhash_sig(array<long>) → array<long>` — the 8-hash MinHash signature
+/** `minhash_text(string) → array<long>` — the 8-hash MinHash signature
   * ([[TextHash.MinHashA]]/[[TextHash.MinHashB]] mod [[TextHash.MinHashP]])
-  * in one JVM pass (== array_min(transform(hs, hv -> (aᵢ*hv+bᵢ) % p)) for
-  * each i). Output element i is mhᵢ; null iff the input has no non-null
-  * element (array_min of an empty projection).
+  * of the string's space-split 3-token shingles, in one pass over its bytes;
+  * see [[TextHash.minHashText]]. Callers pass `lower(text)`. Null for a
+  * null input or fewer than 3 tokens.
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "minhash_sig"
+case class MinHashText(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "minhash_text"
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case ArrayType(LongType, _) =>
+      case _: StringType =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig expects ARRAY<BIGINT>, got ${other.simpleString}")
+          s"minhash_text expects STRING, got ${other.simpleString}")
     }
 
   override protected def nullSafeEval(input: Any): Any =
-    TextHash.minHashSig(input.asInstanceOf[ArrayData])
+    TextHash.minHashText(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.TextHash.minHashSig($a);")
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.TextHash.minHashText($s); ${ev.isNull} = ${ev.value} == null;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -57,7 +57,19 @@ object Q {
     */
   def fanout(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    // the frame's own physical plan: `df.rdd` would plan a second
+    // (DeserializeToObject) execution just to read the partition count
+    if (df.queryExecution.toRdd.getNumPartitions >= target) df else df.repartition(target)
+  }
+
+  /** Fails fast when `df` already has a column named like one of a
+    * helper's internal columns (`reserved`); the helper would overwrite it
+    * or make it ambiguous. Case-insensitive, like the analyzer. */
+  private[queries] def requireNoReserved(df: DataFrame, fn: String, reserved: Seq[String]): Unit = {
+    val clash = df.columns.filter(c => reserved.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty,
+      s"$fn: input column(s) ${clash.mkString(", ")} clash with its helper columns " +
+        reserved.mkString(", "))
   }
 
   /** Eagerly materialize an intermediate that downstream code references
@@ -214,15 +226,18 @@ object Q {
     * No row ever crosses a SinglePartition Exchange (same contract).
     *
     * Returns the STACKED frame: original columns + `__sid` + `out` (the
-    * ordering's ntile bucket, INT). Callers either aggregate per __sid
-    * directly (q_zorder_layout's per-layout box stats) or pivot back by a
-    * unique key (q_rfm_segments). Bit-equal per ordering to
-    * `distributedNtile(df, buckets, Seq(value, ties…), out)` —
+    * ordering's ntile bucket, INT). The input must not already carry
+    * `out` or a helper column (`__sv`, `__sid`, `__val`, `__pid`, `__off`,
+    * `__rk`); a clash fails with an IllegalArgumentException. Callers
+    * either aggregate per __sid directly (q_zorder_layout's per-layout box
+    * stats) or pivot back by a unique key (q_rfm_segments). Bit-equal per
+    * ordering to `distributedNtile(df, buckets, Seq(value, ties…), out)` —
     * RfmNtileSpec pins it against the global-window ntile.
     */
   def stackedNtile(df: DataFrame, buckets: Int,
       values: Seq[Column], ties: Seq[Column], out: String): DataFrame = {
     import df.sparkSession.implicits._
+    requireNoReserved(df, "stackedNtile", Seq("__sv", "__sid", "__val", "__pid", "__off", "__rk", out))
     val cols = df.columns.toSeq
     val k = values.size
     val stacked = df.select(cols.map(col) :+

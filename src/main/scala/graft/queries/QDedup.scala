@@ -14,9 +14,9 @@ import Q._
   * arithmetic, so DuckDB computes bit-identical values and every stage is
   * oracle-checkable (no reliance on engine-private hash functions).
   *
-  * Scale design: signatures are computed per-row with higher-order array
-  * functions (no explode, no join, no global vocab — embarrassingly
-  * parallel). Candidate generation is the LSH band→bucket equi-join
+  * Scale design: signatures are computed per-row by native expressions
+  * (no join, no global vocab — embarrassingly parallel). Candidate
+  * generation is the LSH band→bucket equi-join
   * (shuffle on (band, key), bucket sizes ~ duplicates only), never an
   * all-pairs cross join. n-gram Jaccard restricts its inverted index to
   * rare shingles (df ≤ 5) — the classic stop-shingle cutoff that bounds
@@ -26,9 +26,8 @@ object QDedup {
 
   // 8 universal hashes for MinHash (4 bands × 2 rows), 16 for SimHash bits.
   // The MinHash (a, b, p) constants live in TextHash so the native
-  // MinHashSig expression and the DuckDB oracle fragments here can never
-  // drift (r12: the signature is evaluated natively, not via 8 interpreted
-  // array_min(transform) lambdas).
+  // MinHashText expression and the DuckDB oracle fragments here can never
+  // drift.
   private val A  = graft.functions.TextHash.MinHashA.toSeq
   private val B  = graft.functions.TextHash.MinHashB.toSeq
   private val A2 = A ++ Seq(173L, 179L, 181L, 191L, 193L, 197L, 199L, 211L)
@@ -54,17 +53,20 @@ object QDedup {
       .withColumn("hs", expr("shingle_hashes(toks)"))
   }
 
-  /** (doc_id, mh0..mh7) MinHash signature — per-row, no shuffle. One
-    * native `minhash_sig` pass over the shingle hashes (r12); the 8
-    * `element_at`s each read the shared array column (CollapseProject
-    * keeps the non-cheap producer un-inlined, so the signature is
-    * evaluated once per row — 8× fewer array passes than the interpreted
-    * transform spelling, and no per-element lambda dispatch).
+  /** (doc_id, mh0..mh7) MinHash signature — per-row, no shuffle: one
+    * native `minhash_text(lower(text))` pass over each text's bytes (no
+    * token array, no shingle set), run after the fanout so it spreads over
+    * the cores. The kernel is null below 3 tokens, and `inline` of a null
+    * array emits no row: that drops the doc exactly like the oracle's
+    * `len(toks) >= 3`. A Filter would do the same, but Catalyst pushes it
+    * below the fanout and so evaluates the kernel twice, once on one core.
     */
   private def signatures(df: DataFrame): DataFrame = {
-    val sig = shingled(df).withColumn("__sig", expr("minhash_sig(hs)"))
-    sig.select(col("doc_id") +:
-      A.indices.map(i => element_at(col("__sig"), i + 1).as(s"mh$i")): _*)
+    graft.functions.TextHash.register(df.sparkSession)
+    val mhs = struct(A.indices.map(i => element_at(col("__sig"), i + 1).as(s"mh$i")): _*)
+    Q.fanout(df.select("doc_id", "text"))
+      .select(col("doc_id"), expr("minhash_text(lower(text))").as("__sig"))
+      .select(col("doc_id"), inline(when(col("__sig").isNotNull, array(mhs))))
   }
 
   /** Stop-bucket cap (r11, sf10 audit): an LSH bucket with more members
@@ -268,8 +270,11 @@ object QDedup {
       // dup clusters; for adversarial deep graphs the large-star/
       // small-star variant halves the diameter per round).
       val spark = s
-      val pairsC = Q.materialize(pairs)
-      val nPairs = pairsC.count()
+      // the pair count rides the checkpoint job as an observed metric: no
+      // separate count job over the checkpointed frame
+      val seen = org.apache.spark.sql.Observation()
+      val pairsC = Q.materialize(pairs.observe(seen, count(lit(1)).as("n")))
+      val nPairs = seen.get("n").asInstanceOf[Long]
       if (nPairs <= driverCcMaxPairs) {
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
@@ -310,6 +315,24 @@ object QDedup {
         labels.select(col("node").as("doc_id"), col("label").as("cluster"))
           .orderBy("doc_id")
       }
+  }
+
+  /** Quality gate ∧ exact dedup ∧ near-dup keep-list — the shared front
+    * of q_pipeline_trainset and q_pipeline_curriculum: docs with ≥ 40
+    * tokens, the lowest doc_id per identical text, minus `nearVictims`.
+    * The gate runs BEFORE the exact-dedup window: identical texts have
+    * identical token counts, so the gate keeps or drops whole text groups
+    * and the keeper within the gated rows is the keeper over the whole
+    * corpus. So the exact side is one window over the gated rows, with no
+    * victim scan and no second anti-join, and the text shuffle carries
+    * only gated rows.
+    */
+  private def gatedKeepers(docs: DataFrame, nearVictims: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    docs.filter(size(split(col("text"), " ")) >= 40)
+      .withColumn("__rn", row_number().over(Window.partitionBy("text").orderBy("doc_id")))
+      .filter(col("__rn") === 1).drop("__rn")
+      .join(nearVictims, Seq("doc_id"), "left_anti")
   }
 
   val all: Seq[GraftQuery] = Seq(
@@ -698,22 +721,14 @@ object QDedup {
       // The pipeline a training run actually ships, composed from the
       // proven stages: quality gate (>= 40 tokens), exact dedup
       // (lowest-doc_id keeper per identical text), near-dup keep-list
-      // (LSH clusters, canonical kept), then the stratified per-source
-      // quota. Victim sets are identified over the FULL corpus (global
-      // dedup), intersected as anti-joins — each stage is a bounded
-      // candidate computation, never all-pairs, and the final sample cut
-      // is map-side (WindowGroupLimit).
-      val docs = documents(s, dir)
-      val exactVictims = docs
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("text").orderBy("doc_id")))
-        .filter(col("rn") > 1).select("doc_id")
+      // (LSH clusters over the FULL corpus, canonical kept), then the
+      // stratified per-source quota. Each stage is a bounded candidate
+      // computation, never all-pairs, and the final sample cut is map-side
+      // (WindowGroupLimit). Two scans of documents: the signatures and
+      // the gated keepers.
       val nearVictims = clusterGroups(s, dir)
         .filter(col("doc_id") =!= col("cluster")).select("doc_id")
-      val kept = docs
-        .filter(size(split(col("text"), " ")) >= 40)
-        .join(exactVictims, Seq("doc_id"), "left_anti")
-        .join(nearVictims, Seq("doc_id"), "left_anti")
+      val kept = gatedKeepers(documents(s, dir), nearVictims)
       val rk = Window.partitionBy("source")
         .orderBy((col("doc_id") * 1103515245L + 12345L) % 2147483647L, col("doc_id"))
       kept.withColumn("rk", row_number().over(rk))
@@ -758,19 +773,10 @@ object QDedup {
          |       t.doc_id, t.source, t.stage, t.n_chars
          |FROM staged t ORDER BY global_pos""".stripMargin
     ) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = documents(s, dir)
-      val exactVictims = docs
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("text").orderBy("doc_id")))
-        .filter(col("rn") > 1).select("doc_id")
       val labels = Q.materialize(clusterGroups(s, dir)) // victims AND split keys
       val nearVictims = labels
         .filter(col("doc_id") =!= col("cluster")).select("doc_id")
-      val kept = docs
-        .filter(size(split(col("text"), " ")) >= 40)
-        .join(exactVictims, Seq("doc_id"), "left_anti")
-        .join(nearVictims, Seq("doc_id"), "left_anti")
+      val kept = gatedKeepers(documents(s, dir), nearVictims)
         .select("doc_id", "source", "n_chars")
       // cluster-keyed split hash (the q_split_leakage_safe LCG): every
       // member of a near-dup cluster lands in the same split, so the

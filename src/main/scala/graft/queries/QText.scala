@@ -26,7 +26,8 @@ object QText {
     * (k-row broadcast); global_pos is a pure literal projection from the
     * k collected (source, size) pairs (the broadcast-centroid-literal
     * pattern) — no SinglePartition window anywhere, k = |sources| is
-    * driver-bounded like the ntile partition counts.
+    * driver-bounded like the ntile partition counts. The input must not
+    * carry the helper columns `__pid`, `__off` or `__grk`.
     */
   private[queries] def curriculum(base: DataFrame): DataFrame = {
     import base.sparkSession.implicits._
@@ -40,6 +41,7 @@ object QText {
     // sampler and the exchange itself). The per-source stage offset is a
     // literal CASE chain (k = |sources|, driver-bounded) instead of a
     // broadcast join.
+    Q.requireNoReserved(base, "curriculum", Seq("__pid", "__off", "__grk"))
     val cols = base.columns.toSeq
     val sort = Seq(col("source"), col("n_chars"), col("doc_id"))
     val keyed = base.repartitionByRange(sort: _*)

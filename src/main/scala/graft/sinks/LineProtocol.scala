@@ -221,9 +221,10 @@ object LineProtocol {
   }
 
   /** Streaming sink path (`writeStream.foreach`): one connection per
-    * partition per epoch, lines buffered into POST-sized payloads
-    * (`maxPayload` bytes, like Influx's recommended ~1 MB batch), flushed
-    * on overflow and at close. Exactly the per-partition open/post/close
+    * partition per epoch, lines buffered into POST-sized payloads of at
+    * most `maxPayload` UTF-8 bytes (like Influx's recommended ~1 MB batch;
+    * a single longer line goes alone), flushed before a line would
+    * overflow and at close. Exactly the per-partition open/post/close
     * lifecycle a 100 TB ingest needs; [[HttpLineConnectionFactory]] is the
     * real HTTP client for it.
     */
@@ -231,20 +232,44 @@ object LineProtocol {
     new ForeachWriter[Row] {
       @transient private var conn: LineConnection = _
       @transient private var buf: java.lang.StringBuilder = _
+      @transient private var bytes = 0 // UTF-8 size of buf
       override def open(partitionId: Long, epochId: Long): Boolean = {
         conn = factory.open(partitionId, epochId)
         buf = new java.lang.StringBuilder
+        bytes = 0
         true
       }
       override def process(row: Row): Unit = if (!row.isNullAt(0)) {
-        buf.append(row.getString(0)).append('\n')
-        if (buf.length >= maxPayload) { conn.post(buf.toString); buf.setLength(0) }
+        val line = row.getString(0)
+        val n = utf8Length(line) + 1
+        if (bytes > 0 && bytes + n > maxPayload) flush()
+        buf.append(line).append('\n')
+        bytes += n
       }
+      private def flush(): Unit = { conn.post(buf.toString); buf.setLength(0); bytes = 0 }
       override def close(errorOrNull: Throwable): Unit = {
         if (conn != null) {
-          if (buf.length > 0) conn.post(buf.toString)
+          if (bytes > 0) flush()
           conn.close()
         }
       }
     }
+
+  /** Bytes of `s` as `getBytes(UTF_8)` encodes it, without encoding it: a
+    * surrogate pair is 4 bytes, an unpaired surrogate the 1-byte `?`. */
+  private[sinks] def utf8Length(s: String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      n += (if (c < 0x80) 1
+        else if (c < 0x800) 2
+        else if (!Character.isSurrogate(c)) 3
+        else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+            Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
+        else 1)
+      i += 1
+    }
+    n
+  }
 }

@@ -65,20 +65,51 @@ class NativeTextExprSpec extends SparkTestBase {
     assert(e.getMessage.toLowerCase.contains("word_ngrams"))
   }
 
-  test("minhash_sig(hs) == array_min(transform(hs, (a*hv+b) % p)) for all 8 hashes") {
+  test("property: minhash_text(lower(t)) == array_min(transform(shingle_hashes(" +
+      "split(lower(t), ' ')), (a*hv+b) % p)) for all 8 hashes, generated and interpreted") {
     TextHash.register(spark)
     import spark.implicits._
-    val rnd = new scala.util.Random(43)
-    val hs = (0 until 200).map { i =>
-      (i.toLong, (0 until rnd.nextInt(40)).map(_ => math.abs(rnd.nextLong()) % TextHash.Mod))
-    }.toDF("id", "hs")
-    val withSig = hs.withColumn("sig", expr("minhash_sig(hs)"))
-    val checks = TextHash.MinHashA.indices.map { j =>
-      val a = TextHash.MinHashA(j); val b = TextHash.MinHashB(j)
-      expr(s"element_at(sig, ${j + 1})") <=>
-        expr(s"array_min(transform(hs, hv -> ($a * hv + $b) % ${TextHash.MinHashP}))")
-    }.reduce(_ && _)
-    val bad = withSig.filter(!checks).count()
-    assert(bad == 0L, s"$bad rows diverge from the transform spelling (incl. empty arrays)")
+    // İ and ẞ change byte length under lower(); 𝔘 and 😀 are surrogate pairs
+    val words = Vector("alpha", "beta", "Gamma", "", "épsilon", "İstanbul", "STRAẞE",
+      "𝔘nicode", "😀", "z", "ÄÖÜ", "x-y")
+    val rnd = new scala.util.Random(47)
+    def text(nTok: Int): String = {
+      val sb = new StringBuilder
+      if (rnd.nextInt(4) == 0) sb.append(" " * (1 + rnd.nextInt(2))) // leading
+      (0 until nTok).foreach { i =>
+        if (i > 0) sb.append(" " * (1 + (if (rnd.nextInt(5) == 0) rnd.nextInt(3) else 0)))
+        sb.append(words(rnd.nextInt(words.length)))
+      }
+      if (rnd.nextInt(4) == 0) sb.append(" " * (1 + rnd.nextInt(2))) // trailing
+      sb.toString
+    }
+    val fixed = Seq("", " ", "  ", "   ", "a", "a b", "a  b", " a b", "a b ", "a b c",
+      "İ İ İ", "ẞ ẞ ẞ ẞ", "😀 😀 😀", "𝔘 a 𝔘 a", "a a a a a a")
+    val generated = (0 until 400).map(i => text(if (i % 10 == 0) 100 + rnd.nextInt(60) else rnd.nextInt(12)))
+    val texts = spark.sparkContext.parallelize(
+      (fixed ++ generated).zipWithIndex.map { case (t, i) => (i.toLong, t) }, 3).toDF("id", "t")
+    val P = TextHash.MinHashP
+    val ref = TextHash.MinHashA.indices.map { j =>
+      s"array_min(transform(shingle_hashes(split(lower(t), ' ')), " +
+        s"hv -> (${TextHash.MinHashA(j)} * hv + ${TextHash.MinHashB(j)}) % $P))"
+    }.mkString("CASE WHEN size(split(lower(t), ' ')) >= 3 THEN array(", ", ", ") END")
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    for ((mode, wholeStage) <- modes) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val got = try texts.select(col("id"), col("t"),
+          expr("minhash_text(lower(t))").as("native"), expr(ref).as("ref")).collect()
+        finally Seq("factoryMode", "wholeStage").foreach(k => spark.conf.unset(s"spark.sql.codegen.$k"))
+      assert(got.length == fixed.length + generated.length)
+      val bad = got.filterNot(r => r.get(2) == r.get(3))
+      assert(bad.isEmpty, s"$mode: " + bad.take(3).map(r =>
+        s"'${r.getString(1)}': ${r.get(2)} != ${r.get(3)}").mkString("; "))
+      // below 3 tokens (incl. "" and "a b") the signature is null
+      assert(got.count(_.isNullAt(2)) >= 6, s"$mode: too few null signatures")
+    }
+    val plan = texts.select(expr("minhash_text(lower(t))")).queryExecution.executedPlan
+    val stages = plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+    assert(stages.exists(_.toString.contains("minhash_text")),
+      s"expected minhash_text inside a WholeStageCodegen stage in:\n$plan")
   }
 }

@@ -44,4 +44,13 @@ class CurriculumOrderSpec extends SparkTestBase {
       assert(bad == 0L, "max stage must carry the max n_chars per source")
     } finally { out.unpersist(): Unit }
   }
+
+  test("curriculum rejects an input column that clashes with its rank helper columns") {
+    import spark.implicits._
+    for (clash <- Seq("__pid", "__off", "__GRK")) {
+      val df = Seq((1L, "a", 10L, 0L)).toDF("doc_id", "source", "n_chars", clash)
+      val e = intercept[IllegalArgumentException](QText.curriculum(df))
+      assert(e.getMessage.contains(clash), e.getMessage)
+    }
+  }
 }

@@ -101,6 +101,20 @@ class RfmNtileSpec extends SparkTestBase {
     assert(Q.stackedNtile(empty, 5, Seq(col("v")), Seq(col("id")), "nt").count() === 0L)
   }
 
+  test("stackedNtile rejects an input column that clashes with a helper column or `out`") {
+    import spark.implicits._
+    for (clash <- Seq("__sv", "__SID", "__val", "__pid", "__off", "__rk", "nt")) {
+      val df = Seq((1L, 1.0, 0L)).toDF("id", "v", clash)
+      val e = intercept[IllegalArgumentException] {
+        Q.stackedNtile(df, 5, Seq(col("v")), Seq(col("id")), "nt")
+      }
+      assert(e.getMessage.contains(clash), e.getMessage)
+    }
+    // a frame that merely shares a prefix is fine
+    val ok = Seq((1L, 1.0, 0L)).toDF("id", "v", "__sidecar")
+    assert(Q.stackedNtile(ok, 5, Seq(col("v")), Seq(col("id")), "nt").count() === 1L)
+  }
+
   test("q_rfm_segments: distributed branch == legacy global-window branch on real orders") {
     val dir = "/root/testdata/sf0.001"
     val dist = Registry.byName("q_rfm_segments").run(spark, dir).collect()

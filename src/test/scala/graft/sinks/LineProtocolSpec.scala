@@ -34,6 +34,16 @@ class CountingFactory(maxPayload: Int) extends LineProtocol.LineConnectionFactor
   }
 }
 
+/** Keeps every payload posted, in order (driven directly, no Spark job). */
+class RecordingFactory extends LineProtocol.LineConnectionFactory {
+  val payloads = scala.collection.mutable.ArrayBuffer.empty[String]
+  def open(partitionId: Long, epochId: Long): LineProtocol.LineConnection =
+    new LineProtocol.LineConnection {
+      def post(payload: String): Unit = payloads += payload
+      def close(): Unit = ()
+    }
+}
+
 class LineProtocolSpec extends SparkTestBase {
 
   test("line format: measurement alias=value tsNs; measurement escaping") {
@@ -306,5 +316,40 @@ class LineProtocolSpec extends SparkTestBase {
     assert(ConnStats.posts.get > 5, "payloads batched above one-POST-per-partition granularity")
     assert(ConnStats.posts.get < 50, "lines batched into payloads, not one POST per line")
     assert(ConnStats.chars.get === lines.map(_.length + 1).sum, "every line delivered exactly once")
+  }
+
+  test("writer caps every POST at maxPayload UTF-8 bytes, non-ASCII lines included") {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val rnd = new scala.util.Random(53)
+    // 3-byte CJK, 2-byte Latin-1, 4-byte surrogate pairs: UTF-16 length
+    // undercounts all of them
+    val names = Vector("温度", "Druck-ü", "𝔘", "plc_1", "😀😀")
+    val lines = (0 until 300).map(i => s"${names(rnd.nextInt(names.length))} v=$i ${i * 1000L}")
+    val long = "温" * 40 + " v=1 1" // 126 bytes: longer than the cap, posted alone
+    val cap = 64
+    val f = new RecordingFactory
+    val w = LineProtocol.writer(f, maxPayload = cap)
+    w.open(0L, 0L)
+    (lines.take(150) ++ Seq(long) ++ lines.drop(150)).foreach(l => w.process(Row(l)))
+    w.process(Row(null))
+    w.close(null)
+    val sizes = f.payloads.map(_.getBytes(utf8).length)
+    assert(f.payloads.forall(p => p == long + "\n" || p.getBytes(utf8).length <= cap),
+      s"payload over $cap bytes: ${sizes.max}")
+    assert(f.payloads.contains(long + "\n"))
+    assert(f.payloads.mkString == (lines.take(150) ++ Seq(long) ++ lines.drop(150)).map(_ + "\n").mkString,
+      "every line delivered once, in order")
+    assert(sizes.filterNot(_ == long.getBytes(utf8).length + 1).max > cap - 30,
+      "payloads are filled up to the cap, not one line each")
+  }
+
+  test("utf8Length equals getBytes(UTF_8).length, unpaired surrogates included") {
+    val rnd = new scala.util.Random(59)
+    val pool = Array('a', 'é', '温', '\uD835', '\uDD18', '\u007F', '\u0080', '\u07FF', '\u0800', '\uFFFF')
+    (0 until 2000).foreach { _ =>
+      val s = new String(Array.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.length))))
+      assert(LineProtocol.utf8Length(s) == s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length,
+        s.map(_.toInt.toHexString).mkString(" "))
+    }
   }
 }
