@@ -1,7 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 import graft.tables.Tables
 
@@ -62,16 +66,6 @@ object Q {
     if (df.queryExecution.toRdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
-  /** Fails fast when `df` already has a column named like one of a
-    * helper's internal columns (`reserved`); the helper would overwrite it
-    * or make it ambiguous. Case-insensitive, like the analyzer. */
-  private[queries] def requireNoReserved(df: DataFrame, fn: String, reserved: Seq[String]): Unit = {
-    val clash = df.columns.filter(c => reserved.exists(_.equalsIgnoreCase(c)))
-    require(clash.isEmpty,
-      s"$fn: input column(s) ${clash.mkString(", ")} clash with its helper columns " +
-        reserved.mkString(", "))
-  }
-
   /** Eagerly materialize an intermediate that downstream code references
     * more than once (shingle tables, candidate-pair frames, CC labels) so
     * its lineage — often interpreted higher-order functions — computes
@@ -117,29 +111,20 @@ object Q {
     else s"percentile($valueExpr, $p)"
 
   /** Exact global `ntile(buckets)` without a single-reducer sort (r10,
-    * VERDICT r9 #3). Same two-pass range-partitioned shape as the Pareto
-    * prefix sum in q_abc_analysis:
-    *
-    *  1. range-partition on the sort key (must be a TOTAL order — callers
-    *     tie-break with a unique column, per the Q.scala window rules),
-    *     freeze partition ids, and collect the k per-partition row counts
-    *     (k = shuffle partitions — driver-bounded);
-    *  2. per-partition `row_number` + the broadcast count prefix as an
-    *     offset = the exact global rank, then the standard SQL ntile
-    *     bucket formula (first N mod n buckets get the extra row).
+    * VERDICT r9 #3): the exact global rank of [[prefixPass]], then the
+    * standard SQL ntile bucket formula. `sort` must be a TOTAL order
+    * (callers tie-break with a unique column, per the Q.scala window rules).
     *
     * Bit-equal to `ntile(n) OVER (ORDER BY sort)` — RfmNtileSpec pins it,
-    * including ties, N % n != 0, and N < n — but every stage is parallel:
-    * no row ever crosses a SinglePartition Exchange, so it survives a
-    * 10⁹-row customer dimension where the global window serializes.
-    * Integer `DIV` throughout (a double `floor(/)` would wobble past 2⁵³).
+    * including ties, N % n != 0, and N < n — but no row ever crosses a
+    * SinglePartition Exchange, so it survives a 10⁹-row customer dimension
+    * where the global window serializes.
     */
   def distributedNtile(df: DataFrame, buckets: Int, sort: Seq[Column], out: String): DataFrame = {
-    val cols = df.columns.toSeq
-    val (ranked, total) = rankedWithTotal(df, sort, "__rk")
-    ranked
-      .withColumn(out, expr(ntileBucketSql(total, buckets, "__rk")))
-      .select((cols :+ out).map(col): _*)
+    val p = prefixPass(df, "distributedNtile", sort, reserved = Seq("__rk", out))
+    p.keyed.withColumn("__rk", p.rank)
+      .withColumn(out, expr(ntileBucketSql(p.rows, buckets, "__rk")))
+      .select((df.columns.toSeq :+ out).map(col): _*)
   }
 
   /** The standard SQL ntile bucket formula over an exact 1..N rank column
@@ -158,134 +143,158 @@ object Q {
   }
 
   /** Exact global rank 1..N by `sort` (a TOTAL order — callers tie-break
-    * with a unique column) without a single-reducer sort: pass 1 of
-    * [[distributedNtile]], exposed for callers that consume the rank
-    * itself (curriculum ordering, prefix sums). Identical to
-    * `row_number() OVER (ORDER BY sort)` but no row ever crosses a
-    * SinglePartition Exchange.
+    * with a unique column) without a single-reducer sort: [[prefixPass]]
+    * plus `row_number`. Identical to `row_number() OVER (ORDER BY sort)`
+    * but no row ever crosses a SinglePartition Exchange.
     */
-  def distributedRank(df: DataFrame, sort: Seq[Column], out: String): DataFrame =
-    rankedWithTotal(df, sort, out)._1
+  def distributedRank(df: DataFrame, sort: Seq[Column], out: String): DataFrame = {
+    val p = prefixPass(df, "distributedRank", sort, reserved = Seq(out))
+    p.keyed.withColumn(out, p.rank).select((df.columns.toSeq :+ out).map(col): _*)
+  }
 
-  /** Exact running sums of LONG columns by `sort` (a TOTAL order) without
-    * a single-reducer sort — the generic spelling of q_abc_analysis's
-    * range-partitioned prefix sum: range-partition on `sort`, freeze pids,
-    * per-partition running-sum windows, and the k per-partition totals
-    * come back as broadcast offsets (k = shuffle partitions,
-    * driver-bounded). Long addition is exact and associative, so the
-    * result is bit-identical to `sum(v) OVER (ORDER BY sort ROWS
-    * UNBOUNDED PRECEDING)` while no row ever crosses a SinglePartition
-    * Exchange. `sums` maps input column → output running-sum column.
+  /** Exact running sums by `sort` (a TOTAL order) without a single-reducer
+    * sort: [[prefixPass]] plus per-partition running-sum windows. The
+    * columns must be non-null integral or decimal; the offsets are exact, so each
+    * running sum is bit-identical to `sum(v) OVER (ORDER BY sort ROWS
+    * UNBOUNDED PRECEDING)` and typed like it. `sums` maps input column →
+    * output running-sum column. Also returns each column's exact grand
+    * total (zero on an empty frame), from the same collect.
     */
-  def distributedCumsum(
-      df: DataFrame, sort: Seq[Column], sums: Seq[(String, String)]): DataFrame = {
-    import df.sparkSession.implicits._
-    val cols = df.columns.toSeq
-    val keyed = df.repartitionByRange(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(materialize) // pid must be identical in both passes
-    val ptots = keyed.groupBy("__pid")
-      .agg(sums.map { case (in, _) => sum(col(in)).as(s"__t_$in") }.head,
-        sums.tail.map { case (in, _) => sum(col(in)).as(s"__t_$in") }: _*)
-      .collect()
-      .map(r => (r.getInt(0), sums.indices.map(i => r.getLong(i + 1))))
-      .sortBy(_._1)
-    val offs = ptots.scanLeft((0, sums.map(_ => 0L).toIndexedSeq)) {
-      case ((_, acc), (pid, tots)) =>
-        (pid + 1, acc.zip(tots).map { case (a, t) => a + t })
-    }.init.zip(ptots).map { case ((_, off), (pid, _)) => (pid, off) }
-    val offDf = broadcast(offs.toSeq
-      .map { case (pid, off) => (pid, off.toArray) }
-      .toDF("__pid", "__offs"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy(sort: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val withSums = sums.zipWithIndex.foldLeft(keyed.join(offDf, "__pid")) {
-      case (d, ((in, out), i)) =>
-        d.withColumn(out, sum(col(in)).over(w) + element_at(col("__offs"), i + 1))
+  def distributedCumsum(df: DataFrame, sort: Seq[Column], sums: Seq[(String, String)])
+      : (DataFrame, Seq[java.math.BigDecimal]) = {
+    val p = prefixPass(df, "distributedCumsum", sort, sums.map(_._1), reserved = sums.map(_._2))
+    val withSums = sums.zipWithIndex.foldLeft(p.keyed) {
+      case (d, ((_, out), i)) => d.withColumn(out, p.running(i))
     }
-    withSums.select((cols ++ sums.map(_._2)).map(col): _*)
+    (withSums.select((df.columns.toSeq ++ sums.map(_._2)).map(col): _*), p.totals.tail)
   }
 
   /** Exact global ntile over SEVERAL independent orderings of ONE frame in
-    * a single range exchange + checkpoint + count collect (r13, VERDICT r12
-    * #1 — the multi-key rank pass). Chaining [[distributedNtile]] k times
-    * costs k × (range-sample job + checkpoint + collect); here the frame is
-    * replicated once per ordering MAP-SIDE (explode of a k-element struct
-    * array, no join), tagged `__sid` = 1..k, and range-partitioned ONCE by
-    * (__sid, value, ties…). `__sid` leads the sort, so partition ranges
-    * never interleave orderings and within a __sid block the order is
-    * exactly (value ASC, ties ASC) — callers encode DESC by negating the
-    * value, and must pre-cast all values to ONE orderable type whose cast
-    * is order-preserving and injective on the data (ints/counts < 2⁵³ cast
-    * to double exactly; longs stay long when every ordering is long).
+    * a single prefix pass (r13, VERDICT r12 #1 — the multi-key rank pass).
+    * Chaining [[distributedNtile]] k times costs k × (range-sample job +
+    * checkpoint + collect); here the frame is replicated once per ordering
+    * MAP-SIDE (explode of a k-element struct array, no join), tagged
+    * `__sid` = 1..k, and range-partitioned ONCE by (__sid, value, ties…).
+    * `__sid` leads the sort, so partition ranges never interleave
+    * orderings and within a __sid block the order is exactly (value ASC,
+    * ties ASC) — callers encode DESC by negating the value, and must
+    * pre-cast all values to ONE orderable type whose cast is
+    * order-preserving and injective on the data (ints/counts < 2⁵³ cast to
+    * double exactly; longs stay long when every ordering is long).
     *
     * Every ordering has exactly N = |df| rows, so
     * rank-within-ordering = global stacked rank − (__sid − 1)·N, and the
     * same SQL bucket formula as [[distributedNtile]] applies per ordering.
-    * No row ever crosses a SinglePartition Exchange (same contract).
     *
     * Returns the STACKED frame: original columns + `__sid` + `out` (the
     * ordering's ntile bucket, INT). The input must not already carry
-    * `out` or a helper column (`__sv`, `__sid`, `__val`, `__pid`, `__off`,
-    * `__rk`); a clash fails with an IllegalArgumentException. Callers
-    * either aggregate per __sid directly (q_zorder_layout's per-layout box
-    * stats) or pivot back by a unique key (q_rfm_segments). Bit-equal per
-    * ordering to `distributedNtile(df, buckets, Seq(value, ties…), out)` —
-    * RfmNtileSpec pins it against the global-window ntile.
+    * `out`, `__sv`, `__sid`, `__val`, `__rk` or a [[prefixPass]] helper
+    * column. Callers either aggregate per __sid directly (q_zorder_layout's
+    * per-layout box stats) or pivot back by a unique key (q_rfm_segments).
+    * Bit-equal per ordering to `ntile(buckets) OVER (ORDER BY value,
+    * ties…)` — RfmNtileSpec and DistributedOrderPropSpec pin it.
     */
   def stackedNtile(df: DataFrame, buckets: Int,
       values: Seq[Column], ties: Seq[Column], out: String): DataFrame = {
-    import df.sparkSession.implicits._
-    requireNoReserved(df, "stackedNtile", Seq("__sv", "__sid", "__val", "__pid", "__off", "__rk", out))
     val cols = df.columns.toSeq
-    val k = values.size
-    val stacked = df.select(cols.map(col) :+
+    def stack(d: DataFrame): DataFrame = d.select(cols.map(col) :+
       explode(array(values.zipWithIndex.map { case (v, i) =>
         struct(lit(i + 1).as("s"), v.as("v")) }: _*)).as("__sv"): _*)
       .select(cols.map(col) :+ col("__sv.s").as("__sid") :+ col("__sv.v").as("__val"): _*)
-    val sort = col("__sid") +: col("__val") +: ties
-    val keyed = stacked.repartitionByRange(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(materialize) // pid must be identical in both passes
-    val counts = keyed.groupBy("__pid").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = counts.map(_._2).sum / k.max(1) // rows per ordering = |df|
-    val offs = counts.scanLeft(0L)(_ + _._2).init
-      .zip(counts).map { case (off, (pid, _)) => (pid, off) }
-    val offDf = broadcast(offs.toSeq.toDF("__pid", "__off"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("__pid").orderBy(sort: _*)
+    val p = prefixPass(df, "stackedNtile", col("__sid") +: col("__val") +: ties,
+      reserved = Seq("__sv", "__sid", "__val", "__rk", out), stage = stack)
+    val n = p.rows / values.size.max(1) // rows per ordering = |df|
     // global stacked rank − the ordering's block offset = rank within __sid
-    val ranked = keyed.join(offDf, "__pid")
-      .withColumn("__rk", row_number().over(w).cast("long") + col("__off")
-        - (col("__sid").cast("long") - 1L) * n)
-    ranked
+    p.keyed.withColumn("__rk", p.rank - (col("__sid").cast("long") - 1L) * n)
       .withColumn(out, expr(ntileBucketSql(n, buckets, "__rk")))
       .select((cols :+ "__sid" :+ out).map(col): _*)
   }
 
-  /** The shared two-pass core: range-partition on `sort`, freeze pids,
-    * collect the k per-partition counts (k = shuffle partitions,
-    * driver-bounded), then per-partition row_number + broadcast prefix
-    * offset = the exact global rank. Returns (df + `out` rank col, N).
+  /** What [[prefixPass]] hands its callers: `keyed` (the staged input +
+    * `__pid` + the offsets), the collected `parts` rows (pid, groups…,
+    * count, sums…), and the exact grand `totals` (count, sums…). */
+  private[queries] final class Prefix(val keyed: DataFrame, sort: Seq[Column],
+      sums: Seq[String], sumTypes: Seq[DataType], val parts: Array[Row],
+      val totals: IndexedSeq[java.math.BigDecimal]) {
+    private val within = Window.partitionBy("__pid").orderBy(sort: _*)
+
+    def rows: Long = totals.head.longValueExact
+
+    /** The exact global rank 1..N: row_number within the partition + the
+      * rows of all lower partitions. */
+    def rank: Column = row_number().over(within).cast("long") + col("__off")
+
+    /** The exact running sum of the i-th summed column. */
+    def running(i: Int): Column =
+      (sum(col(sums(i))).over(within.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        + col(s"__off$i")).cast(sumTypes(i))
+  }
+
+  /** The ONE range-partitioned prefix pass behind every exact global rank,
+    * ntile, running sum and curriculum order — none of them sends a row
+    * through a SinglePartition Exchange:
+    *
+    *  1. apply `stage` (stackedNtile's stacking; identity elsewhere),
+    *     range-partition on `sort` — a TOTAL order: callers tie-break
+    *     with a unique column — and freeze `__pid` behind [[materialize]],
+    *     so the collect and the window pass see the same partition ids;
+    *  2. ONE collect of the row count and the `sums` per (pid, groups…)
+    *     (k = shuffle partitions × groups, driver-bounded) — the `parts`;
+    *  3. each partition's exclusive prefix of those totals comes back as a
+    *     k-row broadcast: `__off` (rows in lower partitions) and `__off<i>`
+    *     per summed column.
+    *
+    * Exactness rule: the driver adds the offsets as java.math.BigDecimal
+    * and writes them back as a long for counts and as the sum's own type
+    * (long or decimal) for sums, so no offset depends on a summation
+    * order; a floating-point column has no exact prefix and is rejected.
+    * An input column named like a helper (`__pid`, `__off…`, or the
+    * caller's `reserved`) fails fast: it would be overwritten or made
+    * ambiguous.
     */
-  private def rankedWithTotal(
-      df: DataFrame, sort: Seq[Column], out: String): (DataFrame, Long) = {
-    import df.sparkSession.implicits._
-    val cols = df.columns.toSeq
-    val keyed = df.repartitionByRange(sort: _*)
+  private[queries] def prefixPass(df: DataFrame, fn: String, sort: Seq[Column],
+      sums: Seq[String] = Nil, groups: Seq[String] = Nil, reserved: Seq[String] = Nil,
+      stage: DataFrame => DataFrame = identity): Prefix = {
+    val offCols = "__off" +: sums.indices.map(i => s"__off$i")
+    val helpers = ("__pid" +: offCols) ++ reserved
+    // case-insensitive, like the analyzer
+    val clash = df.columns.filter(c => helpers.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"$fn: input column(s) ${clash.mkString(", ")} clash with its " +
+      s"helper columns ${helpers.mkString(", ")}")
+    val keyed = stage(df).repartitionByRange(sort: _*)
       .withColumn("__pid", spark_partition_id())
-      .transform(materialize) // pid must be identical in both passes
-    val counts = keyed.groupBy("__pid").count()
-      .collect().map(row => (row.getInt(0), row.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val offs = counts.scanLeft(0L)(_ + _._2).init
-      .zip(counts).map { case (off, (pid, _)) => (pid, off) }
-    val offDf = broadcast(offs.toSeq.toDF("__pid", "__off"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("__pid").orderBy(sort: _*)
-    val ranked = keyed.join(offDf, "__pid")
-      .withColumn(out, row_number().over(w).cast("long") + col("__off"))
-      .select((cols :+ out).map(col): _*)
-    (ranked, total)
+      .transform(materialize) // pid must be identical in the collect and the window pass
+    val perPart = keyed.groupBy(("__pid" +: groups).map(col): _*)
+      .agg(count(lit(1)), sums.map(c => sum(col(c))): _*)
+    val types = perPart.schema.fields.toSeq.drop(groups.size + 1).map(_.dataType)
+    sums.zip(types.tail).foreach { case (c, t) =>
+      require(t == LongType || t.isInstanceOf[DecimalType],
+        s"$fn: column $c sums as ${t.simpleString}; only integral and decimal columns " +
+          "have an exact prefix")
+    }
+    val parts = perPart.collect()
+    val pidTotals = parts.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (pid, rs) =>
+      pid -> offCols.indices.map(j =>
+        rs.map(r => exact(r.get(groups.size + 1 + j))).reduce(_ add _))
+    }
+    val prefix = pidTotals.scanLeft(offCols.map(_ => java.math.BigDecimal.ZERO)) {
+      case (acc, (_, t)) => acc.zip(t).map { case (a, b) => a add b }
+    }
+    val offRows = pidTotals.zip(prefix).map { case ((pid, _), off) =>
+      Row.fromSeq(pid +: off.zip(types).map {
+        case (v, LongType) => v.longValueExact
+        case (v, _)        => v
+      })
+    }
+    val schema = StructType(StructField("__pid", IntegerType, nullable = false) +:
+      offCols.zip(types).map { case (c, t) => StructField(c, t, nullable = false) })
+    val offDf = broadcast(df.sparkSession.createDataFrame(offRows.asJava, schema))
+    new Prefix(keyed.join(offDf, "__pid"), sort, sums, types.tail, parts, prefix.last)
+  }
+
+  /** A collected count or sum as an exact decimal. */
+  private def exact(v: Any): java.math.BigDecimal = v match {
+    case l: java.lang.Long       => java.math.BigDecimal.valueOf(l)
+    case d: java.math.BigDecimal => d
   }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftQuery
 import Q._
@@ -15,6 +16,24 @@ import Q._
   * coalesces the post-shuffle partitions.
   */
 object QAgg {
+
+  /** q_rfm_segments' customer frame (o_custkey, recency_d, freq, money).
+    * The customer aggregate is checkpointed FIRST so the anchor-date
+    * scalar, the range sampler and the range shuffle all read k
+    * checkpointed rows instead of re-running the orders aggregate (the r12
+    * counter-measurement that rejected this checkpoint predates the
+    * stacked pass — with one consumer chain it lost; with three readers it
+    * wins, re-measured r13). */
+  private[queries] def rfmCustomers(s: SparkSession, dir: String): DataFrame = {
+    val m0 = Q.materialize(orders(s, dir).groupBy("o_custkey")
+      .agg(max(to_date(col("o_orderdate"))).as("last_o"),
+        count(lit(1)).as("freq"),
+        round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("money")))
+    // anchor = max(last_o) over customers == max(o_orderdate) over orders
+    val mxStr = m0.agg(max(col("last_o"))).head().getDate(0).toString
+    m0.withColumn("recency_d", datediff(lit(mxStr).cast("date"), col("last_o")))
+      .select("o_custkey", "recency_d", "freq", "money")
+  }
 
   val all: Seq[GraftQuery] = Seq(
 
@@ -586,11 +605,10 @@ object QAgg {
         "subquery would plan the BNLJ PlanAuditSpec bans); money routes through " +
         "DECIMAL(18,2) so the sum is order-independent; every ntile is tie-broken by " +
         "custkey so quintile edges are deterministic in both engines. The three quintile " +
-        "scores run through Q.distributedNtile (r10): range-partitioned exact global rank " +
-        "+ broadcast count offsets + the SQL ntile bucket formula — bit-equal to the " +
-        "global window (RfmNtileSpec pins both branches) but with no single-reducer sort, " +
-        "so a 10⁹-row customer dimension stays parallel. `graft.rfm.globalNtile=true` " +
-        "opts back into the legacy one-window-per-score spelling.",
+        "scores run through Q.stackedNtile: ONE range-partitioned prefix pass ranks all " +
+        "three orderings exactly, then the SQL ntile bucket formula — bit-equal to the " +
+        "global window (RfmNtileSpec pins it) but with no single-reducer sort, so a " +
+        "10⁹-row customer dimension stays parallel.",
       """WITH m AS (
         |  SELECT o_custkey, max(o_orderdate::DATE) AS last_o, count(*) AS freq,
         |         round(sum(o_totalprice::DECIMAL(18,2))::DOUBLE, 2) AS money
@@ -612,52 +630,25 @@ object QAgg {
         |            WHEN r_score >= 4 AND f_score <= 2 THEN 'recent_light'
         |            ELSE 'regular' END AS segment
         |FROM sc ORDER BY o_custkey""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val o = orders(s, dir)
       // r13 (VERDICT r12 #1): the three quintiles ride ONE stacked ntile
       // pass (one range exchange + one checkpoint + one collect) instead of
       // three chained distributedNtile calls (3 × sample/checkpoint/collect,
-      // ~25 jobs). The customer aggregate is checkpointed FIRST so the
-      // anchor-date scalar, the range sampler and the range shuffle all read
-      // k checkpointed rows instead of re-running the orders aggregate
-      // (the r12 counter-measurement that rejected this checkpoint predates
-      // the stacked pass — with one consumer chain it lost; with three
-      // readers it wins, re-measured r13).
-      val m0 = Q.materialize(o.groupBy("o_custkey")
-        .agg(max(to_date(col("o_orderdate"))).as("last_o"),
-          count(lit(1)).as("freq"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("money")))
-      // anchor = max(last_o) over customers == max(o_orderdate) over orders
-      val mxStr = m0.agg(max(col("last_o"))).head().getDate(0).toString
-      val m = m0
-        .withColumn("recency_d", datediff(lit(mxStr).cast("date"), col("last_o")))
-        .select("o_custkey", "recency_d", "freq", "money")
-      val sc =
-        if (s.conf.getOption("graft.rfm.globalNtile").exists(_.toBoolean))
-          m.withColumn("r_score",
-              ntile(5).over(Window.orderBy(col("recency_d").desc, col("o_custkey"))))
-            .withColumn("f_score",
-              ntile(5).over(Window.orderBy(col("freq").asc, col("o_custkey"))))
-            .withColumn("m_score",
-              ntile(5).over(Window.orderBy(col("money").asc, col("o_custkey"))))
-        else {
-          // ascending stacked orderings; DESC recency = ASC −recency_d.
-          // Exact double casts: recency_d is a day diff (≤ ~10⁵) and freq a
-          // per-customer order count (< 2⁵³ at any real scale); money is
-          // already double.
-          Q.stackedNtile(m, 5,
-            Seq((-col("recency_d")).cast("double"),
-              col("freq").cast("double"),
-              col("money")),
-            Seq(col("o_custkey")), "__score")
-            .groupBy("o_custkey")
-            .agg(first(col("recency_d")).as("recency_d"),
-              first(col("freq")).as("freq"),
-              first(col("money")).as("money"),
-              max(when(col("__sid") === 1, col("__score"))).as("r_score"),
-              max(when(col("__sid") === 2, col("__score"))).as("f_score"),
-              max(when(col("__sid") === 3, col("__score"))).as("m_score"))
-        }
+      // ~25 jobs). Ascending stacked orderings; DESC recency = ASC
+      // −recency_d. Exact double casts: recency_d is a day diff (≤ ~10⁵) and
+      // freq a per-customer order count (< 2⁵³ at any real scale); money is
+      // already double.
+      val sc = Q.stackedNtile(rfmCustomers(s, dir), 5,
+          Seq((-col("recency_d")).cast("double"),
+            col("freq").cast("double"),
+            col("money")),
+          Seq(col("o_custkey")), "__score")
+        .groupBy("o_custkey")
+        .agg(first(col("recency_d")).as("recency_d"),
+          first(col("freq")).as("freq"),
+          first(col("money")).as("money"),
+          max(when(col("__sid") === 1, col("__score"))).as("r_score"),
+          max(when(col("__sid") === 2, col("__score"))).as("f_score"),
+          max(when(col("__sid") === 3, col("__score"))).as("m_score"))
       sc.select(col("o_custkey"),
           col("recency_d").cast("bigint").as("recency_d"), col("freq"), col("money"),
           col("r_score").cast("int").as("r_score"), col("f_score").cast("int").as("f_score"),

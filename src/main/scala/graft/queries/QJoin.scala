@@ -340,12 +340,12 @@ object QJoin {
         "cumulative share (A ≤ 80%, B ≤ 95%, C rest). Revenue aggregates per part FIRST " +
         "(the ranking runs over parts ≪ lineitem rows); every comparison is " +
         "DECIMAL-exact integer arithmetic (cum·5 ≤ total·4 for 80%), so no FP boundary " +
-        "can flip a class between engines. The cumulative sum is a two-pass " +
-        "range-partitioned prefix sum (r10): range-partition by (rev DESC, l_partkey), " +
-        "per-partition running sums under Window.partitionBy(pid), and the k partition " +
-        "totals come back as broadcast offsets — no row ever crosses a single-reducer " +
-        "Exchange, so a 10⁹-row part dimension stays parallel (PlanAuditSpec pins " +
-        "SinglePartition out of the plan)",
+        "can flip a class between engines. The cumulative sum is Q.distributedCumsum " +
+        "over the decimal revenue: range-partition by (rev DESC, l_partkey), " +
+        "per-partition running sums, and the k partition totals come back as exact " +
+        "decimal broadcast offsets and the grand total — no row ever crosses a " +
+        "single-reducer Exchange, so a 10⁹-row part dimension stays parallel " +
+        "(PlanAuditSpec pins SinglePartition out of the plan)",
       """WITH r AS (SELECT l_partkey,
         |                  sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |                      * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev
@@ -361,7 +361,6 @@ object QJoin {
         |            WHEN cum * 20 <= (SELECT total FROM t) * 19 THEN 'B'
         |            ELSE 'C' END AS abc
         |FROM c ORDER BY l_partkey""".stripMargin) { (s, dir) =>
-      import s.implicits._
       val r = lineitem(s, dir)
         .groupBy("l_partkey")
         .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
@@ -370,50 +369,23 @@ object QJoin {
         // re-executes its input, so without it the lineitem decimal
         // aggregate ran twice; the k-row part frame checkpoints cheaply
         .transform(Q.materialize)
-        // pid is frozen by the materialize: the offsets pass and the window
-        // pass below must see the SAME partition ids
-        .repartitionByRange(col("rev").desc, col("l_partkey"))
-        .withColumn("pid", spark_partition_id())
-        .transform(Q.materialize)
-      // Pass 1: k partition totals (k = shuffle partitions, driver-bounded).
-      // Range partitioning makes pid order ≡ global (rev DESC, l_partkey)
-      // order, so offset(pid) = Σ totals of lower pids; decimal addition is
-      // exact and associative, so the grand total from the same k rows is
-      // bit-identical to a direct sum (scalar-subquery joins plan an
-      // audit-banned BNLJ, hence driver-side).
-      val ptots = r.groupBy("pid").agg(sum(col("rev")).as("ptot"))
-        .collect().map(row => (row.getInt(0), row.getDecimal(1))).sortBy(_._1)
-      if (ptots.isEmpty) {
-        // empty lineitem: zero parts, zero output rows (the old single-window
-        // spelling degraded the same way; reduce on empty would throw)
-        r.select(col("l_partkey"), lit(0.0).as("revenue"),
-          lit(0.0).as("cum_share"), lit("C").as("abc")).limit(0)
-      } else {
-      val total = ptots.map(_._2).reduce(_ add _)
-      val offsets = ptots.scanLeft((0, java.math.BigDecimal.ZERO)) {
-        case ((_, acc), (pid, ptot)) => (pid + 1, acc add ptot)
-      }.init.zip(ptots).map { case ((_, off), (pid, _)) => (pid, off.toString) }
-      val revType = r.schema("rev").dataType
-      val offDf = broadcast(offsets.toSeq.toDF("pid", "off_s")
-        .select(col("pid"), col("off_s").cast(revType).as("off")))
-      // Pass 2: per-partition running sum + broadcast offset. partitionBy(pid)
-      // keeps every partition's rows on one task but never funnels the whole
-      // dimension through one reducer.
-      val wcum = Window.partitionBy("pid").orderBy(col("rev").desc, col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      r.join(offDf, "pid")
-        .withColumn("cum", sum(col("rev")).over(wcum) + col("off"))
-        // scale-4 decimal → double → round(4): the true value HAS exactly 4
-        // decimals, so no rounding midpoint exists (round(2) would hit the
-        // .xx5 midpoints where Spark's shortest-repr and DuckDB's binary
-        // rounding disagree by a cent)
-        .select(col("l_partkey"), round(col("rev").cast("double"), 4).as("revenue"),
-          round(col("cum").cast("double") / lit(total).cast("double"), 4).as("cum_share"),
-          when(col("cum") * 5 <= lit(total) * 4, "A")
-            .when(col("cum") * 20 <= lit(total) * 19, "B")
+      // the decimal running sum and the grand total come from ONE prefix
+      // pass: its collected partition totals give both, exactly (a
+      // scalar-subquery total would plan an audit-banned BNLJ). An empty
+      // lineitem yields zero parts and zero rows.
+      val (c, totals) = Q.distributedCumsum(r,
+        Seq(col("rev").desc, col("l_partkey")), Seq("rev" -> "cum"))
+      val total = lit(totals.head)
+      // scale-4 decimal → double → round(4): the true value HAS exactly 4
+      // decimals, so no rounding midpoint exists (round(2) would hit the
+      // .xx5 midpoints where Spark's shortest-repr and DuckDB's binary
+      // rounding disagree by a cent)
+      c.select(col("l_partkey"), round(col("rev").cast("double"), 4).as("revenue"),
+          round(col("cum").cast("double") / total.cast("double"), 4).as("cum_share"),
+          when(col("cum") * 5 <= total * 4, "A")
+            .when(col("cum") * 20 <= total * 19, "B")
             .otherwise("C").as("abc"))
         .orderBy("l_partkey")
-      }
     },
 
     GraftQuery(

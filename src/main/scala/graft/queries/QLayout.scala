@@ -132,8 +132,8 @@ object QLayout {
       val (np, ns) = (b0.getLong(0), b0.getLong(1))
       // the narrow 5-column base is recomputed per consumer: a pruned
       // 4-column parquet scan + integer hashing is CHEAPER than another
-      // 60M-row checkpoint at sf10 (each ntile already materializes its
-      // range-partitioned copy inside rankedWithTotal — adding a base
+      // 60M-row checkpoint at sf10 (the ntile pass already materializes
+      // its range-partitioned copy inside Q.prefixPass — adding a base
       // checkpoint made the key slower at scale, measured both ways)
       val li = lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),

@@ -22,55 +22,35 @@ object QText {
     * shared by q_curriculum_order (whole corpus) and the composed
     * q_pipeline_curriculum (post-dedup, train-split survivors). Stage =
     * rank of the doc within its source by (n_chars, doc_id), computed as
-    * ONE range-partitioned exact global rank minus the per-source prefix
-    * (k-row broadcast); global_pos is a pure literal projection from the
-    * k collected (source, size) pairs (the broadcast-centroid-literal
-    * pattern) — no SinglePartition window anywhere, k = |sources| is
-    * driver-bounded like the ntile partition counts. The input must not
-    * carry the helper columns `__pid`, `__off` or `__grk`.
+    * the exact global rank of ONE Q.prefixPass minus the per-source
+    * prefix; global_pos is a pure literal projection from the k collected
+    * (source, size) pairs (the broadcast-centroid-literal pattern) — no
+    * SinglePartition window anywhere, k = |sources| is driver-bounded like
+    * the ntile partition counts. The input must not carry `__grk` or a
+    * prefix-pass helper column (`__pid`, `__off`).
     */
   private[queries] def curriculum(base: DataFrame): DataFrame = {
-    import base.sparkSession.implicits._
-    // r13 (VERDICT r12 #5): ONE collect serves BOTH passes — the
-    // per-(pid, source) counts of the range-partitioned frame give the pid
-    // prefix offsets (the exact global rank, Q.distributedRank's machinery
-    // inlined) AND the per-source sizes (the stage offsets + the global_pos
-    // literal projection). The r12 spelling paid a separate sizes job that
-    // re-executed the caller's whole input lineage (3 executions of the
-    // composed dedup chain in q_pipeline_curriculum; now 2: the range
-    // sampler and the exchange itself). The per-source stage offset is a
-    // literal CASE chain (k = |sources|, driver-bounded) instead of a
-    // broadcast join.
-    Q.requireNoReserved(base, "curriculum", Seq("__pid", "__off", "__grk"))
-    val cols = base.columns.toSeq
-    val sort = Seq(col("source"), col("n_chars"), col("doc_id"))
-    val keyed = base.repartitionByRange(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(Q.materialize) // pid must be identical in both passes
-    val cnt = keyed.groupBy("__pid", "source").count()
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    if (cnt.isEmpty)
+    // ONE collect serves both passes (r13, VERDICT r12 #5): the prefix
+    // pass's per-(pid, source) counts give the pid offsets of the global
+    // rank AND the per-source sizes (the stage offsets + the global_pos
+    // literal projection), so no separate sizes job re-executes the
+    // caller's input lineage. The per-source stage offset is a literal
+    // CASE chain (k = |sources|, driver-bounded), not a broadcast join.
+    val p = Q.prefixPass(base, "curriculum", Seq(col("source"), col("n_chars"), col("doc_id")),
+      groups = Seq("source"), reserved = Seq("__grk"))
+    if (p.parts.isEmpty)
       return base.select(col("doc_id").as("global_pos"), col("doc_id"),
         col("source"), col("doc_id").as("stage"), col("n_chars")).limit(0)
-    val sizes = cnt.groupBy(_._2).map { case (src, xs) => (src, xs.map(_._3).sum) }
-      .toSeq.sortBy(_._1)
-    val pidCounts = cnt.groupBy(_._1).map { case (pid, xs) => (pid, xs.map(_._3).sum) }
-      .toSeq.sortBy(_._1)
-    val offs = pidCounts.scanLeft(0L)(_ + _._2).init
-      .zip(pidCounts).map { case (off, (pid, _)) => (pid, off) }
-    val offDf = broadcast(offs.toDF("__pid", "__off"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy(sort: _*)
-    val ranked = keyed.join(offDf, "__pid")
-      .withColumn("__grk", row_number().over(w).cast("long") + col("__off"))
-      .select((cols :+ "__grk").map(col): _*)
+    val sizes = p.parts.groupBy(_.getString(1))
+      .map { case (src, xs) => (src, xs.map(_.getLong(2)).sum) }.toSeq.sortBy(_._1)
     val srcOff = sizes.scanLeft(0L)(_ + _._2).init
       .zip(sizes).map { case (o, (src, _)) => (src, o) }
     val srcOffExpr = srcOff.tail
       .foldLeft(when(col("source") === srcOff.head._1, srcOff.head._2)) {
         case (acc, (src, o)) => acc.when(col("source") === src, o)
       }.otherwise(lit(0L))
-    val staged = ranked.withColumn("stage", col("__grk") - srcOffExpr)
+    val staged = p.keyed.withColumn("__grk", p.rank)
+      .withColumn("stage", col("__grk") - srcOffExpr)
     val offExpr = sizes.map { case (_, n) =>
       least(lit(n), col("stage") - 1) }.reduce(_ + _)
     val rankExpr = sizes.map { case (src2, n) =>
@@ -368,7 +348,7 @@ object QText {
         "training run sees a domain-contiguous stretch. stage = rank of the doc " +
         "within its source by (n_chars, doc_id); global_pos visits stage 1 across " +
         "all sources (source-alphabetical), then stage 2, … Scale shape: the stage " +
-        "comes from ONE range-partitioned exact rank (Q.distributedRank — no " +
+        "comes from ONE range-partitioned exact rank (Q.prefixPass — no " +
         "SinglePartition window even when one source is billions of docs), and " +
         "global_pos is computed ARITHMETICALLY from the k-row per-source size " +
         "table (k = |sources|, driver-bounded like the ntile partition counts): " +
@@ -542,7 +522,7 @@ object QText {
           sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
             .as("new_types"))
       Q.distributedCumsum(j, Seq(col("doc_id")),
-          Seq("n_tokens" -> "cum_tokens", "new_types" -> "cum_vocab"))
+          Seq("n_tokens" -> "cum_tokens", "new_types" -> "cum_vocab"))._1
         .select(col("doc_id"), col("n_tokens"), col("new_types"),
           col("cum_tokens"), col("cum_vocab"),
           round(col("cum_vocab").cast("double") / col("cum_tokens"), 4).as("ttr"))

@@ -299,8 +299,8 @@ class PlanAuditSpec extends SparkTestBase {
     val plan = planOf("q_abc_analysis")
     assert(!plan.contains("SinglePartition"),
       s"Pareto cumsum must stay parallel:\n$plan")
-    assert(plan.contains("hashpartitioning(pid"),
-      s"expected the per-partition window keyed on pid:\n$plan")
+    assert(plan.contains("hashpartitioning(__pid"),
+      s"expected the per-partition window keyed on the prefix pass's __pid:\n$plan")
   }
 
   test("q_rfm_segments quintile scores never funnel through one reducer") {

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Pins Q.distributedNtile (r10 — range-partitioned exact global rank +
   * broadcast offsets + SQL bucket formula) bit-equal to the single-reducer
-  * `ntile(n) OVER (ORDER BY …)` it replaces, and the two q_rfm_segments
-  * branches (flag `graft.rfm.globalNtile`) equal on the real orders table.
+  * `ntile(n) OVER (ORDER BY …)` it replaces, q_rfm_segments' scores equal
+  * to one global ntile window per score on the real orders table, and the
+  * helper-column guard of every prefix-pass entry point.
   */
 class RfmNtileSpec extends SparkTestBase {
 
@@ -115,14 +116,36 @@ class RfmNtileSpec extends SparkTestBase {
     assert(Q.stackedNtile(ok, 5, Seq(col("v")), Seq(col("id")), "nt").count() === 1L)
   }
 
+  test("every prefix-pass entry point rejects an input column that clashes with a helper or output column") {
+    import spark.implicits._
+    val sort = Seq(col("v"), col("id"))
+    val entries: Seq[(String, Seq[String], org.apache.spark.sql.DataFrame => Any)] = Seq(
+      ("distributedRank", Seq("rk"), d => Q.distributedRank(d, sort, "rk")),
+      ("distributedNtile", Seq("__rk", "nt"), d => Q.distributedNtile(d, 5, sort, "nt")),
+      ("distributedCumsum", Seq("__off0", "cv"), d => Q.distributedCumsum(d, sort, Seq("v" -> "cv"))),
+      ("stackedNtile", Seq("__sid", "nt"),
+        d => Q.stackedNtile(d, 5, Seq(col("v")), Seq(col("id")), "nt")))
+    for ((fn, own, run) <- entries; clash <- Seq("__pid", "__OFF") ++ own) {
+      val df = Seq((1L, 1L, 0L)).toDF("id", "v", clash)
+      val e = intercept[IllegalArgumentException](run(df))
+      assert(e.getMessage.contains(fn) && e.getMessage.contains(clash), e.getMessage)
+    }
+  }
+
   test("q_rfm_segments: distributed branch == legacy global-window branch on real orders") {
+    // the legacy spelling, one global ntile window per score, over the
+    // same customer frame the query ranks
     val dir = "/root/testdata/sf0.001"
-    val dist = Registry.byName("q_rfm_segments").run(spark, dir).collect()
-    spark.conf.set("graft.rfm.globalNtile", "true")
-    try {
-      val legacy = Registry.byName("q_rfm_segments").run(spark, dir).collect()
-      assert(dist.length === legacy.length && dist.length > 0)
-      dist.zip(legacy).foreach { case (x, y) => assert(x === y) }
-    } finally spark.conf.unset("graft.rfm.globalNtile")
+    val scores = Seq("o_custkey", "recency_d", "freq", "money", "r_score", "f_score", "m_score")
+    val dist = Registry.byName("q_rfm_segments").run(spark, dir)
+      .select(scores.map(col): _*).collect()
+    val legacy = QAgg.rfmCustomers(spark, dir)
+      .withColumn("r_score", ntile(5).over(Window.orderBy(col("recency_d").desc, col("o_custkey"))))
+      .withColumn("f_score", ntile(5).over(Window.orderBy(col("freq").asc, col("o_custkey"))))
+      .withColumn("m_score", ntile(5).over(Window.orderBy(col("money").asc, col("o_custkey"))))
+      .withColumn("recency_d", col("recency_d").cast("bigint"))
+      .select(scores.map(col): _*).orderBy("o_custkey").collect()
+    assert(dist.length === legacy.length && dist.length > 0)
+    dist.zip(legacy).foreach { case (x, y) => assert(x === y) }
   }
 }
