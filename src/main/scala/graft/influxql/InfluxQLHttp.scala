@@ -174,18 +174,19 @@ object InfluxQLHttp {
       auth: Option[(String, String)] = None,
       cqTickSec: Option[Long] = None,
       jwtSecret: Option[String] = None): Handle = {
+    // a served store first resolves any crash leftovers, before a request
+    writeStore.foreach(graft.sinks.StoreLayout.recover)
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     // Store-level concurrency control (InfluxDB's storage engine does the
-    // equivalent with shard-level locks): DELETE/DROP rewrite or remove
-    // partition directories in place, and /write appends share one Hadoop
-    // `_temporary` staging dir per target, so ALL store writers take the
-    // write side; queries take the read side (a scan planned before an
-    // append simply doesn't list the new files). Without this, an acked
-    // /write landing between a DELETE's read and its rmTree/rename is
-    // silently destroyed, concurrent appends abort each other's task
-    // files, and a scan racing a DROP dies mid-flight on FileNotFound.
-    // Fair mode so a dashboard's refresh loop cannot starve a pending
-    // admin mutation.
+    // equivalent with shard-level locks). Whatever removes or swaps a
+    // partition's files (DELETE, DROP, retention, a CQ's overwrite, the
+    // compaction swap) takes the WRITE side. Queries and /write appends
+    // take the READ side: an append only adds one uniquely named file,
+    // renamed into place, so appends commute with each other and with
+    // scans. Without the write side, an acked /write landing between a
+    // DELETE's read and its swap would be lost, and a scan racing a DROP
+    // would die on FileNotFound. Fair mode so a dashboard's refresh loop
+    // cannot starve a pending admin mutation.
     val lock = new java.util.concurrent.locks.ReentrantReadWriteLock(true)
     server.createContext("/query", (ex: HttpExchange) =>
       handleQuery(ex, spark, dir, catalog, nowNs, maxRows, writeStore, lock, auth, jwtSecret))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sinks.{PointStoreDirect, StoreLayout}
 import graft.tables.Tables
 import InfluxQLAst._
 
@@ -113,12 +114,8 @@ object InfluxQLPlanner {
       * hash — deterministic given the data; ties occur only between
       * bit-identical rows, which every selector is insensitive to.
       */
-    def store(storeDir: String): Catalog = {
-      val ms = Option(new java.io.File(storeDir).listFiles())
-        .getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("measurement="))
-        .map(_.getName.stripPrefix("measurement=")).sorted
-      Catalog(ms, Seq("alias"), "value", fieldTag = Some("alias"),
+    def store(storeDir: String): Catalog =
+      Catalog(StoreLayout.measurements(storeDir), Seq("alias"), "value", fieldTag = Some("alias"),
         tagsJson = Some("tags"),
         load = (s, _, m) => {
           // EXPLICIT data schema (PointStoreDirect.readSchema): files
@@ -126,19 +123,18 @@ object InfluxQLPlanner {
           // never a per-file schema lottery. A measurement whose
           // partitions all expired (retention/DELETE) is still a valid,
           // empty measurement — not a schema error.
-          val df = try s.read.schema(graft.sinks.PointStoreDirect.readSchema)
-            .parquet(s"$storeDir/measurement=$m")
+          val df = try s.read.schema(PointStoreDirect.readSchema)
+            .parquet(StoreLayout.measurementDir(storeDir, m).getPath)
           catch {
             case _: org.apache.spark.sql.AnalysisException =>
               s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                 org.apache.spark.sql.types.StructType.fromDDL(
-                  graft.sinks.PointStoreDirect.readSchema + ", date STRING"))
+                  PointStoreDirect.readSchema + ", date STRING"))
           }
           df.withColumn("ts_ns", expr("unix_micros(ts) * 1000L"))
             .withColumn("event_id",
               xxhash64(col("alias"), col("ts"), col("value"), col("tags")))
         })
-    }
   }
 
   /** Parse + plan: the engine's user-facing `influxql(...)` entry point.
@@ -214,17 +210,10 @@ object InfluxQLPlanner {
         // filesystem METADATA only — no data scan, constant-time against
         // store size in measurements (not rows)
         import spark.implicits._
-        val root = new java.io.File(dir)
-        val mdirs = Option(root.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isDirectory && f.getName.startsWith("measurement="))
-        def walk(f: java.io.File): (Long, Long) =
-          if (f.isFile) (1L, f.length())
-          else Option(f.listFiles()).getOrElse(Array.empty)
-            .map(walk).foldLeft((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-        val shards = mdirs.flatMap(m => Option(m.listFiles()).getOrElse(Array.empty))
-          .count(f => f.isDirectory && f.getName.startsWith("date="))
-        val (files, bytes) = mdirs.map(walk).foldLeft((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-        Seq((mdirs.size.toLong, shards.toLong, files, bytes,
+        val parts = StoreLayout.partitions(dir)
+        val files = parts.flatMap(p => StoreLayout.dataFiles(p.dir))
+        Seq((StoreLayout.measurements(dir).size.toLong, parts.size.toLong,
+          files.size.toLong, files.map(_.length()).sum,
           InfluxQLQueries.list().size.toLong))
           .toDF("measurements", "shards", "files", "bytes", "active_queries")
       case ShowDiagnostics =>
@@ -444,29 +433,16 @@ object InfluxQLPlanner {
     */
   private def shardRows(dir: String)
       : Seq[(Long, String, String, String, String, String, String, String)] = {
-    val root = new java.io.File(dir)
     val rps = StoreMeta.listRps(dir)
-    Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("measurement="))
-      .sortBy(_.getName)
-      .flatMap { mdir =>
-        val m = mdir.getName.stripPrefix("measurement=")
-        val rp = rps.filter(r => r.db == m && r.isDefault)
-        val rpName = rp.headOption.map(_.name).getOrElse("autogen")
-        Option(mdir.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isDirectory && f.getName.startsWith("date="))
-          .sortBy(_.getName)
-          .map { dd =>
-            val date = dd.getName.stripPrefix("date=")
-            val start = java.time.LocalDate.parse(date)
-            val expiry = rp.headOption.filter(_.durationSec > 0)
-              .map(r => s"${start.plusDays(1 + r.durationSec / 86400)}T00:00:00Z")
-              .getOrElse("")
-            (Math.abs(scala.util.hashing.MurmurHash3.stringHash(s"$m/$date").toLong),
-              m, rpName, date, s"${start}T00:00:00Z",
-              s"${start.plusDays(1)}T00:00:00Z", expiry, "")
-          }
-      }
+    StoreLayout.partitions(dir).map { case StoreLayout.Partition(m, start, _) =>
+      val rp = rps.find(r => r.db == m && r.isDefault)
+      val expiry = rp.filter(_.durationSec > 0)
+        .map(r => s"${start.plusDays(1 + r.durationSec / 86400)}T00:00:00Z")
+        .getOrElse("")
+      (Math.abs(scala.util.hashing.MurmurHash3.stringHash(s"$m/$start").toLong),
+        m, rp.map(_.name).getOrElse("autogen"), start.toString, s"${start}T00:00:00Z",
+        s"${start.plusDays(1)}T00:00:00Z", expiry, "")
+    }
   }
 
   /** Execute DROP SHARD <id> against the store: removes the ONE
@@ -478,13 +454,12 @@ object InfluxQLPlanner {
   def dropShard(ds: DropShard, storeDir: String): String = {
     val hit = shardRows(storeDir).find(_._1 == ds.id).getOrElse(
       throw InfluxQLParseException(s"shard ${ds.id} not found"))
-    val dir = new java.io.File(storeDir,
-      s"measurement=${hit._2}${java.io.File.separator}date=${hit._4}")
-    rmTree(dir)
+    val dir = StoreLayout.partitionDir(storeDir, hit._2, hit._4)
+    StoreLayout.drop(dir)
     // an emptied measurement loses its partition dir too — SHOW
     // MEASUREMENTS must not list a data-less name
     val mdir = dir.getParentFile
-    if (Option(mdir.listFiles()).exists(_.isEmpty)) rmTree(mdir)
+    if (Option(mdir.list()).exists(_.isEmpty)) StoreLayout.drop(mdir)
     dir.getPath
   }
 
@@ -962,16 +937,32 @@ object InfluxQLPlanner {
   /** AST entry point — lets callers that already hold a parsed statement
     * (the HTTP batch executor) mutate without a render→reparse round trip.
     */
-  def dropMeasurement(dm: DropMeasurement, storeDir: String): Boolean = {
-    val part = new java.io.File(storeDir, s"measurement=${dm.name}")
-    val existed = part.exists()
-    if (existed) rmTree(part)
-    existed
+  def dropMeasurement(dm: DropMeasurement, storeDir: String): Boolean =
+    StoreLayout.drop(StoreLayout.measurementDir(storeDir, dm.name))
+
+  /** `m`, if the store holds it; an unknown name errors. */
+  private def requireStored(storeDir: String, m: String): String = {
+    if (!StoreLayout.measurementDir(storeDir, m).isDirectory)
+      throw InfluxQLParseException(s"unknown measurement: $m (no store partition)")
+    m
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
+  /** Rewrite `p` without the rows where `timePred` holds and every tag
+    * condition is TRUE (DELETE, DROP SERIES). Keys beyond `alias` resolve
+    * against the JSON tag set (r9); a null lookup keeps the row. */
+  private def rewriteWithout(spark: SparkSession, storeDir: String,
+      p: StoreLayout.Partition, tagConds: Seq[Cond], timePred: Column): Unit = {
+    def condTagKeys(c: Cond): Seq[String] = c match {
+      case TagCond(k, _, _)  => Seq(k)
+      case BoolCond(_, l, r) => condTagKeys(l) ++ condTagKeys(r)
+      case _                 => Nil
+    }
+    val df = Catalog.store(storeDir).withDynTags(
+      spark.read.schema(PointStoreDirect.readSchema).parquet(p.dir.getPath),
+      tagConds.flatMap(condTagKeys).filter(_ != "alias"))
+    val tagPred = tagConds.map(condCol).reduceOption(_ && _).getOrElse(lit(true))
+    StoreLayout.replace(p.dir, df.filter(!(timePred && (tagPred <=> lit(true))))
+      .select("ts", "alias", "value", "tags"))
   }
 
   /** Execute DROP SERIES [FROM m] [WHERE tag …] against a
@@ -994,50 +985,16 @@ object InfluxQLPlanner {
       : (Seq[String], Seq[String]) = {
     validateDropSeries(ds)
     val DropSeries(from, where) = ds
-    val root = new java.io.File(storeDir)
-    val mdirs = from match {
-      case Some(m) =>
-        val d = new java.io.File(root, s"measurement=$m")
-        if (!d.isDirectory)
-          throw InfluxQLParseException(s"unknown measurement: $m (no store partition)")
-        Seq(d)
-      case None =>
-        Option(root.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isDirectory && f.getName.startsWith("measurement="))
-          .sortBy(_.getName)
+    val ms = from.fold(StoreLayout.measurements(storeDir))(m => Seq(requireStored(storeDir, m)))
+    if (where.isEmpty) {
+      val dirs = ms.map(StoreLayout.measurementDir(storeDir, _))
+      dirs.foreach(StoreLayout.drop)
+      (dirs.map(_.getPath), Nil)
+    } else {
+      val parts = ms.flatMap(StoreLayout.partitions(storeDir, _))
+      parts.foreach(rewriteWithout(spark, storeDir, _, where, lit(true)))
+      (Nil, parts.map(_.dir.getPath))
     }
-    val dropped = Seq.newBuilder[String]
-    val rewritten = Seq.newBuilder[String]
-    mdirs.foreach { mdir =>
-      if (where.isEmpty) { rmTree(mdir); dropped += mdir.getPath }
-      else Option(mdir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("date="))
-        .sortBy(_.getName)
-        .foreach { dd =>
-          // dynamic-tag keys resolve against the JSON tag set (r9);
-          // a null lookup is a no-match (keep), never a delete
-          def condTagKeys(c: Cond): Seq[String] = c match {
-            case TagCond(k, _, _)  => Seq(k)
-            case BoolCond(_, l, r) => condTagKeys(l) ++ condTagKeys(r)
-            case _                 => Nil
-          }
-          val cat = Catalog.store(storeDir)
-          val df = cat.withDynTags(
-            spark.read.schema(graft.sinks.PointStoreDirect.readSchema)
-              .parquet(dd.getPath),
-            where.flatMap(condTagKeys).filter(_ != "alias"))
-          val pred = where.map(condCol).reduce(_ && _)
-          val keep = df.filter(!(pred <=> lit(true)))
-            .select("ts", "alias", "value", "tags")
-          val tmp = new java.io.File(dd.getParentFile, dd.getName + "__tmp")
-          keep.write.mode("overwrite").parquet(tmp.getPath)
-          rmTree(dd)
-          if (!tmp.renameTo(dd))
-            throw new java.io.IOException(s"rename failed: $tmp -> $dd")
-          rewritten += dd.getPath
-        }
-    }
-    (dropped.result(), rewritten.result())
   }
 
   /** Execute DELETE FROM m [WHERE time …/tag …] against a
@@ -1113,56 +1070,24 @@ object InfluxQLPlanner {
         val tagConds = where.filterNot(c =>
           c.isInstanceOf[TimeCond] || c.isInstanceOf[NowCond])
         val (lo, hi) = timeBounds(where)
-        val mdir = new java.io.File(storeDir, s"measurement=$m")
-        if (!mdir.isDirectory)
-          throw InfluxQLParseException(s"unknown measurement: $m (no store partition)")
+        val tsNs = unix_micros(col("ts")) * 1000L
+        val timePred = (lo.map(l => tsNs >= l) ++ hi.map(h => tsNs < h))
+          .reduceOption(_ && _).getOrElse(lit(true))
         val dropped = Seq.newBuilder[String]
         val rewritten = Seq.newBuilder[String]
-        Option(mdir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("date="))
-          .sortBy(_.getName)
-          .foreach { dd =>
-            val day = java.time.LocalDate.parse(dd.getName.stripPrefix("date="))
-            val dayLo = day.atStartOfDay(java.time.ZoneOffset.UTC)
-              .toInstant.getEpochSecond * 1000000000L
-            val dayHi = dayLo + 86400L * 1000000000L
-            val overlaps = lo.forall(_ < dayHi) && hi.forall(_ > dayLo)
-            if (overlaps) {
-              val covered = lo.forall(_ <= dayLo) && hi.forall(_ >= dayHi)
-              if (covered && tagConds.isEmpty) { rmTree(dd); dropped += dd.getPath }
-              else {
-                // explicit store schema + dynamic-tag materialization:
-                // `DELETE … WHERE host='a'` resolves keys beyond `alias`
-                // against the JSON tag set (r9); legacy files read null
-                // tags and never match a tag cond
-                def condTagKeys(c: Cond): Seq[String] = c match {
-                  case TagCond(k, _, _)  => Seq(k)
-                  case BoolCond(_, l, r) => condTagKeys(l) ++ condTagKeys(r)
-                  case _                 => Nil
-                }
-                val cat = Catalog.store(storeDir)
-                val df = cat.withDynTags(
-                  spark.read.schema(graft.sinks.PointStoreDirect.readSchema)
-                    .parquet(dd.getPath),
-                  tagConds.flatMap(condTagKeys).filter(_ != "alias"))
-                val tsNs = unix_micros(col("ts")) * 1000L
-                val timePred = (lo.map(l => tsNs >= l) ++ hi.map(h => tsNs < h))
-                  .reduceOption(_ && _).getOrElse(lit(true))
-                val tagPred = tagConds.map(condCol)
-                  .reduceOption(_ && _).getOrElse(lit(true))
-                // null tag lookups make the pred null — treat as no-match
-                // (keep the row), not delete
-                val keep = df.filter(!(timePred && (tagPred <=> lit(true))))
-                  .select("ts", "alias", "value", "tags")
-                val tmp = new java.io.File(dd.getParentFile, dd.getName + "__tmp")
-                keep.write.mode("overwrite").parquet(tmp.getPath)
-                rmTree(dd)
-                if (!tmp.renameTo(dd))
-                  throw new java.io.IOException(s"rename failed: $tmp -> $dd")
-                rewritten += dd.getPath
-              }
-            }
+        StoreLayout.partitions(storeDir, requireStored(storeDir, m)).foreach { p =>
+          val dayLo = p.date.atStartOfDay(java.time.ZoneOffset.UTC)
+            .toInstant.getEpochSecond * 1000000000L
+          val dayHi = dayLo + 86400L * 1000000000L
+          val overlaps = lo.forall(_ < dayHi) && hi.forall(_ > dayLo)
+          val covered = lo.forall(_ <= dayLo) && hi.forall(_ >= dayHi)
+          if (overlaps && covered && tagConds.isEmpty) {
+            StoreLayout.drop(p.dir); dropped += p.dir.getPath
+          } else if (overlaps) {
+            rewriteWithout(spark, storeDir, p, tagConds, timePred)
+            rewritten += p.dir.getPath
           }
+        }
         (dropped.result(), rewritten.result())
     }
 

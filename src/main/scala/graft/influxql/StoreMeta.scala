@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.sinks.StoreLayout
 import InfluxQLAst._
 
 /** File-backed admin metadata for a point store — the database /
@@ -52,11 +53,6 @@ object StoreMeta {
     Option(d.listFiles()).getOrElse(Array.empty[File])
       .map(f => dec(f.getName)).toSeq.sorted
 
-  private def rmTree(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmTree)
-    f.delete(): Unit
-  }
-
   // ---- databases ----------------------------------------------------------
 
   /** Idempotent, like InfluxDB's CREATE DATABASE. A WITH clause creates
@@ -76,12 +72,11 @@ object StoreMeta {
     * `measurement=<name>` data directory. Idempotent like InfluxDB's.
     */
   def dropDatabase(store: String, name: String): Unit = {
-    rmTree(metaDir(store, "databases", enc(name)))
-    rmTree(metaDir(store, "rp", enc(name)))
-    rmTree(metaDir(store, "cq", enc(name)))
-    rmTree(metaDir(store, "cqstate", enc(name)))
-    val dataDir = new File(store, s"measurement=$name")
-    if (dataDir.isDirectory) rmTree(dataDir)
+    StoreLayout.rmTree(metaDir(store, "databases", enc(name)))
+    StoreLayout.rmTree(metaDir(store, "rp", enc(name)))
+    StoreLayout.rmTree(metaDir(store, "cq", enc(name)))
+    StoreLayout.rmTree(metaDir(store, "cqstate", enc(name)))
+    StoreLayout.drop(StoreLayout.measurementDir(store, name)): Unit
   }
 
   def listDatabases(store: String): Seq[String] =
@@ -170,15 +165,13 @@ object StoreMeta {
       listRps(store, Some(db))
         .find(rp => rp.isDefault && rp.durationSec >= 86400L)
         .toSeq.flatMap { rp =>
-          val dataDir = new File(store, s"measurement=$db")
-          if (!dataDir.isDirectory) Seq.empty
-          else graft.sinks.PointStore.expireRetention(
+          graft.sinks.PointStore.expireRetention(
             // Ceil, not floor: a date= partition may only drop once its
             // NEWEST point is past the duration (InfluxDB drops a shard
             // group when the whole group is expired). Floor on a
             // non-day-multiple duration (36h -> 1) would delete points
             // still inside the declared window.
-            dataDir.getPath, ((rp.durationSec + 86399L) / 86400L).toInt, today)
+            store, ((rp.durationSec + 86399L) / 86400L).toInt, today, Some(db))
         }
     }
 
@@ -378,7 +371,7 @@ object StoreMeta {
     if (!f.isFile) throw InfluxQLParseException("user not found")
     f.delete(): Unit
     dropCached(store, name)
-    rmTree(metaDir(store, "grants", enc(name)))
+    StoreLayout.rmTree(metaDir(store, "grants", enc(name)))
   }
 
   def setPassword(store: String, name: String, password: String): Unit = {

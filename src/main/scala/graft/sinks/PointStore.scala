@@ -42,24 +42,16 @@ object PointStore {
 
   /** Retention policy (the InfluxDB `CREATE RETENTION POLICY` surface,
     * ref README.md:3,13): drop `date=` partitions older than `ttlDays`
-    * before `today`. Whole-partition deletes are O(#expired partitions) —
+    * before `today`, in every measurement of the store at `dir` or only in
+    * `measurement`. Whole-partition deletes are O(#expired partitions) —
     * no data rewrite, no tombstones — which is why the layout carries the
     * date column. Returns the deleted partition paths.
     */
-  def expireRetention(dir: String, ttlDays: Int, today: java.time.LocalDate): Seq[String] = {
-    val cutoff = today.minusDays(ttlDays.toLong).toString // ISO yyyy-MM-dd sorts lexically
-    def datePartitions(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case f if f.isDirectory && f.getName.startsWith("date=") => Seq(f)
-        case f if f.isDirectory => datePartitions(f)
-        case _ => Seq.empty
-      }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    datePartitions(new java.io.File(dir))
-      .filter(_.getName.stripPrefix("date=") < cutoff)
-      .map { f => rm(f); f.getPath }
+  def expireRetention(dir: String, ttlDays: Int, today: java.time.LocalDate,
+      measurement: Option[String] = None): Seq[String] = {
+    val cutoff = today.minusDays(ttlDays.toLong)
+    measurement.fold(StoreLayout.partitions(dir))(StoreLayout.partitions(dir, _))
+      .filter(_.date.isBefore(cutoff))
+      .map { p => StoreLayout.drop(p.dir); p.dir.getPath }
   }
 }

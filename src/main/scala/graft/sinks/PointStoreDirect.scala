@@ -3,13 +3,12 @@ package graft.sinks
 import java.time.{Instant, LocalDate, ZoneOffset}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /** Driver-direct appends into the point store's
   * `measurement=…/date=…` parquet layout — NO Spark job.
@@ -30,11 +29,16 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * Spark-escaped), so directly-written and Spark-written files coexist in
   * one table and every existing scan/DELETE/DROP path reads both.
   *
+  * Commit and recovery ([[StoreLayout]]): an append renames a finished
+  * hidden file into place, so appends run beside scans and each other (the
+  * HTTP server's store READ lock); compaction is [[StoreLayout.replace]]
+  * under the write lock. A crash leaves only hidden leftovers, resolved by
+  * [[StoreLayout.recover]] when the store opens and before each compaction.
+  *
   * Scale note: this is the CONTROL-plane ingest door (panels, daemons,
   * influx-CLI inserts). Bulk 100 TB ingest still goes through the
   * streaming pipeline / [[PointStore.writePartitioned]], which write from
-  * executors. Callers serialize with store mutations (the HTTP server's
-  * write lock) exactly like the Spark append did.
+  * executors.
   */
 object PointStoreDirect {
 
@@ -97,14 +101,14 @@ object PointStoreDirect {
     * partition (that is what makes the ack fast), so a daemon POSTing
     * once per second accumulates ~86k files/day in its partition: the
     * classic small-files problem, the analogue of the WAL/TSM buildup
-    * InfluxDB's background compactor folds away. For each
-    * `measurement=…/date=…` partition holding more than `maxFiles`
-    * parquet files, the partition is read, coalesced to
-    * ceil(bytes / targetBytes) files, written to a sibling temp dir, and
-    * swapped in. Callers serialize with writers and queries (the HTTP
-    * server runs this on its daemon tick under the store write lock —
-    * same exclusion as a DELETE rewrite). Returns the compacted partition
-    * paths.
+    * InfluxDB's background compactor folds away. The pass first resolves
+    * any crash leftovers ([[StoreLayout.recover]]); then each partition
+    * holding more than `maxFiles` parquet files is read, coalesced to
+    * ceil(bytes / targetBytes) files and swapped in by
+    * [[StoreLayout.replace]]. Callers serialize with writers and queries
+    * (the HTTP server runs this on its daemon tick under the store write
+    * lock — same exclusion as a DELETE rewrite). Returns the compacted
+    * partition paths.
     *
     * Scale: listing is pure file metadata; only oversized partitions pay
     * a read-rewrite, and only THEIR files are touched — hot partitions
@@ -112,87 +116,50 @@ object PointStoreDirect {
     */
   def compact(spark: org.apache.spark.sql.SparkSession, storeDir: String,
       maxFiles: Int = 32, targetBytes: Long = 128L << 20): Seq[String] = {
-    def partitionDirs(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case f if f.isDirectory && f.getName.startsWith("date=") => Seq(f)
-        case f if f.isDirectory && !f.getName.startsWith("_")    => partitionDirs(f)
-        case _ => Seq.empty
-      }
-    partitionDirs(new java.io.File(storeDir)).flatMap { part =>
-      val files = Option(part.listFiles()).getOrElse(Array.empty).toSeq
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    StoreLayout.recover(storeDir)
+    StoreLayout.partitions(storeDir).flatMap { p =>
+      val files = StoreLayout.dataFiles(p.dir)
       if (files.size <= maxFiles) None
       else {
         val bytes = files.map(_.length()).sum
         val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        val tmp = new java.io.File(part.getParentFile, part.getName + ".compacting")
-        if (tmp.exists()) { // leftover from a crashed pass — restart clean
-          Option(tmp.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-          tmp.delete(): Unit
-        }
         // explicit schema: a partition mixing pre-tags and tagged files
         // compacts with nulls in the legacy rows, never a schema lottery
-        spark.read.schema(readSchema).parquet(part.getPath)
+        StoreLayout.replace(p.dir, spark.read.schema(readSchema).parquet(p.dir.getPath)
           .select("ts", "alias", "value", "tags")
-          .coalesce(nOut)
-          .write.parquet(tmp.getPath)
-        // swap: remove the small files (and their local-FS checksum
-        // siblings), adopt the compacted ones. Runs under the caller's
-        // write lock, so no scan or append interleaves.
-        files.foreach { f =>
-          f.delete()
-          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete(): Unit
-        }
-        Option(tmp.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.endsWith(".parquet") || f.getName == "_SUCCESS")
-          .foreach { f =>
-            if (f.getName.endsWith(".parquet"))
-              java.nio.file.Files.move(f.toPath,
-                new java.io.File(part, f.getName).toPath): Unit
-            else f.delete(): Unit
-          }
-        Option(tmp.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-        tmp.delete()
-        Some(part.getPath)
+          .coalesce(nOut))
+        Some(p.dir.getPath)
       }
     }
   }
 
   /** Append `points` to the store: one parquet file per touched
     * (measurement, date) partition, written synchronously on the calling
-    * thread. Unique filenames (UUID) make concurrent appends physically
-    * disjoint — there is no shared `_temporary` staging dir to race on,
-    * unlike two concurrent Spark append jobs.
+    * thread through [[StoreLayout.appendFile]] (hidden while written,
+    * renamed into place after close). Unique filenames (UUID) make
+    * concurrent appends physically disjoint — there is no shared
+    * `_temporary` staging dir to race on, unlike two concurrent Spark
+    * append jobs. Written through java.nio, not a Hadoop FileSystem: no
+    * checksum sidecar is left behind under the temporary name.
     */
   def append(points: Seq[Point], storeDir: String): Unit =
     points.groupBy(p => (p.measurement, utcDate(p.tsNs))).foreach {
       case ((measurement, date), ps) =>
-        val partDir = new java.io.File(new java.io.File(storeDir,
-          ExternalCatalogUtils.getPartitionPathString("measurement", measurement)),
-          ExternalCatalogUtils.getPartitionPathString("date", date))
-        partDir.mkdirs()
-        // dot-prefixed while writing (hidden from Spark's listing, so a
-        // concurrent scan under the shared read lock can never read a
-        // half-written footer), renamed into place after close — the r11
-        // torn-read hardening shared with VectorIndexStore.appendLocal
-        val id8 = java.util.UUID.randomUUID()
-        val tmp = new java.io.File(partDir, s".part-$id8.inprogress")
-        val file = new java.io.File(partDir, s"part-$id8.snappy.parquet")
-        val writer = ExampleParquetWriter.builder(new Path(tmp.getPath))
-          .withType(schema)
-          .withConf(conf)
-          .withCompressionCodec(CompressionCodecName.SNAPPY)
-          .build()
-        val gf = new SimpleGroupFactory(schema)
-        try ps.foreach { p =>
-          val g = gf.newGroup()
-          g.add("ts", Math.floorDiv(p.tsNs, 1000L)) // ns → µs, the column unit
-          g.add("alias", p.alias)
-          g.add("value", p.value)
-          p.tags.foreach(g.add("tags", _)) // optional — null when untagged
-          writer.write(g)
-        } finally writer.close()
-        if (!tmp.renameTo(file))
-          throw new java.io.IOException(s"cannot commit $tmp -> $file")
+        StoreLayout.appendFile(StoreLayout.partitionDir(storeDir, measurement, date)) { tmp =>
+          val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+            .withType(schema)
+            .withConf(conf)
+            .withCompressionCodec(CompressionCodecName.SNAPPY)
+            .build()
+          val gf = new SimpleGroupFactory(schema)
+          try ps.foreach { p =>
+            val g = gf.newGroup()
+            g.add("ts", Math.floorDiv(p.tsNs, 1000L)) // ns → µs, the column unit
+            g.add("alias", p.alias)
+            g.add("value", p.value)
+            p.tags.foreach(g.add("tags", _)) // optional — null when untagged
+            writer.write(g)
+          } finally writer.close()
+        }
     }
 }

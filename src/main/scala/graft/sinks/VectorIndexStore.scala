@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Kmeans, VectorMath}
+import StoreLayout.{move, rmTree}
 
 /** IVF vector index as a STORE LIFECYCLE artifact (r10, VERDICT r9 #6).
   *
@@ -36,6 +37,15 @@ import graft.functions.{Kmeans, VectorMath}
   * server's write lock); `search` between an `append` and the next `tick`
   * serves the indexed corpus — the documented staleness window, readable
   * via [[staleCount]].
+  *
+  * Commit protocol: its own, not [[StoreLayout.replace]], which swaps ONE
+  * directory. A retrain commits two artifacts that must flip together —
+  * centroids and the lists assigned to them — plus the generation the
+  * driver caches key on, and [[recoverFolding]] reads a missing live
+  * `centroids.parquet` as "a build commit started: roll forward". The
+  * point store's rule for a `.old` without its live dir (rename it back)
+  * would undo half of that commit. The renames and recursive deletes the
+  * markers are made of are [[StoreLayout.move]] and [[StoreLayout.rmTree]].
   */
 object VectorIndexStore {
 
@@ -85,13 +95,12 @@ object VectorIndexStore {
   }
 
   private def bumpGeneration(indexDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val p = Paths.get(genPath(indexDir))
     Files.createDirectories(p.getParent)
     val tmp = Files.createTempFile(p.getParent, ".gen", ".tmp")
     Files.writeString(tmp, (generation(indexDir) + 1L).toString): Unit
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE): Unit
+    move(tmp.toFile, p.toFile)
   }
 
   /** Driver-side centroid cache keyed by (indexDir → generation): a k×d
@@ -167,14 +176,7 @@ object VectorIndexStore {
     * exists but lists only dot/underscore names (an appendLocal write in
     * flight, or its crash orphan) must read as EMPTY — spark.read.parquet
     * on it throws UNABLE_TO_INFER_SCHEMA (the r11 chaos-found 500). */
-  private def hasVisibleFiles(d: java.io.File): Boolean =
-    Option(d.listFiles()).getOrElse(Array.empty).exists(f =>
-      f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(): Unit
-  }
+  private def hasVisibleFiles(d: java.io.File): Boolean = StoreLayout.dataFiles(d).nonEmpty
 
   /** Lifecycle trace for concurrency diagnosis (`-Dgraft.vindex.trace=true`). */
   private def trace(msg: => String): Unit =
@@ -227,8 +229,8 @@ object VectorIndexStore {
     crit {
       val cent = new java.io.File(centPath(indexDir))
       val lists = new java.io.File(listsDir(indexDir))
-      rm(cent); new java.io.File(centBuilding(indexDir)).renameTo(cent): Unit
-      rm(lists); new java.io.File(listsBuilding(indexDir)).renameTo(lists): Unit
+      rmTree(cent); move(new java.io.File(centBuilding(indexDir)), cent)
+      rmTree(lists); move(new java.io.File(listsBuilding(indexDir)), lists)
       bumpGeneration(indexDir)
       trace(s"build: committed swap, gen=${generation(indexDir)}")
     }
@@ -267,32 +269,23 @@ object VectorIndexStore {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    val dir = new java.io.File(deltaDir(indexDir))
-    dir.mkdirs()
-    // Write under a DOT-prefixed name — Spark's file listing skips hidden
-    // files, so a concurrent delta scan (staleCount / tick under the shared
-    // read lock) can never see a half-written footer — then rename into
-    // place (atomic within one directory). A crash mid-write leaves only an
-    // invisible orphan.
-    val id8 = java.util.UUID.randomUUID()
-    val tmp = new java.io.File(dir, s".part-$id8.inprogress")
-    val fin = new java.io.File(dir, s"part-$id8.snappy.parquet")
-    val writer = ExampleParquetWriter.builder(
-        new org.apache.hadoop.fs.Path(tmp.getPath))
-      .withType(deltaSchema)
-      .withConf(new org.apache.hadoop.conf.Configuration())
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val gf = new SimpleGroupFactory(deltaSchema)
-    try rows.foreach { case (id, emb) =>
-      val g = gf.newGroup()
-      g.add("vec_id", id)
-      val lst = g.addGroup("embedding")
-      emb.foreach(v => lst.addGroup("list").add("element", v))
-      writer.write(g)
-    } finally writer.close()
-    if (!tmp.renameTo(fin))
-      throw new java.io.IOException(s"cannot commit $tmp -> $fin")
+    // hidden while written, so a concurrent delta scan (staleCount / tick
+    // under the shared read lock) never sees a half-written footer; a crash
+    // mid-write leaves an invisible orphan that the next fold clears
+    val fin = StoreLayout.appendFile(new java.io.File(deltaDir(indexDir))) { tmp =>
+      val writer = ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(tmp))
+        .withType(deltaSchema)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .build()
+      val gf = new SimpleGroupFactory(deltaSchema)
+      try rows.foreach { case (id, emb) =>
+        val g = gf.newGroup()
+        g.add("vec_id", id)
+        val lst = g.addGroup("embedding")
+        emb.foreach(v => lst.addGroup("list").add("element", v))
+        writer.write(g)
+      } finally writer.close()
+    }
     trace(s"appendLocal: committed ${rows.size} rows (${fin.getName})")
   }
 
@@ -308,9 +301,7 @@ object VectorIndexStore {
     */
   def staleCount(spark: SparkSession, indexDir: String): Long = {
     val d = new java.io.File(deltaDir(indexDir))
-    val files = Option(d.listFiles()).getOrElse(Array.empty).filter(f =>
-      f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
-        f.getName.endsWith(".parquet"))
+    val files = StoreLayout.dataFiles(d).filter(_.getName.endsWith(".parquet"))
     if (files.isEmpty) 0L
     else files.map { f =>
       // committed delta files are IMMUTABLE (written hidden, renamed into
@@ -376,12 +367,12 @@ object VectorIndexStore {
     // lists.compacting NEXT TO live lists may be a half-written rewrite —
     // always roll BACK (the live lists stay the source of truth and a
     // later tick just re-compacts); compacting WITHOUT live lists means
-    // the commit's rm(lists) ran, so the rewrite had completed — roll
+    // the commit's rmTree(lists) ran, so the rewrite had completed — roll
     // forward.
     val lc = new java.io.File(listsCompacting(indexDir))
-    if (lc.exists() && lists.exists()) rm(lc)
+    if (lc.exists() && lists.exists()) rmTree(lc)
     else if (lc.exists()) crit {
-      lc.renameTo(lists): Unit
+      move(lc, lists)
       bumpGeneration(indexDir)
     }
     // Retrain-swap recovery first. Build writes cb THEN lb; commit is
@@ -399,18 +390,18 @@ object VectorIndexStore {
     // never see lists mid-removal; removing orphaned .building stages is
     // invisible to readers and stays outside.
     if (cb.exists() && !cent.exists()) crit {
-      cb.renameTo(cent): Unit
-      rm(lists); lb.renameTo(lists): Unit
+      move(cb, cent)
+      rmTree(lists); move(lb, lists)
       bumpGeneration(indexDir) // adopted centroids = a new generation
-    } else if (cb.exists() && lb.exists()) { rm(lb); rm(cb) }
-    else if (cb.exists()) rm(cb)
+    } else if (cb.exists() && lb.exists()) { rmTree(lb); rmTree(cb) }
+    else if (cb.exists()) rmTree(cb)
     else if (lb.exists()) crit {
-      rm(lists); lb.renameTo(lists): Unit
+      rmTree(lists); move(lb, lists)
       bumpGeneration(indexDir) // cent committed pre-crash, unbumped
     }
     if (!fDir.exists()) return
     trace("recover: folding marker present")
-    if (!hasVisibleFiles(fDir)) { trace("recover: orphan marker cleared"); rm(fDir); return } // crash orphan only
+    if (!hasVisibleFiles(fDir)) { trace("recover: orphan marker cleared"); rmTree(fDir); return } // crash orphan only
     val pending = spark.read.parquet(fDir.getPath).select("vec_id", "embedding")
       .join(spark.read.parquet(listsDir(indexDir)).select("vec_id"),
         Seq("vec_id"), "left_anti")
@@ -422,7 +413,7 @@ object VectorIndexStore {
         .write.partitionBy("cluster").mode("append").parquet(listsDir(indexDir))
       bumpGeneration(indexDir) // cell membership changed
     }
-    rm(fDir)
+    rmTree(fDir)
   }
 
   /** Daemon-tick maintenance. Returns (indexedDelta, retrained).
@@ -451,15 +442,12 @@ object VectorIndexStore {
     if (!dDir.exists()) return (0L, false)
     if (!hasVisibleFiles(dDir)) return (0L, false) // only an in-flight write
     val fDir = new java.io.File(foldingDir(indexDir))
-    crit {
-      if (!dDir.renameTo(fDir))
-        throw new IllegalStateException(s"cannot stage $dDir -> $fDir for folding")
-    }
+    crit(move(dDir, fDir))
     trace(s"tick: staged delta -> folding")
     val delta = spark.read.parquet(fDir.getPath)
     val nDelta = delta.count()
     trace(s"tick: nDelta=$nDelta")
-    if (nDelta == 0L) { rm(fDir); return (0L, false) }
+    if (nDelta == 0L) { rmTree(fDir); return (0L, false) }
     val nIndexed = spark.read.parquet(listsDir(indexDir)).count()
     val retrain = nDelta.toDouble > retrainFraction * nIndexed
     trace(s"tick: nIndexed=$nIndexed retrain=$retrain")
@@ -482,7 +470,7 @@ object VectorIndexStore {
       bumpGeneration(indexDir) // centroids untouched, cell membership changed
       trace(s"tick: incremental fold appended $nDelta")
     }
-    rm(fDir)
+    rmTree(fDir)
     trace(s"tick: cleared folding marker")
     // lists compaction rides the tick AFTER the fold clears its marker:
     // when incremental folds have accreted past ~4 files per cell, rewrite
@@ -506,9 +494,7 @@ object VectorIndexStore {
     val d = new java.io.File(listsDir(indexDir))
     val dirs = Option(d.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-    val files = dirs.map(cd => Option(cd.listFiles()).getOrElse(Array.empty)
-      .count(f => f.isFile && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))).sum
+    val files = dirs.map(StoreLayout.dataFiles(_).size).sum
     (dirs.length, files)
   }
 
@@ -534,9 +520,8 @@ object VectorIndexStore {
       .repartition(col("cluster"))
       .write.partitionBy("cluster").mode("overwrite").parquet(lc)
     crit {
-      rm(lists)
-      if (!new java.io.File(lc).renameTo(lists))
-        throw new IllegalStateException(s"cannot commit compaction $lc -> $lists")
+      rmTree(lists)
+      move(new java.io.File(lc), lists)
       bumpGeneration(indexDir)
     }
     trace("compactLists: committed")
@@ -562,18 +547,15 @@ object VectorIndexStore {
     val fDir = new java.io.File(foldingDir(indexDir))
     if (!fDir.exists()) {
       if (!hasVisibleFiles(dDir)) return (0L, false) // only an in-flight write
-      crit {
-        if (!dDir.renameTo(fDir))
-          throw new IllegalStateException(s"cannot stage $dDir -> $fDir for bootstrap")
-      }
+      crit(move(dDir, fDir))
     }
-    if (!hasVisibleFiles(fDir)) { rm(fDir); return (0L, false) } // crash orphan
+    if (!hasVisibleFiles(fDir)) { rmTree(fDir); return (0L, false) } // crash orphan
     val corpus = spark.read.parquet(fDir.getPath).select("vec_id", "embedding")
     val n = corpus.count()
     trace(s"maintain: bootstrap n=$n")
-    if (n == 0L) { rm(fDir); return (0L, false) }
+    if (n == 0L) { rmTree(fDir); return (0L, false) }
     build(spark, corpus, indexDir, k, iters, crit)
-    rm(fDir)
+    rmTree(fDir)
     trace(s"maintain: bootstrap committed, folding cleared")
     (n, true)
   }

@@ -6,6 +6,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.SparkTestBase
 
+import scala.jdk.CollectionConverters._
+
 /** Real HTTP round-trips against the /query endpoint — the wire surface a
   * Grafana InfluxDB 1.x datasource would hit (ref README.md:13-14,98-100).
   */
@@ -621,6 +623,51 @@ class InfluxQLHttpSpec extends SparkTestBase {
       assert(!t.isAlive, "killed query did not stop")
       assert(outcome.isDefined, "cancelled job did not raise")
       assert(!listQueries().exists(_._2 == "SELECT * FROM slow"))
+    } finally h.stop()
+  }
+
+  test("measurement names that need path escaping round-trip: write, list, select, delete, drop") {
+    // the store escapes partition values the way Spark does (plc:1 lives
+    // in measurement=plc%3A1); every reader and mutator must address the
+    // same directory by the raw name
+    val store = java.nio.file.Files.createTempDirectory("graft-escaped").toString
+    val h = InfluxQLHttp.startStore(spark, store)
+    try {
+      def call(method: String, path: String, body: String): (Int, String) = {
+        val conn = new URI(s"http://127.0.0.1:${h.port}$path").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod(method)
+        if (body.nonEmpty) {
+          conn.setDoOutput(true); conn.getOutputStream.write(body.getBytes("UTF-8"))
+        }
+        val code = conn.getResponseCode
+        val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+        val out = if (is == null) "" else new String(is.readAllBytes(), "UTF-8")
+        conn.disconnect()
+        (code, out)
+      }
+      def query(q: String): String = {
+        val (c, b) = call("POST", "/query", s"q=${enc(q)}")
+        assert(c == 200 && !b.contains("error"), s"$q -> $c $b")
+        b
+      }
+      def measurements() = mapper.readTree(query("SHOW MEASUREMENTS"))
+        .at("/results/0/series/0/values").elements().asScala.map(_.get(0).asText).toSeq
+      def count(m: String) = mapper.readTree(query(s"""SELECT COUNT(value) AS n FROM "$m""""))
+        .at("/results/0/series/0/values/0/0").asLong()
+      val t0 = 1704067200000000000L // 2024-01-01T00:00:00Z
+      val names = Seq("plc:1", "tank#3")
+      val lines = names.flatMap(m => (0 until 4).map(i =>
+        s"$m,alias=t value=$i.0 ${t0 + i * 3600L * 1000000000L}"))
+      assert(call("POST", "/write?db=plc", lines.mkString("\n"))._1 == 204)
+      assert(measurements() == names)
+      names.foreach(m => assert(count(m) == 4L, m))
+      query("""DELETE FROM "plc:1" WHERE time < '2024-01-01T02:00:00Z'""")
+      assert(count("plc:1") == 2L)
+      query("""DROP SERIES FROM "plc:1" WHERE alias = 't'""")
+      assert(count("plc:1") == 0L)
+      query("""DROP MEASUREMENT "tank#3"""")
+      assert(measurements() == Seq("plc:1"))
     } finally h.stop()
   }
 }
