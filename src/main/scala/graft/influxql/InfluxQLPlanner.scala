@@ -128,12 +128,10 @@ object InfluxQLPlanner {
           catch {
             case _: org.apache.spark.sql.AnalysisException =>
               s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  PointStoreDirect.readSchema + ", date STRING"))
+                PointStoreDirect.readSchema.add("date", org.apache.spark.sql.types.StringType))
           }
-          df.withColumn("ts_ns", expr("unix_micros(ts) * 1000L"))
-            .withColumn("event_id",
-              xxhash64(col("alias"), col("ts"), col("value"), col("tags")))
+          df.select(col("*"), (unix_micros(col("ts")) * 1000L).as("ts_ns"),
+            xxhash64(col("alias"), col("ts"), col("value"), col("tags")).as("event_id"))
         })
   }
 
@@ -530,8 +528,7 @@ object InfluxQLPlanner {
     }
     val loaded = catalog.withDynTags(catalog.load(spark, dir, m),
       keys ++ conds.flatMap(condKeys))
-    val filtered = conds.foldLeft(loaded)(
-      (df, c) => df.filter(condCol(c)))
+    val filtered = storeScan(spark, loaded, conds, conds)
     keys.map(k => filtered
         .select(lit(k).as("key"), col(k).cast("string").as("value"))
         .filter(col("value").isNotNull).distinct())
@@ -642,28 +639,7 @@ object InfluxQLPlanner {
       case _                 => false
     }
     val (fieldConds, scanConds) = q.where.partition(condHasFieldRef)
-    val filteredTs = scanConds.foldLeft(base)((df, c) => df.filter(condCol(c)))
-    // Derived date-PARTITION pruning (r9): the point store's second
-    // partition column is the UTC day of ts, so every top-level time
-    // bound implies a date bound — conjoining it (a pure superset:
-    // exact ∧ coarse = exact) turns row-group-level pruning into
-    // PartitionFilters, which at 100 TB skips whole `date=` directories
-    // at FILE-LISTING time instead of opening years of footers. Time
-    // bounds are top-level by grammar (OR'd ranges are rejected like
-    // InfluxDB), so folding the top-level conds is complete. Catalogs
-    // without the partition column (events) are untouched.
-    val filtered0 =
-      if (!base.columns.contains("date")) filteredTs
-      else q.where.foldLeft(filteredTs) { (df, c) =>
-        import graft.sinks.PointStoreDirect.utcDate
-        c match {
-          case TimeCond(">" | ">=", ns) => df.filter(col("date") >= utcDate(ns))
-          case TimeCond("<", ns)        => df.filter(col("date") <= utcDate(ns - 1))
-          case TimeCond("<=", ns)       => df.filter(col("date") <= utcDate(ns))
-          case TimeCond("=", ns)        => df.filter(col("date") === utcDate(ns))
-          case _                        => df
-        }
-      }
+    val filtered0 = storeScan(spark, base, scanConds, q.where)
     val isAgg = q.fields.exists {
       case _: FnField | _: TransformField => true
       case ExprField(e, _)                => InfluxQLParser.exprAggLeaves(e).nonEmpty
@@ -947,22 +923,38 @@ object InfluxQLPlanner {
     m
   }
 
-  /** Rewrite `p` without the rows where `timePred` holds and every tag
-    * condition is TRUE (DELETE, DROP SERIES). Keys beyond `alias` resolve
-    * against the JSON tag set (r9); a null lookup keeps the row. */
-  private def rewriteWithout(spark: SparkSession, storeDir: String,
-      p: StoreLayout.Partition, tagConds: Seq[Cond], timePred: Column): Unit = {
+  /** Rewrite the partitions `parts` of measurement `m` without the rows
+    * where `timePred` holds and every tag condition is TRUE (DELETE, DROP
+    * SERIES). Keys beyond `alias` resolve against the JSON tag set (r9); a
+    * null lookup keeps the row. With tag conditions, one job first finds
+    * the days that hold such a row, and only those are rewritten: a series
+    * that lives on one day of a year costs one swap, not 365. Returns the
+    * rewritten partition paths. */
+  private def rewriteWithout(spark: SparkSession, storeDir: String, m: String,
+      parts: Seq[StoreLayout.Partition], tagConds: Seq[Cond], timePred: Column): Seq[String] = {
     def condTagKeys(c: Cond): Seq[String] = c match {
       case TagCond(k, _, _)  => Seq(k)
       case BoolCond(_, l, r) => condTagKeys(l) ++ condTagKeys(r)
       case _                 => Nil
     }
-    val df = Catalog.store(storeDir).withDynTags(
-      spark.read.schema(PointStoreDirect.readSchema).parquet(p.dir.getPath),
+    val tagged = Catalog.store(storeDir)
+    def rows(dir: java.io.File) = tagged.withDynTags(
+      spark.read.schema(PointStoreDirect.readSchema).parquet(dir.getPath),
       tagConds.flatMap(condTagKeys).filter(_ != "alias"))
     val tagPred = tagConds.map(condCol).reduceOption(_ && _).getOrElse(lit(true))
-    StoreLayout.replace(p.dir, df.filter(!(timePred && (tagPred <=> lit(true))))
-      .select("ts", "alias", "value", "tags"))
+    val gone = timePred && (tagPred <=> lit(true))
+    val hit: Set[String] =
+      if (tagConds.isEmpty || parts.isEmpty) parts.map(_.date.toString).toSet
+      else {
+        val day = col("date").cast("string")
+        rows(StoreLayout.measurementDir(storeDir, m))
+          .filter(day.isin(parts.map(_.date.toString): _*) && gone)
+          .select(day).distinct().collect().map(_.getString(0)).toSet
+      }
+    parts.filter(p => hit(p.date.toString)).map { p =>
+      StoreLayout.replace(p.dir, rows(p.dir).filter(!gone).select("ts", "alias", "value", "tags"))
+      p.dir.getPath
+    }
   }
 
   /** Execute DROP SERIES [FROM m] [WHERE tag …] against a
@@ -970,8 +962,9 @@ object InfluxQLPlanner {
     * matching series across all time (InfluxDB 1.x semantics — time bounds
     * are rejected at parse time; that's DELETE's job). With no WHERE the
     * named measurement's partitions drop whole; with tag predicates every
-    * date partition of the scoped measurements rewrites with the predicate
-    * inverted. Returns (droppedPartitionPaths, rewrittenPartitionPaths).
+    * date partition of the scoped measurements that holds a matching point
+    * rewrites with the predicate inverted. Returns (droppedPartitionPaths,
+    * rewrittenPartitionPaths).
     */
   def dropSeries(spark: SparkSession, query: String, storeDir: String)
       : (Seq[String], Seq[String]) =
@@ -991,9 +984,8 @@ object InfluxQLPlanner {
       dirs.foreach(StoreLayout.drop)
       (dirs.map(_.getPath), Nil)
     } else {
-      val parts = ms.flatMap(StoreLayout.partitions(storeDir, _))
-      parts.foreach(rewriteWithout(spark, storeDir, _, where, lit(true)))
-      (Nil, parts.map(_.dir.getPath))
+      (Nil, ms.flatMap(m =>
+        rewriteWithout(spark, storeDir, m, StoreLayout.partitions(storeDir, m), where, lit(true))))
     }
   }
 
@@ -1005,7 +997,8 @@ object InfluxQLPlanner {
     *    drop whole — O(#partitions), no data read, the retention fast
     *    path;
     *  - partially-covered or tag-filtered partitions rewrite with the
-    *    predicate inverted (read, keep non-matching, swap in place).
+    *    predicate inverted (read, keep non-matching, swap in place); with a
+    *    tag predicate, only those that hold a matching point.
     *
     * Store rows carry tag `alias`; predicates on other keys are rejected.
     * Returns (droppedPartitionPaths, rewrittenPartitionPaths).
@@ -1074,7 +1067,7 @@ object InfluxQLPlanner {
         val timePred = (lo.map(l => tsNs >= l) ++ hi.map(h => tsNs < h))
           .reduceOption(_ && _).getOrElse(lit(true))
         val dropped = Seq.newBuilder[String]
-        val rewritten = Seq.newBuilder[String]
+        val partial = Seq.newBuilder[StoreLayout.Partition]
         StoreLayout.partitions(storeDir, requireStored(storeDir, m)).foreach { p =>
           val dayLo = p.date.atStartOfDay(java.time.ZoneOffset.UTC)
             .toInstant.getEpochSecond * 1000000000L
@@ -1083,12 +1076,9 @@ object InfluxQLPlanner {
           val covered = lo.forall(_ <= dayLo) && hi.forall(_ >= dayHi)
           if (overlaps && covered && tagConds.isEmpty) {
             StoreLayout.drop(p.dir); dropped += p.dir.getPath
-          } else if (overlaps) {
-            rewriteWithout(spark, storeDir, p, tagConds, timePred)
-            rewritten += p.dir.getPath
-          }
+          } else if (overlaps) partial += p
         }
-        (dropped.result(), rewritten.result())
+        (dropped.result(), rewriteWithout(spark, storeDir, m, partial.result(), tagConds, timePred))
     }
 
   /** Enforce a parsed CREATE RETENTION POLICY against a date-partitioned
@@ -1109,6 +1099,67 @@ object InfluxQLPlanner {
     }
 
   // ---- predicates ---------------------------------------------------------
+
+  /** `loaded` filtered by `conds`, in one filter. Over a frame with the
+    * point store's `date` partition column, two more things happen; other
+    * catalogs (events) are only filtered.
+    *
+    * Derived date-PARTITION pruning (r9): the store's second partition
+    * column is the UTC day of ts, so every top-level time bound in `where`
+    * implies a date bound. Conjoining it (a pure superset: exact ∧ coarse =
+    * exact) turns row-group-level pruning into PartitionFilters, which at
+    * 100 TB skip whole `date=` directories at FILE-LISTING time instead of
+    * opening years of footers. Time bounds are top-level by grammar (OR'd
+    * ranges are rejected like InfluxDB), so the top-level conds are all.
+    *
+    * One-task scans: when the committed files of the day partitions those
+    * bounds select add up to no more than `spark.sql.files.openCostInBytes`
+    * (what Spark charges for opening one file: 4 MB by default), the scan
+    * is `coalesce(1)`. Its `CoalesceExec(1)` reports `SinglePartition`,
+    * which satisfies the distribution every aggregate, window, sort and join
+    * above it requires, so no Exchange is planned: a dashboard panel over
+    * the last minutes of a node's data runs as one job of one task instead
+    * of a shuffle map stage and its reducers. The filters still push
+    * through the coalesce into the scan. Larger inputs keep the
+    * distributed plan.
+    */
+  private def storeScan(spark: SparkSession, loaded: DataFrame, conds: Seq[Cond],
+      where: Seq[Cond]): DataFrame = {
+    val store = loaded.columns.contains("date")
+    val (from, to) = if (store) dayBounds(where) else (None, None)
+    val filtered = (conds.map(condCol) ++ from.map(col("date") >= _) ++ to.map(col("date") <= _))
+      .reduceOption(_ && _).fold(loaded)(loaded.filter)
+    if (store && storeBytes(loaded, from, to) <= spark.sessionState.conf.filesOpenCostInBytes)
+      filtered.coalesce(1)
+    else filtered
+  }
+
+  /** The first and last ISO day of the [lo, hi) range that the top-level
+    * time conds of `where` bound (`timeBounds`). */
+  private def dayBounds(where: Seq[Cond]): (Option[String], Option[String]) = {
+    import graft.sinks.PointStoreDirect.utcDate
+    val (lo, hi) = timeBounds(where)
+    (lo.map(utcDate), hi.map(h => utcDate(h - 1)))
+  }
+
+  /** Bytes of the committed files that the store scans under `df` read
+    * from the day partitions `from`..`to`. The sizes come from each
+    * relation's own file index, which listed the files when the frame was
+    * loaded, and its own partition pruning: the store is not walked again.
+    */
+  private def storeBytes(df: DataFrame, from: Option[String], to: Option[String]): Long = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }.collect {
+      case r: HadoopFsRelation =>
+        val preds = r.partitionSchema.filter(_.name == "date").flatMap { f =>
+          val a = AttributeReference(f.name, f.dataType)()
+          def day(d: String) = Cast(Literal(d), f.dataType)
+          from.map(d => GreaterThanOrEqual(a, day(d))) ++ to.map(d => LessThanOrEqual(a, day(d)))
+        }
+        r.location.listFiles(preds, Nil).iterator.flatMap(_.files).map(_.getLen).sum
+    }.sum
+  }
 
   private def condCol(c: Cond): Column = c match {
     case TimeCond(op, ns) => cmp(col("ts_ns"), op, lit(ns)) && coarseTs(op, ns)
@@ -1309,22 +1360,22 @@ object InfluxQLPlanner {
     */
   private def bucketCol(q: Select, bNs: Long): Column = {
     val offNs = q.groupTimeOffNs
+    // SQL's `div` (IntegralDivide): exact long division, truncating toward
+    // zero for pre-1970 points too; Column `/` would divide as doubles
+    def div(a: Column, b: Long): Column = call_function("div", a, lit(b))
     q.tz match {
       case None =>
         // bucket-start ns via integer arithmetic on the raw nanos column,
         // then rendered at the store's µs precision (the parser guarantees
         // bNs and offNs are multiples of 1µs, so the division is exact)
-        if (offNs == 0L)
-          expr(s"timestamp_micros(((ts_ns div ${bNs}L) * ${bNs}L) div 1000L)")
-        else
-          expr(s"timestamp_micros((((ts_ns - ${offNs}L) div ${bNs}L)" +
-            s" * ${bNs}L + ${offNs}L) div 1000L)")
+        if (offNs == 0L) timestamp_micros(div(div(col("ts_ns"), bNs) * bNs, 1000L))
+        else timestamp_micros(div(div(col("ts_ns") - offNs, bNs) * bNs + offNs, 1000L))
       case Some(zone) =>
         // local wall-clock micros (ts is micro-precision)
         val usPer = bNs / 1000L
         val offUs = offNs / 1000L
-        expr(s"timestamp_micros(((unix_micros(from_utc_timestamp(ts, '$zone'))" +
-          s" - ${offUs}L) div ${usPer}L) * ${usPer}L + ${offUs}L)")
+        timestamp_micros(div(unix_micros(from_utc_timestamp(col("ts"), zone)) - offUs, usPer) *
+          usPer + offUs)
     }
   }
 

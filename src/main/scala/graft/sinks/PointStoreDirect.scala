@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType, TimestampType}
 
 /** Driver-direct appends into the point store's
   * `measurement=…/date=…` parquet layout — NO Spark job.
@@ -69,11 +70,13 @@ object PointStoreDirect {
         .mkString("{", ",", "}"))
     }
 
-  /** The store's read schema (data columns + the `date` partition) —
-    * reading with it EXPLICITLY makes legacy files without the `tags`
-    * column yield null there instead of schema-lottery behavior.
+  /** The store's data columns (the `date` partition comes from the
+    * layout) — reading with them EXPLICITLY makes legacy files without the
+    * `tags` column yield null there instead of schema-lottery behavior.
     */
-  val readSchema = "ts TIMESTAMP, alias STRING, value DOUBLE, tags STRING"
+  val readSchema: StructType = new StructType()
+    .add("ts", TimestampType).add("alias", StringType)
+    .add("value", DoubleType).add("tags", StringType)
 
   private val schema: MessageType = Types.buildMessage()
     .optional(PrimitiveTypeName.INT64)

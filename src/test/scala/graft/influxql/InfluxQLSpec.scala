@@ -1095,7 +1095,8 @@ class InfluxQLSpec extends SparkTestBase {
     val clicks = all().filter(col("alias") === "click").count()
     val others = all().filter(col("alias") =!= "click").count()
     assert(clicks > 0 && others > 0)
-    // tag-scoped: every date partition rewrites, only the series vanishes
+    // tag-scoped: every date partition holding a click rewrites (here all
+    // three days), only the series vanishes
     val (d1, r1) = InfluxQLPlanner.dropSeries(spark,
       "DROP SERIES FROM plc1 WHERE alias = 'click'", root.toString)
     assert(d1.isEmpty && r1.size == 3)
