@@ -17,9 +17,13 @@ for SF in sf0.001 sf0.01; do
   OUT="/tmp/verify_sweep_$SF"
   rm -rf "$OUT"
   echo "== $SF =="
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  # Verify logs `[verify] <key> ok in <t>s` or `[verify] <key> failed: <msg>`:
+  # every failure's message, then the last few successes.
+  LOG=$(SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
     sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT $SUBSET" \
-    2>&1 | grep -E '\[verify\] .* (ok|FAIL)' | tail -3 || true
+    2>&1 | grep -E '\[verify\] [^ ]+ (ok in|failed:)' || true)
+  echo "$LOG" | grep -E ' failed: ' || true
+  echo "$LOG" | grep -E ' ok in ' | tail -3 || true
   REPORT=$(python3 scripts/check_correctness.py "$OUT" "/root/testdata/$SF")
   if [ -n "$SUBSET" ]; then
     # per-key exact lines: with the wiped dir, only the run keys can PASS

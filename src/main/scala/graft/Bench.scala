@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.Locale
+import scala.util.control.NonFatal
 
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line (also written to bench_out.json with full detail).
@@ -35,19 +35,13 @@ object Bench {
       val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1).map(_.toLong)
       (if (cpu.length > 7) cpu(7) else 0L, cpu.sum)
-    } catch { case _: Throwable => (0L, 0L) }
+    } catch { case NonFatal(_) => (0L, 0L) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (steal0, total0) = cpuJiffies()
     val wall0 = System.nanoTime()
@@ -57,7 +51,7 @@ object Bench {
     Seq("q_downsample_1m", "q_minhash_sig", "q_lsh_bucket", "q_join_broadcast",
         "q_addr_parse", "q_win_derivative", "q_text_tokens", "q_knn_ivf")
       .foreach(n => try SparkEntry.queries(n)(spark, sfDir).count()
-               catch { case _: Throwable => () })
+               catch { case NonFatal(_) => () })
     // SPARK_GRAFT_BENCH_KEYS (comma-separated) restricts the timed set —
     // the knob for like-for-like comparisons across registry growth
     // (e.g. PERF.md r9: the r6 key set on the current build, isolating
@@ -84,7 +78,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED (pass $pass): ${e.getMessage}"); false }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       // Per-query progress on stderr: makes mid-run JVM degradation (JIT /

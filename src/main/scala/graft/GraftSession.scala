@@ -22,6 +22,19 @@ import graft.tables.Tables
   */
 object GraftSession {
 
+  /** The session every graft main starts from: `local[cores]`, one shuffle
+    * partition per core, UTC session time, TIMESTAMP(NANOS) parquet read as
+    * raw longs (the older `events` vintage, see `Tables.events`), no UI. A
+    * main that needs more chains it onto the returned builder.
+    */
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   val TableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable HTTP front door — the deployment shape of the reference's
   * InfluxDB 1.7 node (ref README.md:13-14): one process serving `/query`,
   * `/write`, and `/ping` over a measurement+date-partitioned point store.
@@ -49,14 +47,9 @@ object Serve {
         "usage: graft.Serve <storeDir> [port] [--auth user:pass] [--cq-tick sec] [--jwt-secret s]"))
     val port = positional.lift(1).map(_.toInt).getOrElse(8086)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    sys.env.get("SPARK_MASTER").foreach(builder.master) // deployment: a cluster master
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = graft.influxql.InfluxQLHttp.startStore(spark, storeDir, port,
       auth = flags._1, cqTickSec = flags._2, jwtSecret = flags._3)

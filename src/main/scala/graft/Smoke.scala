@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: the driver's t1 check — SparkEntry.entry rows > 0. Also
   * exercises the GraftExtensions install path (the session is built with
   * the extensions, then the injected functions are used from plain SQL —
@@ -9,13 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.builder(8).withExtensions(new GraftExtensions).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     // Injected-function smoke: decode_s7 + token_hashes from pure SQL, no
     // register() calls. decode_s7 of a 4-byte IEEE754 buffer (0x42 0x28
     // 0x00 0x00 = 42.0f big-endian) as WLReal (=8, functions/S7.scala).
@@ -24,7 +17,6 @@ object Smoke {
     require(ext.getDouble(0) == 42.0, s"extensions: decode_s7 broken: $ext")
     require(ext.getSeq[Long](1).nonEmpty, s"extensions: token_hashes broken: $ext")
     println("EXTENSIONS_OK=" + ext)
-    spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(5, truncate = false)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import java.nio.file.{Files, Paths}
@@ -35,12 +34,7 @@ object StreamBench {
     val nTags = sys.env.getOrElse("SPARK_GRAFT_STREAM_TAGS", "25").toInt
     val ticks = sys.env.getOrElse("SPARK_GRAFT_STREAM_TICKS", "200").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // S1 input: a synthetic catalog document in the reference's XML schema

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -37,14 +37,9 @@ object AlertLatency {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val load = sys.env.getOrElse("SPARK_GRAFT_ALERT_LOAD", "20000").toInt
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ALERT_ROUNDS", "12").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

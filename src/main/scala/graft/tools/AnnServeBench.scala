@@ -3,8 +3,6 @@ package graft.tools
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
-
 /** Serving-side SLO micro-benchmark for the ANN front door (r12, VERDICT
   * r11 #2 + #6): measures what the endpoints actually deliver —
   *
@@ -35,14 +33,8 @@ object AnnServeBench {
     val perThreadW = sys.env.getOrElse("ANN_PER_THREAD_W", "100").toInt
     val sustainSec = sys.env.getOrElse("ANN_SUSTAIN_SEC", "15").toInt
 
-    val spark = SparkSession.builder()
-      .appName("graft-ann-serve-bench")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder(32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     val rng = new scala.util.Random(42)
     def vec(): Array[Float] = Array.fill(dim)(rng.nextFloat() * 2f - 1f)

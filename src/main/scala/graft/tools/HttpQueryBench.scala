@@ -2,8 +2,6 @@ package graft.tools
 
 import java.net.{HttpURLConnection, URI}
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-benchmark for the HTTP `/query` read hot path — the Grafana
   * dashboard cadence (every panel refresh fires a small aggregate query;
   * a dashboard fires a BATCH of them in one `q=` parameter). Prints
@@ -14,14 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object HttpQueryBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-http-query-bench")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder(32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     val store = java.nio.file.Files.createTempDirectory("graft-qbench").toString
     val h = graft.influxql.InfluxQLHttp.startStore(spark, store)

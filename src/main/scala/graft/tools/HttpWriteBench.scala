@@ -2,8 +2,6 @@ package graft.tools
 
 import java.net.{HttpURLConnection, URI}
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-benchmark for the HTTP `/write` ingest hot path — the wire
   * cadence the reference daemon drives (one POST per sample,
   * Linux/InfluxConnector2.py:176). Prints serial single-line POST
@@ -15,14 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object HttpWriteBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-http-write-bench")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder(32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     val store = java.nio.file.Files.createTempDirectory("graft-wbench").toString
     val h = graft.influxql.InfluxQLHttp.startStore(spark, store)

@@ -27,15 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object MemStress {
 
-  private def session(threads: Int): SparkSession =
-    SparkSession.builder()
-      .appName(s"graft-memstress")
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-
   private def heapLine(tag: String): Unit = {
     val rt = Runtime.getRuntime
     println(f"MEMSTRESS $tag maxHeapMB=${rt.maxMemory() / (1 << 20)}%d " +
@@ -125,7 +116,10 @@ object MemStress {
     val mode = args(0)
     val dir = args(1)
     heapLine("start")
-    val spark = session(threads = 4)
+    val spark = graft.GraftSession.builder(4)
+      .config("spark.sql.shuffle.partitions", 8) // fixed, so the spill proof keeps its partition size
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     try mode match {
       case "gen"    => gen(spark, dir, if (args.length > 2) args(2).toLong else 20000000L)
       case "fold"   => runFold(spark, dir)

@@ -4,18 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for ScalaTest suites (one JVM-wide session —
-  * SparkSession.builder reuses the active session across suites).
+/** Shared local session for ScalaTest suites, with the mains' conf set
+  * (one JVM-wide session: the builder reuses the active session across
+  * suites).
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   override def beforeAll(): Unit = {
     super.beforeAll()

@@ -1,10 +1,10 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.jdk.CollectionConverters._
+import graft.SourceAudit.{code, mainSources}
 
 /** What the main sources SPELL, not what they do: the point store's
   * directory layout is decided in one module, [[StoreLayout]]. No other
@@ -16,45 +16,7 @@ import scala.jdk.CollectionConverters._
   */
 class StoreLayoutAuditSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
   private val owner = Paths.get("src/main/scala/graft/sinks/StoreLayout.scala")
-
-  private val charLit = "'(\\\\.|[^\\\\])'".r
-
-  /** Source text with `//` and `/* */` comments dropped; string and char
-    * literals kept. */
-  private def code(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < src.length) {
-      val c = src.charAt(i)
-      if (inStr) {
-        out += c
-        if (c == '\\' && i + 1 < src.length) { out += src.charAt(i + 1); i += 1 }
-        else if (c == '"') inStr = false
-        i += 1
-      } else if (src.startsWith("\"\"\"", i)) { // raw string: copied whole
-        val end = src.indexOf("\"\"\"", i + 3)
-        var stop = if (end < 0) src.length else end + 3
-        while (stop < src.length && src.charAt(stop) == '"') stop += 1 // """" closes on the last
-        out ++= src.substring(i, stop); i = stop
-      } else if (c == '\'' && charLit.findPrefixOf(src.substring(i)).isDefined) {
-        val lit = charLit.findPrefixOf(src.substring(i)).get
-        out ++= lit; i += lit.length
-      } else if (src.startsWith("//", i)) {
-        while (i < src.length && src.charAt(i) != '\n') i += 1
-      } else if (src.startsWith("/*", i)) {
-        val end = src.indexOf("*/", i + 2)
-        i = if (end < 0) src.length else end + 2
-      } else {
-        if (c == '"') inStr = true
-        out += c
-        i += 1
-      }
-    }
-    out.toString
-  }
 
   private val pathLiteral = "(?<![A-Za-z0-9_])(measurement|date)=(?!=)".r
   private val rename = """\.renameTo\(|Files\.move\(""".r
@@ -78,13 +40,6 @@ class StoreLayoutAuditSpec extends AnyFunSuite {
       rename.findAllIn(c).map("rename" -> _) ++
       treeDelete.findAllIn(c).map("tree delete" -> _) ++
       recursiveDeletes(c).map("tree delete" -> _)
-  }
-
-  private def mainSources: Seq[Path] = {
-    assert(Files.isDirectory(root), s"run from the project root: no $root")
-    val s = Files.walk(root)
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-    finally s.close()
   }
 
   test("the audit recognizes each spelling it forbids") {
