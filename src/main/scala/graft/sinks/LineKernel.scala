@@ -18,8 +18,10 @@ import java.util.Locale
   *
   * Codegen'd like [[graft.functions.DecodeS7]]: the generated code is a
   * single static call into [[LineKernel.line]], which builds the line in
-  * one byte array, with no per-row regex or `Formatter` work. Any NULL
-  * input gives a NULL line, never a malformed one.
+  * one byte array, with no per-row regex and no `Formatter` work for
+  * integral values below 1e15 or magnitudes in [1e-3, 1e7); only values
+  * outside those (and NaN, ±Inf) take `String.format`. Any NULL input
+  * gives a NULL line, never a malformed one.
   */
 case class FormatLine(first: Expression, second: Expression, third: Expression,
     fourth: Expression) extends QuaternaryExpression {
@@ -74,13 +76,25 @@ object LineKernel {
     */
   private val FastLimit = 1e15
 
+  /** Magnitudes in [DecimalMin, DecimalMax) print from `Double.toString`'s
+    * plain-decimal digits (it switches to `E` notation outside them).
+    */
+  private val DecimalMin = 1e-3
+  private val DecimalMax = 1e7
+
+  /** "00" to "99", two ASCII bytes each. */
+  private val Pairs: Array[Byte] =
+    (0 until 100).map(i => f"$i%02d").mkString.getBytes(StandardCharsets.US_ASCII)
+
   def line(m: UTF8String, a: UTF8String, v: Double, tsNs: Long): UTF8String = {
     val mag = math.abs(v)
-    val fast = mag < FastLimit && mag == math.floor(mag)
-    // everything else (fractions, NaN, ±Inf, huge values) keeps the
+    val integral = mag < FastLimit && mag == math.floor(mag)
+    val decimal = !integral && mag >= DecimalMin && mag < DecimalMax
+    // everything else (tiny and huge fractions, NaN, ±Inf) keeps the
     // Formatter's exact text: the oracle parity rests on it
-    val slow = if (fast) null else String.format(Locale.US, "%.2f", v).getBytes(StandardCharsets.US_ASCII)
-    val valueMax = if (fast) 20 else slow.length
+    val slow = if (integral || decimal) null
+      else String.format(Locale.US, "%.2f", v).getBytes(StandardCharsets.US_ASCII)
+    val valueMax = if (slow == null) 20 else slow.length
     // worst case: every name byte escaped; 20 = the longest long
     val out = new Array[Byte](2 * (m.numBytes + a.numBytes) + valueMax + 23)
     var p = escape(m, out, 0, key = false)
@@ -88,11 +102,13 @@ object LineKernel {
     p = escape(a, out, p + 1, key = true)
     out(p) = '='
     p += 1
-    if (fast) {
-      // the sign bit, not `v < 0`: -0.0 prints as -0.00
+    if (slow == null) {
+      // the sign bit, not `v < 0`: -0.0 and -0.001 print as -0.00
       if (java.lang.Double.doubleToRawLongBits(v) < 0) { out(p) = '-'; p += 1 }
-      p = putLong(out, p, mag.toLong)
-      out(p) = '.'; out(p + 1) = '0'; out(p + 2) = '0'
+      val cents = if (integral) mag.toLong * 100 else hundredths(mag)
+      p = putLong(out, p, cents / 100)
+      out(p) = '.'
+      putPair(out, p + 1, (cents % 100).toInt)
       p += 3
     } else {
       System.arraycopy(slow, 0, out, p, slow.length)
@@ -101,6 +117,21 @@ object LineKernel {
     out(p) = ' '
     p = putLong(out, p + 1, tsNs)
     UTF8String.fromBytes(out, 0, p)
+  }
+
+  /** `mag` in hundredths, rounded HALF_UP at the third decimal of its
+    * shortest digits (`Double.toString`, plain `int.frac` form in the
+    * decimal range). The Formatter's `%.2f` rounds the same digits the
+    * same way, so 1.005 gives 101, not the 100 its binary value would.
+    */
+  private def hundredths(mag: Double): Long = {
+    val s = java.lang.Double.toString(mag)
+    val dot = s.indexOf('.')
+    var cents = 0L
+    var i = 0
+    while (i < dot) { cents = cents * 10 + (s.charAt(i) - '0'); i += 1 }
+    def frac(k: Int): Int = if (dot + k < s.length) s.charAt(dot + k) - '0' else 0
+    cents * 100 + frac(1) * 10 + frac(2) + (if (frac(3) >= 5) 1 else 0)
   }
 
   /** Copy `s` into `out` at `p`, a backslash before each `,` and space
@@ -120,23 +151,55 @@ object LineKernel {
     p
   }
 
+  private val Chunk = 1000000000L
+
   /** Decimal text of `x` at `p`, as `Long.toString`; returns the next free
-    * position. Works on the negative magnitude so `Long.MinValue` needs no
-    * special case.
+    * position. The magnitude splits into 9-digit chunks, each printed with
+    * int arithmetic, two digits per step. Works on the negative magnitude
+    * so `Long.MinValue` needs no special case.
     */
   private def putLong(out: Array[Byte], p0: Int, x: Long): Int = {
     var p = p0
     var q = x
     if (q < 0) { out(p) = '-'; p += 1 } else q = -q
-    var digits = 1
-    var bound = -10L
-    while (digits < 19 && q <= bound) { digits += 1; bound *= 10 }
-    var i = p + digits - 1
-    while (i >= p) {
-      out(i) = ('0' - (q % 10)).toByte
-      q /= 10
-      i -= 1
+    if (q > -Chunk) return putLead(out, p, (-q).toInt)
+    val lo = (-(q % Chunk)).toInt
+    q /= Chunk
+    if (q > -Chunk) p = putLead(out, p, (-q).toInt)
+    else {
+      p = putLead(out, p, (-(q / Chunk)).toInt)
+      p = putInt(out, p, (-(q % Chunk)).toInt, 9)
     }
-    p + digits
+    putInt(out, p, lo, 9)
+  }
+
+  /** The leading chunk: no zero padding. */
+  private def putLead(out: Array[Byte], p: Int, v: Int): Int = putInt(out, p, v, width(v))
+
+  /** The number of decimal digits of `v` in [0, 1e9). */
+  private def width(v: Int): Int = {
+    var n = 1
+    var bound = 10
+    while (n < 9 && v >= bound) { n += 1; bound *= 10 }
+    n
+  }
+
+  /** The last `n` digits of `v` at `p`, zero-padded; returns `p + n`. */
+  private def putInt(out: Array[Byte], p: Int, v0: Int, n: Int): Int = {
+    var v = v0
+    var i = p + n
+    while (i - p >= 2) {
+      val r = v % 100
+      v /= 100
+      i -= 2
+      putPair(out, i, r)
+    }
+    if (i > p) out(p) = ('0' + v % 10).toByte
+    p + n
+  }
+
+  private def putPair(out: Array[Byte], p: Int, r: Int): Unit = {
+    out(p) = Pairs(2 * r)
+    out(p + 1) = Pairs(2 * r + 1)
   }
 }

@@ -35,7 +35,9 @@ case class TagConfig(
   * to replicate observable reference behavior; coercion is typed casts,
   * never the reference's eval() (InfluxConnector2.py:47-51). The catalog
   * is a small dimension — parsed on the driver via JDK DOM (scala-xml is
-  * not on the offline classpath) and broadcast for enrichment joins.
+  * not on the offline classpath); ingest hands it to the device source,
+  * which polls only the active tags under their aliases
+  * ([[S7SimSource]]'s `catalog` option).
   */
 object ConfigXml {
 

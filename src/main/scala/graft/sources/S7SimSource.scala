@@ -28,6 +28,15 @@ import scala.jdk.CollectionConverters._
   * across executors, each partition owning its device connection
   * exclusively (no shared-client locks, ref :143-145).
   *
+  * What each device polls is its register list ([[S7SimDevice]]). With
+  * the `catalog` option (the XML tag catalog, parsed by
+  * [[ConfigXml.parseString]]) the list is the catalog's ACTIVE tags, each
+  * read under its alias — the reference's load-time P1 filter and alias
+  * naming (InfluxConnector2.py:263-264, :222-240), so enrichment needs no
+  * join downstream. Without it, `plcs` × `tagsPerPlc` registers are
+  * polled under their [[S7SimSource.register]] names. The two ways are
+  * exclusive: `catalog` together with `plcs` or `tagsPerPlc` is an error.
+  *
   * Offsets are tick counters, so restart-from-checkpoint replays exactly
   * the missed ticks (T10 fault recovery).
   *
@@ -36,6 +45,8 @@ import scala.jdk.CollectionConverters._
   *   spark.readStream.format("graft.sources.S7SimSource")
   *     .option("plcs", "10.0.0.1,10.0.0.2").option("tagsPerPlc", "4")
   *     .load()
+  *   spark.readStream.format("graft.sources.S7SimSource")
+  *     .option("catalog", configXml).load()
   * }}}
   * Schema: ts TIMESTAMP, plc STRING, alias STRING, buf BINARY,
   *         type_code INT, bit INT.
@@ -47,18 +58,41 @@ class S7SimSource extends TableProvider {
     // getTable receives a case-PRESERVING map; wrap it so option("tagsPerPlc")
     // and option("tagsperplc") both resolve.
     val opts = new CaseInsensitiveStringMap(properties)
-    val plcs = opts.getOrDefault("plcs", "10.0.0.1,10.0.0.2")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(plcs.nonEmpty, "s7sim: option 'plcs' must name at least one device ip")
     def intOpt(key: String, default: String): Int =
       try opts.getOrDefault(key, default).trim.toInt
       catch { case _: NumberFormatException =>
         throw new IllegalArgumentException(
           s"s7sim: option '$key' must be an integer, got '${opts.get(key)}'") }
-    new S7SimTable(plcs, intOpt("tagsperplc", "4"), intOpt("intervalms", "1000").toLong,
-      intOpt("ticksperpoll", "1").toLong)
+    val devices =
+      if (opts.containsKey("catalog")) {
+        val given = Seq("plcs", "tagsPerPlc").filter(k => opts.containsKey(k))
+        require(given.isEmpty, s"s7sim: option 'catalog' names the devices and their " +
+          s"registers; it cannot be combined with ${given.map(k => s"'$k'").mkString(" or ")}")
+        val tags = ConfigXml.parseString(opts.get("catalog"))
+        require(tags.nonEmpty,
+          "s7sim: the catalog declares no <plc>/<data> tags — nothing to poll " +
+            "(check the config document; ref create_my_data_groups, InfluxConnector2.py:250-270)")
+        S7SimSource.catalogDevices(tags)
+      } else {
+        val plcs = opts.getOrDefault("plcs", "10.0.0.1,10.0.0.2")
+          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        require(plcs.nonEmpty, "s7sim: option 'plcs' must name at least one device ip")
+        S7SimSource.defaultDevices(plcs, intOpt("tagsperplc", "4"))
+      }
+    new S7SimTable(devices, intOpt("intervalms", "1000").toLong, intOpt("ticksperpoll", "1").toLong)
   }
 }
+
+/** One polled register: its position among all of its PLC's tags
+  * (inactive ones included), which fixes the value it reads, and the name
+  * its samples carry in the `alias` column.
+  */
+private[sources] case class S7SimRegister(idx: Int, alias: String)
+
+/** A device and the registers it polls; `plcIdx` is the device's index
+  * among all devices of the source.
+  */
+private[sources] case class S7SimDevice(plc: String, plcIdx: Int, registers: Seq[S7SimRegister])
 
 object S7SimSource {
   val Schema: StructType = StructType(Seq(
@@ -77,21 +111,52 @@ object S7SimSource {
   /** The register name (the `alias` column) of tag `tagIdx` on device `plc`. */
   def register(plc: String, tagIdx: Int): String = s"${plc}_tag$tagIdx"
 
-  /** Deterministic "device register" for (tick, plcIdx, tagIdx). */
-  def sample(tick: Long, plcIdx: Int, tagIdx: Int): (Array[Byte], Int, Int) = {
-    TypeCycle(tagIdx % 4) match {
-      case S7.WLReal  => (S7.encodeReal(((tick * 31 + tagIdx * 7) % 1000) / 10.0f), S7.WLReal, 0)
-      case S7.WLWord  => (S7.encodeWord((((tick * 13 + tagIdx) % 65536) - 32768).toShort), S7.WLWord, 0)
-      case S7.WLDWord => (S7.encodeDWord(tick * (tagIdx + 1) + plcIdx), S7.WLDWord, 0)
-      case _          => (S7.encodeBits(((tick + tagIdx) % 256).toInt), S7.WLBit, (tagIdx % 8))
+  /** `tagsPerPlc` registers on each of `plcs`, all polled under their
+    * [[register]] names; `plcIdx` is the position in `plcs`.
+    */
+  private[sources] def defaultDevices(plcs: Seq[String], tagsPerPlc: Int): Seq[S7SimDevice] =
+    plcs.zipWithIndex.map { case (plc, idx) =>
+      S7SimDevice(plc, idx, (0 until tagsPerPlc).map(i => S7SimRegister(i, register(plc, i))))
+    }
+
+  /** The catalog's devices: `plcIdx` is the index in the sorted distinct
+    * PLC list, and each PLC polls its active tags, each at its position
+    * among all of that PLC's tags in document order.
+    */
+  private[sources] def catalogDevices(tags: Seq[TagConfig]): Seq[S7SimDevice] = {
+    val byPlc = tags.groupBy(_.plc) // keeps document order within a PLC
+    byPlc.keys.toSeq.sorted.zipWithIndex.map { case (plc, idx) =>
+      S7SimDevice(plc, idx, byPlc(plc).zipWithIndex.collect {
+        case (t, i) if t.active => S7SimRegister(i, t.alias)
+      })
     }
   }
+
+  /** The S7 type code register `tagIdx` reads as. */
+  def typeCode(tagIdx: Int): Int = TypeCycle(tagIdx % 4)
+
+  /** The bit a bit-typed register reads (0 for the other types). */
+  def bit(tagIdx: Int): Int = if (typeCode(tagIdx) == S7.WLBit) tagIdx % 8 else 0
+
+  /** Deterministic raw buffer of register `tagIdx` on device `plcIdx` at `tick`. */
+  def buffer(tick: Long, plcIdx: Int, tagIdx: Int): Array[Byte] = typeCode(tagIdx) match {
+    case S7.WLReal  => S7.encodeReal(((tick * 31 + tagIdx * 7) % 1000) / 10.0f)
+    case S7.WLWord  => S7.encodeWord((((tick * 13 + tagIdx) % 65536) - 32768).toShort)
+    case S7.WLDWord => S7.encodeDWord(tick * (tagIdx + 1) + plcIdx)
+    case _          => S7.encodeBits(((tick + tagIdx) % 256).toInt)
+  }
+
+  /** Deterministic "device register" for (tick, plcIdx, tagIdx): buffer,
+    * type code and bit.
+    */
+  def sample(tick: Long, plcIdx: Int, tagIdx: Int): (Array[Byte], Int, Int) =
+    (buffer(tick, plcIdx, tagIdx), typeCode(tagIdx), bit(tagIdx))
 }
 
-private[sources] class S7SimTable(plcs: Seq[String], tagsPerPlc: Int, intervalMs: Long,
+private[sources] class S7SimTable(devices: Seq[S7SimDevice], intervalMs: Long,
     ticksPerPoll: Long = 1L)
     extends Table with SupportsRead {
-  override def name(): String = s"s7sim(${plcs.mkString(",")})"
+  override def name(): String = s"s7sim(${devices.map(_.plc).mkString(",")})"
   override def schema(): StructType = S7SimSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ).asJava
@@ -100,7 +165,7 @@ private[sources] class S7SimTable(plcs: Seq[String], tagsPerPlc: Int, intervalMs
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = S7SimSource.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new S7SimMicroBatchStream(plcs, tagsPerPlc, intervalMs, ticksPerPoll)
+          new S7SimMicroBatchStream(devices, intervalMs, ticksPerPoll)
       }
     }
 }
@@ -109,7 +174,7 @@ private[sources] case class TickOffset(tick: Long) extends Offset {
   override def json(): String = tick.toString
 }
 
-private[sources] class S7SimMicroBatchStream(plcs: Seq[String], tagsPerPlc: Int, intervalMs: Long,
+private[sources] class S7SimMicroBatchStream(devices: Seq[S7SimDevice], intervalMs: Long,
     ticksPerPoll: Long = 1L)
     extends MicroBatchStream with SupportsAdmissionControl {
   // `ticksPerPoll` simulated ticks become available per latestOffset poll
@@ -143,10 +208,10 @@ private[sources] class S7SimMicroBatchStream(plcs: Seq[String], tagsPerPlc: Int,
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (tickOf(start), tickOf(end))
-    // Process-per-PLC → partition-per-PLC: each device polls independently.
-    plcs.zipWithIndex.map { case (plc, idx) =>
-      S7SimPartition(plc, idx, tagsPerPlc, s, e, intervalMs): InputPartition
-    }.toArray
+    // Process-per-PLC → partition-per-PLC: each device polls independently;
+    // a device with nothing to poll gets no partition
+    devices.filter(_.registers.nonEmpty)
+      .map(d => S7SimPartition(d, s, e, intervalMs): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -154,28 +219,36 @@ private[sources] class S7SimMicroBatchStream(plcs: Seq[String], tagsPerPlc: Int,
 }
 
 private[sources] case class S7SimPartition(
-    plc: String, plcIdx: Int, tagsPerPlc: Int, startTick: Long, endTick: Long, intervalMs: Long)
+    device: S7SimDevice, startTick: Long, endTick: Long, intervalMs: Long)
   extends InputPartition
 
+/** Walks the device's register list once per tick. Everything but the
+  * buffer depends only on the register or the tick, so it is built once
+  * per partition or per tick; a row allocates only its buffer and its
+  * value array.
+  */
 private[sources] class S7SimReader(p: S7SimPartition) extends PartitionReader[InternalRow] {
+  private val plcIdx = p.device.plcIdx
+  private val regs = p.device.registers.map(_.idx).toArray
+  private val plc = UTF8String.fromString(p.device.plc)
+  private val aliases = p.device.registers.map(r => UTF8String.fromString(r.alias)).toArray
+  private val typeCodes = regs.map(S7SimSource.typeCode)
+  private val bits = regs.map(S7SimSource.bit)
   private var tick = p.startTick
-  private var tag = -1
-  // the names repeat every tick: encode them once per partition
-  private val plc = UTF8String.fromString(p.plc)
-  private val aliases = Array.tabulate(p.tagsPerPlc)(i =>
-    UTF8String.fromString(S7SimSource.register(p.plc, i)))
+  private var ts: Any = micros(tick) // boxed once per tick
+  private var r = -1
+
+  private def micros(t: Long): Long = S7SimSource.BaseMicros + t * p.intervalMs * 1000L
 
   override def next(): Boolean = {
-    tag += 1
-    if (tag >= p.tagsPerPlc) { tag = 0; tick += 1 }
+    r += 1
+    if (r >= regs.length) { r = 0; tick += 1; ts = micros(tick) }
     tick < p.endTick
   }
 
-  override def get(): InternalRow = {
-    val (buf, typeCode, bit) = S7SimSource.sample(tick, p.plcIdx, tag)
-    new GenericInternalRow(Array[Any](
-      S7SimSource.BaseMicros + tick * p.intervalMs * 1000L, plc, aliases(tag), buf, typeCode, bit))
-  }
+  override def get(): InternalRow =
+    new GenericInternalRow(Array[Any](ts, plc, aliases(r),
+      S7SimSource.buffer(tick, plcIdx, regs(r)), typeCodes(r), bits(r)))
 
   override def close(): Unit = ()
 }

@@ -702,13 +702,14 @@ object Pipelines {
     * dropped (P4, ref InfluxConnector2.py:172).
     */
   def s7DecodedStream(spark: SparkSession, plcs: Seq[String], tagsPerPlc: Int = 4,
-      intervalMs: Long = 1000L, sourceOptions: Map[String, String] = Map.empty): DataFrame = {
+      intervalMs: Long = 1000L, sourceOptions: Map[String, String] = Map.empty): DataFrame =
+    decodedStream(spark, Map("plcs" -> plcs.mkString(","), "tagsPerPlc" -> tagsPerPlc.toString,
+      "intervalMs" -> intervalMs.toString) ++ sourceOptions)
+
+  private def decodedStream(spark: SparkSession, sourceOptions: Map[String, String]): DataFrame = {
     graft.functions.DecodeS7.register(spark)
     spark.readStream
       .format("graft.sources.S7SimSource")
-      .option("plcs", plcs.mkString(","))
-      .option("tagsPerPlc", tagsPerPlc.toString)
-      .option("intervalMs", intervalMs.toString)
       .options(sourceOptions)
       .load()
       .select(col("ts"), col("plc").as("measurement"), col("alias"),
@@ -717,14 +718,10 @@ object Pipelines {
   }
 
   /** The complete reference dataflow as ONE assembly (SURVEY §3.1):
-    * S1 config scan → S2 device source → D3 native decode → J1 broadcast
-    * config enrichment (P1 active filter + alias mapping) → P2 point
-    * projection → S3 batched line-protocol sink.
-    *
-    * The tag catalog maps positionally onto the simulated device's
-    * registers (tag index within its PLC — the reference reads registers
-    * in catalog order too, InfluxConnector2.py:139-170). The catalog is a
-    * broadcast dimension: enrichment adds no shuffle to the stream.
+    * S1 config scan → S2 device source polling the catalog's active
+    * registers under their aliases (P1 active filter + alias mapping,
+    * pushed into the read) → D3 native decode → P2 point projection → S3
+    * batched line-protocol sink. See [[enrichedPoints]].
     */
   def ingest(spark: SparkSession, configXml: String, outDir: String,
       checkpointDir: String, trigger: Trigger = Trigger.AvailableNow(),
@@ -760,32 +757,15 @@ object Pipelines {
       .start()
 
   /** The decoded + config-enriched point stream shared by both ingest
-    * sinks: S1 config scan → S2 device source → D3 native decode → J1
-    * broadcast config enrichment (P1 active filter + alias mapping) → P2
-    * point projection (ts, measurement, alias, value).
+    * sinks, (ts, measurement, alias, value). The catalog is the source's
+    * `catalog` option: each PLC polls only its active tags, each at its
+    * catalog position and under its alias (the reference reads registers
+    * in catalog order too, InfluxConnector2.py:139-170, :263-264), so the
+    * stream has no join, no broadcast and no shuffle.
     */
   def enrichedPoints(spark: SparkSession, configXml: String,
-      sourceOptions: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val tags = graft.sources.ConfigXml.parseString(configXml)
-    require(tags.nonEmpty,
-      "ingest: config XML declares no <plc>/<data> tags — nothing to poll " +
-        "(check the config document; ref create_my_data_groups, InfluxConnector2.py:250-270)")
-    val plcs = tags.map(_.plc).distinct.sorted
-    val maxTags = tags.groupBy(_.plc).map(_._2.size).max
-    // (plc, register, alias, active): positional register map per device,
-    // keyed by the register name the source emits for tag i of a PLC
-    val catalog = tags.groupBy(_.plc).toSeq.flatMap { case (plc, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (plc, graft.sources.S7SimSource.register(plc, i),
-        t.alias, t.active) }
-    }.toDF("cfg_plc", "cfg_register", "cfg_alias", "active")
-
-    s7DecodedStream(spark, plcs, tagsPerPlc = maxTags, sourceOptions = sourceOptions)
-      .join(broadcast(catalog),
-        col("measurement") === col("cfg_plc") && col("alias") === col("cfg_register"))
-      .filter(col("active"))                                  // P1
-      .select(col("ts"), col("measurement"), col("cfg_alias").as("alias"), col("value"))
-  }
+      sourceOptions: Map[String, String] = Map.empty): DataFrame =
+    decodedStream(spark, sourceOptions + ("catalog" -> configXml))
 
   /** T17 (r10): streaming MIXTURE-DRIFT monitor — the live twin of the
     * batch mixture keys (q_mixture_sample/temperature/epochs): as docs

@@ -81,20 +81,29 @@ class LineProtocolSpec extends SparkTestBase {
       Double.NegativeInfinity, 0.125, 2.675, 999.995, -0.005, 0.015, 1.005, -2.5,
       Double.MinPositiveValue, 2.2250738585072014e-308, 1e-310, -4.9e-324,
       Double.MaxValue, -Double.MaxValue, 1e15, -1e15, 999999999999999.0,
-      -999999999999999.0, 1e15 + 2, 4503599627370497.0, Long.MaxValue.toDouble)
+      -999999999999999.0, 1e15 + 2, 4503599627370497.0, Long.MaxValue.toDouble,
+      // the bounds of the kernel's decimal range [1e-3, 1e7), and ties at
+      // the third decimal of the shortest digits
+      1e-3, -1e-3, Math.nextDown(1e-3), Math.nextUp(1e-3), 1e7, -1e7, Math.nextDown(1e7),
+      Math.nextUp(1e7), 0.005, 1.005, 9.995, 9999999.995, -9999999.995, 0.0045, 0.0049999)
     val value = Gen.frequency(
       3 -> special,
       3 -> Gen.chooseNum(-1e6, 1e6),
       2 -> Gen.chooseNum(-1e16, 1e16).map(math.rint),
       2 -> Gen.long.map(java.lang.Double.longBitsToDouble),
-      1 -> Gen.chooseNum(-1000, 1000).map(_ / 8.0))
+      1 -> Gen.chooseNum(-1000, 1000).map(_ / 8.0),
+      // float-widened sensor readings, as DecodeS7 gives for S7 REALs
+      3 -> Gen.chooseNum(-100000, 100000).map(k => (k / 10.0f).toDouble),
+      // every decade of the decimal range, and values with a third decimal 5
+      2 -> Gen.zip(Gen.chooseNum(-4.0, 8.0), Gen.oneOf(1.0, -1.0)).map { case (e, s) => s * math.pow(10, e) },
+      2 -> Gen.chooseNum(-2000000, 2000000).map(k => (k * 10 + 5) / 1000.0))
     val char = Gen.frequency(6 -> Gen.alphaNumChar,
       4 -> Gen.oneOf(',', ' ', '=', '\\', '.', '-', '_', '"', 'é', '温', '\u00a0'),
       1 -> Gen.const("\ud83d\ude00")) // a surrogate pair: one 4-byte UTF-8 character
     val name = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, char).map(_.mkString))
     val ts = Gen.frequency(4 -> Gen.chooseNum(0L, 4102444800000000000L),
       1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, -1L, 0L, 9L, 10L), 1 -> Gen.long)
-    val rows = Gen.listOfN(2000, Gen.zip(name, name, value, ts))
+    val rows = Gen.listOfN(4000, Gen.zip(name, name, value, ts))
       .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20240101L))
       .map { case (m, a, v, t) => Row(m, a, v, t) }
     val schema = StructType(Seq(StructField("m", StringType), StructField("a", StringType),

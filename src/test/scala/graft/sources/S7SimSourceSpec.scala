@@ -33,4 +33,16 @@ class S7SimSourceSpec extends SparkTestBase {
     val (buf, tc, bit) = S7SimSource.sample(5L, 0, 1)
     assert(S7.decode(buf, tc, bit) === ((5 * 13 + 1) % 65536 - 32768).toDouble)
   }
+
+  test("a catalog device polls its active tags at their catalog positions, under their aliases") {
+    def tag(plc: String, alias: String, active: Boolean) =
+      TagConfig(plc, 1, "real", "DB", "DB1.DBD0", alias, active, "1s")
+    val devices = S7SimSource.catalogDevices(Seq(tag("10.0.0.2", "a", active = true),
+      tag("10.0.0.1", "b", active = false), tag("10.0.0.2", "c", active = false),
+      tag("10.0.0.2", "d", active = true), tag("10.0.0.1", "e", active = false)))
+    // plcIdx is the index in the sorted PLC list; a PLC with no active tag
+    // keeps its index and polls nothing
+    assert(devices === Seq(S7SimDevice("10.0.0.1", 0, Seq()),
+      S7SimDevice("10.0.0.2", 1, Seq(S7SimRegister(0, "a"), S7SimRegister(2, "d")))))
+  }
 }
