@@ -3,6 +3,9 @@
 
 NOT part of the engine (the engine is Scala/Spark only). Usage:
     python3 scripts/check_correctness.py /tmp/verify_out /root/testdata/sf0.01 [query ...]
+
+Exits 1 unless every compared key is PASS (MISSING-SPARK-OUTPUT counts
+as a failure).
 """
 import json, sys, glob, os
 import duckdb
@@ -55,6 +58,8 @@ def main():
     for name, v in sorted(results.items()):
         print(("PASS " if v == "OK" else "FAIL "), name, "" if v == "OK" else v)
     print(f"== {n_ok}/{len(results)} green")
+    # a gate: any key not PASS (MISSING-SPARK-OUTPUT included) fails the run
+    sys.exit(0 if n_ok == len(results) else 1)
 
 if __name__ == "__main__":
     main()

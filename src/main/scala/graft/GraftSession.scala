@@ -35,8 +35,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  val TableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  val TableNames: Seq[String] = Tables.schemas.keys.toSeq
 
   def init(spark: SparkSession, dir: String): SparkSession = {
     TableNames.foreach { t =>

@@ -327,8 +327,8 @@ object InfluxQLHttp {
   /** POST /write — InfluxDB 1.x line-protocol ingest, the HOT PATH (the
     * reference daemon POSTs once per sample,
     * Linux/InfluxConnector2.py:176). The body is parsed DRIVER-LOCALLY
-    * ([[graft.sinks.LineProtocolLocal]] — same grammar as the distributed
-    * parser, equivalence-pinned in LineProtocolLocalSpec) and appended
+    * ([[graft.sinks.LineProtocolLocal]], graft's one line-protocol
+    * parser) and appended
     * with a direct ParquetWriter ([[graft.sinks.PointStoreDirect]]): no
     * Spark job anywhere on the request, which lifted serial ingest from
     * ~6 POSTs/sec (one job-scheduling round trip per POST) to hundreds

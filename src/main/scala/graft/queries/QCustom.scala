@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.GraftQuery
 import graft.functions.{AudioCodec, DecodeS7, EmaAggregator, ImageCodec, S7}
-import graft.sinks.LineProtocol
+import graft.sinks.{LineProtocol, LineProtocolLocal}
 import graft.sources.ConfigXml
 import Q._
 
@@ -356,16 +356,20 @@ object QCustom {
       """SELECT event_id, 'plc-' || user_id AS measurement, event_type AS field,
         |       printf('%.2f', value) AS value_str, epoch_us(ts) * 1000 AS ts_ns
         |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val parsed = LineProtocol.parseLines(LineProtocol.format(events(s, dir)))
-      // Single-field lines: read the one entry via map_keys/map_values
-      // instead of explode — generating into the parse projection hit a
-      // pathological ~20s whole-stage-codegen COMPILE (runtime was fine);
-      // the scalar form compiles instantly and stays codegen'd.
-      parsed
-        .select(col("event_id"), col("measurement"),
-          element_at(map_keys(col("fields_str")), 1).as("field"),
-          element_at(map_values(col("fields_str")), 1).as("value_str"),
-          col("ts_ns"))
+      import s.implicits._
+      // the /write parser, one line at a time on every core; a NULL line
+      // keeps its event_id with nulls elsewhere
+      Q.fanout(LineProtocol.format(events(s, dir))).as[(Long, String)]
+        .mapPartitions(_.map { case (id, line) =>
+          Option(line).map(LineProtocolLocal.parseLine) match {
+            case None => (id, None, None, None, None)
+            case Some(Right(p)) =>
+              (id, Some(p.measurement), Some(p.fields.head.key), Some(p.fields.head.str), p.tsNs)
+            case Some(Left(why)) =>
+              throw new IllegalStateException(s"event $id: formatted line '$line' does not parse: $why")
+          }
+        })
+        .toDF("event_id", "measurement", "field", "value_str", "ts_ns")
         .orderBy("event_id")
     },
   )

@@ -1,20 +1,16 @@
 package graft.sinks
 
-/** Driver-local InfluxDB 1.x line-protocol parser — plain Scala, zero
-  * Spark. The HTTP `/write` path (graft.influxql.InfluxQLHttp) parses
-  * each POST body with THIS parser: a write batch is one bounded request
-  * body already sitting in driver memory, so spinning up a Spark job to
-  * parse it (the pre-r9 design) paid full job-scheduling latency per
-  * POST — tens of milliseconds — and capped the server at ~6 writes/sec
-  * no matter the cluster. The reference daemon POSTs once per sample
+/** The InfluxDB 1.x line-protocol parser — plain Scala, zero Spark, and
+  * the only one in graft. The HTTP `/write` path
+  * (graft.influxql.InfluxQLHttp) parses each POST body with it on the
+  * driver: a write batch is one bounded request body already sitting in
+  * driver memory, so spinning up a Spark job to parse it (the pre-r9
+  * design) paid full job-scheduling latency per POST — tens of
+  * milliseconds — and capped the server at ~6 writes/sec no matter the
+  * cluster. The reference daemon POSTs once per sample
   * (Linux/InfluxConnector2.py:176), so that latency sat directly on the
-  * ingest hot path.
-  *
-  * [[LineProtocol.parseLines]] (codegen'd column functions) remains the
-  * DISTRIBUTED parser for bulk backlogs; the two implement the same
-  * grammar and are equivalence-pinned against each other over the shared
-  * corpus in LineProtocolLocalSpec — the property-tested round trip is
-  * the oracle.
+  * ingest hot path. A bulk backlog parses with the same function inside
+  * `mapPartitions` (`q_line_protocol_parse`).
   *
   * Grammar (InfluxDB 1.x): `measurement[,tag=v…] field=v[,f2=v2…] [tsNs]`
   * with backslash-escaped `, =` and space in measurement/tags/keys,
@@ -34,10 +30,9 @@ object LineProtocolLocal {
       fields: Vector[Field], tsNs: Option[Long])
 
   /** Split on top-level `sep`: skipped when the previous char is a
-    * backslash (the wire's escape, same single-char lookbehind the
-    * distributed parser's regexes use) and — when `respectQuotes` —
-    * inside `"…"` field values, where `\x` pairs are consumed as units so
-    * an embedded `\"` never closes the string.
+    * backslash (the wire's escape, a single-char lookbehind) and — when
+    * `respectQuotes` — inside `"…"` field values, where `\x` pairs are
+    * consumed as units so an embedded `\"` never closes the string.
     */
   private def splitUnescaped(s: String, sep: Char, respectQuotes: Boolean,
       limit: Int = Int.MaxValue): Vector[String] = {

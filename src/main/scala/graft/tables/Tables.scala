@@ -1,101 +1,61 @@
 package graft.tables
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampType}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
-/** Loaders for the driver-generated parquet tables (see /root/repo/TESTDATA.md).
+import graft.sinks.StoreLayout
+
+/** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
-  * All loaders are plain parquet scans so Catalyst predicate pushdown /
-  * column pruning apply unimpeded; the only special case is `events`,
-  * whose `ts` column the driver has shipped in two vintages (see
-  * [[events]]).  When rebuilding timestamps from raw nanos, integer
-  * division only — epoch nanos (~1.7e18) exceed a Double's 2^53
-  * exact-integer range, so any float math there would corrupt them.
+  * Every table's schema is declared here, once ([[schemas]]), so a load
+  * is a plain `spark.read.schema(ddl).parquet(path)`: no schema inference,
+  * hence no Spark job per load, and Catalyst predicate pushdown / column
+  * pruning apply unimpeded. `SchemaCheckSpec` compares
+  * each declaration with the files' own schema at every local SF. The one
+  * special case is `events`, whose `ts` column the driver has shipped in
+  * two vintages (see [[events]]). When rebuilding timestamps from raw
+  * nanos, integer division only — epoch nanos (~1.7e18) exceed a Double's
+  * 2^53 exact-integer range, so any float math there would corrupt them.
   */
 object Tables {
 
-  val starTables: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-
-  /** Per-session scan-relation cache (r12, guide §6 "file listing").
-    *
-    * `spark.read.parquet(path)` lists the path and reads a footer for
-    * schema inference EVERY call; the query inventory creates ~2-4 scans
-    * per key × 252 keys × 3 bench passes, so the driver pays the same
-    * listing/footer work thousands of times per run. A catalog-backed
-    * engine resolves a table's schema once per session — this cache is
-    * that behavior for the path-based loaders: the ANALYZED scan
-    * DataFrame (logical relation only, never rows — each query still
-    * computes from parquet) is built once per (session, path).
-    *
-    * Eviction (ADVICE r12): the weak key alone cannot fire — the cached
-    * DataFrames strongly reference their session (df.sparkSession), so the
-    * value chain pins the key. A context listener therefore evicts the
-    * session's entry on SparkListenerApplicationEnd (every stop() path in
-    * tests/bench/verify ends the context), and the WeakHashMap stays as
-    * belt-and-braces for contexts that are never stopped.
+  /** Table name → DDL, in the order `GraftSession.init` registers them.
+    * Every parquet timestamp is INT64 TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false), read as TIMESTAMP: the session time zone is
+    * UTC, so the epoch is the one written. `events.ts` is the current
+    * vintage's type; [[events]] swaps it for the legacy one.
     */
-  private val relationCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+  val schemas: ListMap[String, String] = ListMap(
+    "region"     -> "r_regionkey INT, r_name STRING",
+    "nation"     -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer"   -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+                     "c_mktsegment STRING"),
+    "supplier"   -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part"       -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+                     "p_size INT, p_retailprice DOUBLE"),
+    "orders"     -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+                     "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem"   -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+                     "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+                     "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "events"     -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+                     "value DOUBLE, props STRING"),
+    "documents"  -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
 
-  /** ONE eviction listener per SparkContext (r13 review): a per-SESSION
-    * listener would itself accumulate on a long-lived shared context. On
-    * application end the listener drops every cached session of that
-    * context (they all die with it). Residual, documented: sessions
-    * churned on a STILL-LIVE context keep their entries until it ends —
-    * inherent while the cached values strongly reference their session.
-    */
-  private val evictorRegistered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
+  private def path(dir: String, name: String) = s"$dir/$name.parquet"
 
-  private def ensureEvictor(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (evictorRegistered.putIfAbsent(sc, java.lang.Boolean.TRUE) == null)
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          relationCache.synchronized {
-            val it = relationCache.keySet.iterator()
-            while (it.hasNext) if (it.next().sparkContext eq sc) it.remove()
-          }
-      })
-  }
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Pin the timestamp-inference confs BEFORE every cached read: parquet
-    // TIMESTAMP(isAdjustedToUTC=false) columns (lineitem.l_shipdate,
-    // events.ts micros vintage) would otherwise infer as TimestampNTZ or
-    // TimestampType depending on WHICH caller read them first — the
-    // session-wide flip used to happen lazily on the first Tables.events
-    // call, which made the cached schema order-dependent (caught by
-    // SchemaCheckSpec under full-suite ordering). Session TZ is pinned
-    // UTC everywhere, so the epochs are identical either way; pinning
-    // here makes the inferred TYPE deterministic too.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // evict on context end so the session ⇄ DataFrame cycle can be
-    // collected (ADVICE r12 — the weak key alone never fires)
-    ensureEvictor(spark)
-    val perSession = relationCache.synchronized {
-      var m = relationCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        relationCache.put(spark, m)
-      }
-      m
-    }
-    // Plain path key: table() OWNS the two timestamp-inference confs (pinned
-    // above on every call), so the inferred schema cannot vary per caller —
-    // the r12 conf-suffixed events key was dead code (always
-    // "#nanos=true#ntz=false"; ADVICE r12). SchemaCheckSpec reads the raw
-    // vintage with its own spark.read, not through this cache.
-    val path = s"$dir/$name.parquet"
-    perSession.computeIfAbsent(path, _ => spark.read.parquet(path))
-  }
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schemas(name)).parquet(path(dir, name))
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -107,35 +67,55 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
+  /** The Spark type of `events.ts` in the file at hand, from one parquet
+    * footer read on the driver (no Spark job, no Hadoop configuration to
+    * load): the file itself, or the first visible part file of a
+    * directory. A micros or millis TIMESTAMP reads as TIMESTAMP; any other
+    * INT64 (the legacy NANOS vintage, under the session's `nanosAsLong`,
+    * or a plain long) as BIGINT.
+    */
+  private def eventsTsType(dir: String): DataType = {
+    val f = new java.io.File(path(dir, "events"))
+    val file = if (!f.isDirectory) f else StoreLayout.dataFiles(f).sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalArgumentException(s"$f holds no data file"))
+    val r = ParquetFileReader.open(new LocalInputFile(file.toPath),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
+    val schema = try r.getFileMetaData.getSchema finally r.close()
+    val ts = schema.getType(schema.getFieldIndex("ts"))
+    require(ts.isPrimitive && ts.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64,
+      s"$file: events.ts is $ts, expected INT64")
+    ts.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation
+          if t.getUnit == TimeUnit.MICROS || t.getUnit == TimeUnit.MILLIS => TimestampType
+      case _ => LongType
+    }
+  }
+
   /** `events` with both a TimestampType `ts` and its raw epoch-nanos twin
     * `ts_ns` (LONG), whichever vintage the parquet file carries:
     *
-    *  - TIMESTAMP(NANOS): Spark's reader rejects it, so we read nanos as a
-    *    raw long (`spark.sql.legacy.parquet.nanosAsLong`) and rebuild a
-    *    microsecond `ts`.  Here `ts_ns` is the NATIVE column — filter on it
-    *    for parquet row-group pruning.
-    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): read as TimestampType,
-    *    not NTZ (`inferTimestampNTZ=false`) — the session timezone is
-    *    pinned UTC everywhere, so the epoch is identical, and a NATIVE
-    *    `ts` keeps time predicates pushing down to row-group stats.  Here
-    *    `ts_ns` is derived, so prefer filtering on `ts` (see
-    *    [[graft.tables.Tables.eventsTimeBound]] for the one helper that
-    *    pushes a nanos interval onto whichever column is native).
+    *  - TIMESTAMP(NANOS): Spark's reader rejects it, so it reads as a raw
+    *    long (`spark.sql.legacy.parquet.nanosAsLong`, set by
+    *    `GraftSession.builder`) and we rebuild a microsecond `ts`. Here
+    *    `ts_ns` is the NATIVE column — filter on it for parquet row-group
+    *    pruning.
+    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): read as TimestampType —
+    *    the session timezone is pinned UTC everywhere, so the epoch is
+    *    identical, and a NATIVE `ts` keeps time predicates pushing down to
+    *    row-group stats. Here `ts_ns` is derived, so prefer filtering on
+    *    `ts` (see [[graft.tables.Tables.eventsTimeBound]] for the one
+    *    helper that pushes a nanos interval onto whichever column is
+    *    native).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = table(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumnRenamed("ts", "ts_ns")
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      case TimestampNTZType => // belt-and-braces: identical epoch under UTC
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-          .withColumn("ts_ns", expr("unix_micros(ts) * 1000L"))
-      case _ =>
-        raw.withColumn("ts_ns", expr("unix_micros(ts) * 1000L"))
-    }
+    val tsType = eventsTsType(dir)
+    val schema = StructType(StructType.fromDDL(schemas("events")).map(f =>
+      if (f.name == "ts") f.copy(dataType = tsType) else f))
+    val raw = spark.read.schema(schema).parquet(path(dir, "events"))
+    if (tsType == LongType)
+      raw.withColumnRenamed("ts", "ts_ns")
+        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+    else raw.withColumn("ts_ns", unix_micros(col("ts")) * 1000L)
   }
 
   /** Filter `df` (an [[events]] frame, or anything carrying `ts` + `ts_ns`)

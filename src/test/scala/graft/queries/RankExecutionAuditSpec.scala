@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{Registry, SparkTestBase}
-import graft.tables.Tables
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -37,9 +36,6 @@ class RankExecutionAuditSpec extends SparkTestBase {
         if (funcName == "collect") { collects.incrementAndGet(); () }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // the first read of a table infers its schema in a job of its own;
-    // load them up front so the count does not depend on suite order
-    Seq("orders", "lineitem", "documents").foreach(Tables.table(spark, dir, _))
     drain()
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(qeListener)

@@ -17,17 +17,17 @@ object ConnStats {
   val opens = new AtomicInteger
   val closes = new AtomicInteger
   val posts = new AtomicInteger
-  val chars = new AtomicInteger
-  def reset(): Unit = Seq(opens, closes, posts, chars).foreach(_.set(0))
+  val bytes = new AtomicInteger
+  def reset(): Unit = Seq(opens, closes, posts, bytes).foreach(_.set(0))
 }
 
 class CountingFactory(maxPayload: Int) extends LineProtocol.LineConnectionFactory {
   def open(partitionId: Long, epochId: Long): LineProtocol.LineConnection = {
     ConnStats.opens.incrementAndGet()
     new LineProtocol.LineConnection {
-      def post(payload: String): Unit = {
+      def post(payload: Array[Byte]): Unit = {
         ConnStats.posts.incrementAndGet()
-        ConnStats.chars.addAndGet(payload.length)
+        ConnStats.bytes.addAndGet(payload.length)
       }
       def close(): Unit = ConnStats.closes.incrementAndGet()
     }
@@ -36,10 +36,10 @@ class CountingFactory(maxPayload: Int) extends LineProtocol.LineConnectionFactor
 
 /** Keeps every payload posted, in order (driven directly, no Spark job). */
 class RecordingFactory extends LineProtocol.LineConnectionFactory {
-  val payloads = scala.collection.mutable.ArrayBuffer.empty[String]
+  val payloads = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
   def open(partitionId: Long, epochId: Long): LineProtocol.LineConnection =
     new LineProtocol.LineConnection {
-      def post(payload: String): Unit = payloads += payload
+      def post(payload: Array[Byte]): Unit = payloads += payload
       def close(): Unit = ()
     }
 }
@@ -139,65 +139,65 @@ class LineProtocolSpec extends SparkTestBase {
     assert(lines.toSeq == Seq(Some("m a=1.00 5"), None))
   }
 
+  /** Parse each line with the one parser, keyed by measurement. */
+  private def parsed(lines: Seq[String]): Map[String, LineProtocolLocal.Parsed] =
+    lines.map(l => LineProtocolLocal.parseLine(l).fold(e => fail(s"'$l': $e"), identity))
+      .map(p => p.measurement -> p).toMap
+
+  /** The numeric fields of a parse; non-numeric ones (strings, booleans) map to null. */
+  private def nums(p: LineProtocolLocal.Parsed): Map[String, java.lang.Double] =
+    p.fields.map(f => f.key -> f.num.map(Double.box).orNull).toMap
+
   test("parseLines inverts the format: general grammar incl. tags, escapes, missing ts") {
     import spark.implicits._
-    val lines = Seq(
+    val rows = parsed(Seq(
       "cpu,host=a,dc=west usage=0.5,idle=99.1 1704067200000000000",
       "my\\ plc,unit=c temp=21.5 5000",
-      "bare value=1.0").toDF("line")
-    val rows = LineProtocol.parseLines(lines).collect()
-      .map(r => r.getAs[String]("measurement") -> r).toMap
+      "bare value=1.0"))
     val cpu = rows("cpu")
-    assert(cpu.getAs[Map[String, String]]("tags") == Map("host" -> "a", "dc" -> "west"))
-    assert(cpu.getAs[Map[String, Double]]("fields") == Map("usage" -> 0.5, "idle" -> 99.1))
-    assert(cpu.getAs[Long]("ts_ns") == 1704067200000000000L)
+    assert(cpu.tags == Map("host" -> "a", "dc" -> "west"))
+    assert(nums(cpu) == Map("usage" -> 0.5, "idle" -> 99.1))
+    assert(cpu.tsNs.contains(1704067200000000000L))
     val plc = rows("my plc")                      // escaped space unescaped
-    assert(plc.getAs[Map[String, String]]("tags") == Map("unit" -> "c"))
-    assert(plc.getAs[Map[String, Double]]("fields") == Map("temp" -> 21.5))
+    assert(plc.tags == Map("unit" -> "c"))
+    assert(nums(plc) == Map("temp" -> 21.5))
     val bare = rows("bare")                       // no tags, no timestamp
-    assert(bare.getAs[Map[String, String]]("tags").isEmpty)
-    assert(bare.isNullAt(bare.fieldIndex("ts_ns")))
+    assert(bare.tags.isEmpty)
+    assert(bare.tsNs.isEmpty)
 
     // full round trip through the sink formatter
     val pts = Seq(("m 1", "temp", 3.25, 1704067200000000L))
       .toDF("measurement", "alias", "value", "us")
       .select(col("measurement"), col("alias"), col("value"),
         timestamp_micros(col("us")).as("ts"))
-    val back = LineProtocol.parseLines(LineProtocol.formatPoints(pts)).collect()(0)
-    assert(back.getAs[String]("measurement") == "m 1")
-    assert(back.getAs[Map[String, Double]]("fields") == Map("temp" -> 3.25))
-    assert(back.getAs[Long]("ts_ns") == 1704067200000000000L)
+    val back = parsed(LineProtocol.formatPoints(pts).as[String].collect().toSeq)("m 1")
+    assert(nums(back) == Map("temp" -> 3.25))
+    assert(back.tsNs.contains(1704067200000000000L))
   }
 
   test("parseLines: escaped tags, quoted string fields, integer i-suffix (full 1.x grammar)") {
-    import spark.implicits._
-    val lines = Seq(
+    val rows = parsed(Seq(
       // escaped comma/space/equals in tag key and value
       """disk,path\,0=/mnt\ data,k\=1=v\=2 used=10.5 100""",
       // quoted string value holding comma, space, equals, escaped quote;
       // plus an integer field with the i suffix alongside a float
       """log,host=a msg="warn, disk=\" 90%\" full",count=42i,load=0.5 200""",
       // boolean-ish field stays textual, its double view is null
-      """flag,host=b ok=true 300""").toDF("line")
-    val rows = LineProtocol.parseLines(lines).collect()
-      .map(r => r.getAs[String]("measurement") -> r).toMap
+      """flag,host=b ok=true 300"""))
 
     val disk = rows("disk")
-    assert(disk.getAs[Map[String, String]]("tags") ==
-      Map("path,0" -> "/mnt data", "k=1" -> "v=2"))
-    assert(disk.getAs[Map[String, Double]]("fields") == Map("used" -> 10.5))
+    assert(disk.tags == Map("path,0" -> "/mnt data", "k=1" -> "v=2"))
+    assert(nums(disk) == Map("used" -> 10.5))
 
     val log = rows("log")
-    assert(log.getAs[Map[String, String]]("fields_str")("msg") ==
+    assert(log.fields.map(f => f.key -> f.str).toMap.apply("msg") ==
       """warn, disk=" 90%" full""")
-    assert(log.getAs[Map[String, Double]]("fields")
-      .view.filterKeys(_ != "msg").toMap == Map("count" -> 42.0, "load" -> 0.5))
-    assert(log.getAs[Map[String, Double]]("fields")("msg") == null
-      || log.getAs[Map[String, Double]]("fields").get("msg").contains(null))
-    assert(log.getAs[Long]("ts_ns") == 200L)
+    assert(nums(log).view.filterKeys(_ != "msg").toMap == Map("count" -> 42.0, "load" -> 0.5))
+    assert(nums(log)("msg") == null)
+    assert(log.tsNs.contains(200L))
 
     val flag = rows("flag")
-    assert(flag.getAs[Map[String, String]]("fields_str") == Map("ok" -> "true"))
+    assert(flag.fields.map(f => f.key -> f.str).toMap == Map("ok" -> "true"))
   }
 
   test("property: parse(formatPoints(point)) == point over hostile names") {
@@ -215,12 +215,11 @@ class LineProtocolSpec extends SparkTestBase {
       .toDF("id", "measurement", "alias", "value", "us")
       .select(col("id"), col("measurement"), col("alias"),
         col("value"), timestamp_micros(col("us")).as("ts"))
-    val back = LineProtocol.parseLines(
-        LineProtocol.formatPoints(pts.select("measurement", "alias", "value", "ts")))
-      .select(col("measurement"), element_at(map_keys(col("fields")), 1).as("alias"),
-        element_at(map_values(col("fields")), 1).as("value"), col("ts"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2),
-        r.getTimestamp(3).getTime)).sortBy(t => (t._1, t._2))
+    val back = LineProtocol.formatPoints(pts.select("measurement", "alias", "value", "ts"))
+      .as[String].collect()
+      .map(l => LineProtocolLocal.parseLine(l).fold(e => fail(s"'$l': $e"), identity))
+      .map(p => (p.measurement, p.fields.head.key, p.fields.head.num.get, p.tsNs.get / 1000000L))
+      .sortBy(t => (t._1, t._2))
     val want = pts.select("measurement", "alias", "value", "ts")
       .collect().map(r => (r.getString(0), r.getString(1),
         // %.2f on the wire: values chosen to be exact at 2 decimals
@@ -324,7 +323,7 @@ class LineProtocolSpec extends SparkTestBase {
     assert(ConnStats.closes.get === ConnStats.opens.get, "every connection closed")
     assert(ConnStats.posts.get > 5, "payloads batched above one-POST-per-partition granularity")
     assert(ConnStats.posts.get < 50, "lines batched into payloads, not one POST per line")
-    assert(ConnStats.chars.get === lines.map(_.length + 1).sum, "every line delivered exactly once")
+    assert(ConnStats.bytes.get === lines.map(_.length + 1).sum, "every line delivered exactly once")
   }
 
   test("writer caps every POST at maxPayload UTF-8 bytes, non-ASCII lines included") {
@@ -335,30 +334,23 @@ class LineProtocolSpec extends SparkTestBase {
     val names = Vector("温度", "Druck-ü", "𝔘", "plc_1", "😀😀")
     val lines = (0 until 300).map(i => s"${names(rnd.nextInt(names.length))} v=$i ${i * 1000L}")
     val long = "温" * 40 + " v=1 1" // 126 bytes: longer than the cap, posted alone
+    val longBytes = (long + "\n").getBytes(utf8)
+    val lone = "plc\uD835 v=2 2" // an unpaired surrogate: UTF-8 encodes it as the 1-byte `?`
     val cap = 64
     val f = new RecordingFactory
     val w = LineProtocol.writer(f, maxPayload = cap)
     w.open(0L, 0L)
-    (lines.take(150) ++ Seq(long) ++ lines.drop(150)).foreach(l => w.process(Row(l)))
+    val all = lines.take(150) ++ Seq(long) ++ lines.slice(150, 200) ++ Seq(lone) ++ lines.drop(200)
+    all.foreach(l => w.process(Row(l)))
     w.process(Row(null))
     w.close(null)
-    val sizes = f.payloads.map(_.getBytes(utf8).length)
-    assert(f.payloads.forall(p => p == long + "\n" || p.getBytes(utf8).length <= cap),
+    val sizes = f.payloads.map(_.length)
+    assert(f.payloads.forall(p => p.sameElements(longBytes) || p.length <= cap),
       s"payload over $cap bytes: ${sizes.max}")
-    assert(f.payloads.contains(long + "\n"))
-    assert(f.payloads.mkString == (lines.take(150) ++ Seq(long) ++ lines.drop(150)).map(_ + "\n").mkString,
+    assert(f.payloads.exists(_.sameElements(longBytes)))
+    assert(f.payloads.flatten.toArray.sameElements(all.map(_ + "\n").mkString.getBytes(utf8)),
       "every line delivered once, in order")
-    assert(sizes.filterNot(_ == long.getBytes(utf8).length + 1).max > cap - 30,
+    assert(sizes.filterNot(_ == longBytes.length).max > cap - 30,
       "payloads are filled up to the cap, not one line each")
-  }
-
-  test("utf8Length equals getBytes(UTF_8).length, unpaired surrogates included") {
-    val rnd = new scala.util.Random(59)
-    val pool = Array('a', 'é', '温', '\uD835', '\uDD18', '\u007F', '\u0080', '\u07FF', '\u0800', '\uFFFF')
-    (0 until 2000).foreach { _ =>
-      val s = new String(Array.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.length))))
-      assert(LineProtocol.utf8Length(s) == s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length,
-        s.map(_.toInt.toHexString).mkString(" "))
-    }
   }
 }

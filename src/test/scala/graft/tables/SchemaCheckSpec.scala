@@ -10,11 +10,14 @@ import org.apache.spark.sql.types._
   * /root/testdata (events.ts changed from parquet TIMESTAMP(NANOS) to
   * TIMESTAMP(MICROS)); this spec turns the next such drift into ONE
   * pointed failure naming the drifted column instead of a board-wide
-  * wipeout diagnosed from exception spam.
+  * wipeout diagnosed from exception spam. `Tables` returns the schemas
+  * it declares, so the drift check compares each declaration with the
+  * schema Spark infers from the files themselves, at every local SF.
   */
 class SchemaCheckSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
+  private val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"/root/testdata/$sf")
 
   private def fieldTypes(name: String): Map[String, DataType] =
     Tables.table(spark, dir, name).schema.fields.map(f => f.name -> f.dataType).toMap
@@ -30,10 +33,49 @@ class SchemaCheckSpec extends SparkTestBase {
     }
   }
 
+  test("every declared schema is the files' own inferred schema, field by field, at every SF") {
+    // a session of its own, so the inference conf does not leak into
+    // other suites: a TIMESTAMP(isAdjustedToUTC=false) column infers as
+    // TIMESTAMP, the type Tables declares for it
+    val raw = spark.newSession()
+    raw.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for (d <- sfDirs; (name, _) <- Tables.schemas) {
+      val declared = Tables.table(spark, d, name).schema.fields.toSeq
+      val inferred = raw.read.parquet(s"$d/$name.parquet").schema.fields.toSeq
+      assert(declared.map(_.name) == inferred.map(_.name),
+        s"testdata drift: $d/$name.parquet has columns ${inferred.map(_.name).mkString(", ")}")
+      declared.zip(inferred).foreach { case (want, got) =>
+        assert(want.copy(metadata = got.metadata) == got,
+          s"testdata drift: $d/$name.${got.name} is ${got.dataType}, Tables declares " +
+            s"${want.dataType} — update Tables.schemas and audit every oracle SQL that touches it")
+      }
+    }
+  }
+
+  test("loading every table through Tables on a fresh session starts no Spark job") {
+    val fresh = spark.newSession()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (d <- sfDirs; name <- graft.GraftSession.TableNames)
+        (if (name == "events") Tables.events(fresh, d) else Tables.table(fresh, d, name)).schema
+      drain()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs while loading the tables")
+  }
+
+  /** Drain the (asynchronous) listener bus; it is private[spark]. */
+  private def drain(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   test("events carries the expected raw schema (ts vintage explicitly pinned)") {
-    // inferTimestampNTZ=false is set by Tables.events; set it here too so
-    // the raw read below sees what the loader will see.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val tsType = fieldTypes("events")("ts")
     assert(tsType == TimestampType || tsType == LongType,
       s"testdata drift: events.ts is $tsType — Tables.events handles TIMESTAMP " +
