@@ -220,8 +220,8 @@ object InfluxQLHttp {
     val cqTimer = for { sec <- cqTickSec; store <- writeStore } yield {
       val t = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
         (r: Runnable) => { val th = new Thread(r, "graft-cq-tick"); th.setDaemon(true); th })
-      // the write lock taken only for the index's SHORT exclusive steps
-      // (delta rename + commit swap) — see the maintain call below
+      // the write lock taken only for the index's one exclusive step
+      // (the commit) — see the tick call below
       val crit = new graft.sinks.VectorIndexStore.Critical {
         def apply[T](f: => T): T = {
           lock.writeLock.lock()
@@ -246,11 +246,11 @@ object InfluxQLHttp {
           // the store write lock (r12, VERDICT r11 #1: an IVF retrain is
           // 241 s at sf10 — hours at 100 TB — and holding the fair lock
           // across it froze every /query, /write and /ann/* call for the
-          // whole build). maintain takes the lock only through `crit`,
-          // around the delta→folding rename and the staged-build commit
-          // swap; queries keep serving the old index while the new one
-          // trains. (A no-op tick stays cheap — exists() checks only.)
-          graft.sinks.VectorIndexStore.maintain(spark, annIndexDir(store),
+          // whole build). The tick takes the lock only through `crit`,
+          // around its commit; queries keep serving the old version while
+          // the next one is staged. (A no-op tick stays cheap — directory
+          // listings only.)
+          graft.sinks.VectorIndexStore.tick(spark, annIndexDir(store),
             crit = crit): Unit
         } catch {
           case scala.util.control.NonFatal(e) =>
@@ -485,9 +485,9 @@ object InfluxQLHttp {
 
   /** POST /ann/write — the vector-ingest twin of /write (r11, VERDICT r10
     * #4): one `vec_id v1,v2,…,vd` line per vector. Lands in the index's
-    * `delta/` via [[graft.sinks.VectorIndexStore.append]] — NO index work
-    * on the ingest path (the lazy-invalidation contract); the daemon tick
-    * bootstraps or folds it ([[graft.sinks.VectorIndexStore.maintain]]).
+    * `delta/` via [[graft.sinks.VectorIndexStore.appendLocal]] — NO index
+    * work on the ingest path (the lazy-invalidation contract); the daemon
+    * tick bootstraps or folds it ([[graft.sinks.VectorIndexStore.tick]]).
     * Mutating the one store-global index is admin-gated when auth is
     * configured (the subscription precedent). 204 on success.
     */
@@ -545,7 +545,7 @@ object InfluxQLHttp {
       // read side: delta appends only ADD files (the /write argument) and
       // the DIRECT writer gives each POST its own UUID file — concurrent
       // appends never share staging state (AnnChaosSpec pins this); the
-      // tick's build/fold holds the write side
+      // tick's commit holds the write side
       lock.readLock.lock()
       try graft.sinks.VectorIndexStore.appendLocal(rows, annIndexDir(storeDir))
       finally lock.readLock.unlock()
@@ -621,7 +621,7 @@ object InfluxQLHttp {
       }
       lock.readLock.lock()
       val out = try {
-        if (!new java.io.File(s"$idx/lists").exists()) {
+        if (!graft.sinks.VectorIndexStore.built(idx)) {
           val stale = graft.sinks.VectorIndexStore.staleCount(spark, idx)
           respond(ex, 503, errJson(
             s"vector index not built yet ($stale vectors pending the next tick)")); return
@@ -704,7 +704,7 @@ object InfluxQLHttp {
     }
     lock.readLock.lock()
     val out = try {
-      if (!new java.io.File(s"$idx/lists").exists()) {
+      if (!graft.sinks.VectorIndexStore.built(idx)) {
         val stale = graft.sinks.VectorIndexStore.staleCount(spark, idx)
         respond(ex, 503, errJson(
           s"vector index not built yet ($stale vectors pending the next tick)")); return

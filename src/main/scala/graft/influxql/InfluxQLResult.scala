@@ -380,22 +380,28 @@ object InfluxQLResult {
   }
 
   /** The engine renders times as 'yyyy-MM-dd HH:mm:ss' (UTC, or zone-local
-    * under tz()); the wire format is RFC3339, or integer epoch when the
-    * request carries `epoch=` (times are interpreted as UTC — tz() queries
-    * should not combine with epoch rendering).
+    * under tz()), with '.SSSSSS' on a sub-second GROUP BY time grid; the
+    * wire format is RFC3339 — the fraction with its trailing zeros trimmed,
+    * as InfluxDB's RFC3339Nano — or integer epoch when the request carries
+    * `epoch=` (times are interpreted as UTC — tz() queries should not
+    * combine with epoch rendering).
     */
   private def jsonValue(col: String, v: Any, epoch: Option[String]): String = v match {
     case null => "null"
     case s: String if col == "time" && s.length == 19 && s.charAt(10) == ' ' =>
       epoch match {
-        case Some(unit) =>
-          val inst = java.time.LocalDateTime
-            .parse(s.substring(0, 10) + "T" + s.substring(11))
-            .toInstant(java.time.ZoneOffset.UTC)
-          val ns = inst.getEpochSecond * 1000000000L + inst.getNano
-          (ns / epochDiv(unit)).toString
+        case Some(unit) => epochValue(s, unit)
         case None =>
           str(s.substring(0, 10) + "T" + s.substring(11) + "Z")
+      }
+    case s: String if col == "time" && s.length == 26 && s.charAt(10) == ' ' &&
+        s.charAt(19) == '.' =>
+      epoch match {
+        case Some(unit) => epochValue(s, unit)
+        case None =>
+          val frac = s.substring(20).reverse.dropWhile(_ == '0').reverse
+          str(s.substring(0, 10) + "T" + s.substring(11, 19) +
+            (if (frac.isEmpty) "" else "." + frac) + "Z")
       }
     case s: String => str(s)
     case d: Double if d.isNaN || d.isInfinite => "null"
@@ -406,6 +412,16 @@ object InfluxQLResult {
     // a JSON array cell
     case xs: Seq[_] => xs.map(x => jsonValue("", x, epoch)).mkString("[", ",", "]")
     case other => str(String.valueOf(other))
+  }
+
+  /** A rendered UTC time, with or without its fraction, as an integer in
+    * the `epoch=` unit. */
+  private def epochValue(s: String, unit: String): String = {
+    val inst = java.time.LocalDateTime
+      .parse(s.substring(0, 10) + "T" + s.substring(11))
+      .toInstant(java.time.ZoneOffset.UTC)
+    val ns = inst.getEpochSecond * 1000000000L + inst.getNano
+    (ns / epochDiv(unit)).toString
   }
 
   private def str(s: String): String = {

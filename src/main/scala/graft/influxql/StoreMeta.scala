@@ -21,6 +21,9 @@ import InfluxQLAst._
   *   _meta/rp/<enc(db)>/<enc(name)>       (content: "durSec replicaN default")
   * }}}
   *
+  * Every file is replaced whole through [[StoreLayout.writeFile]], so a
+  * crash never leaves one empty; listings skip its hidden temporary files.
+  *
   * Scale note: this is CONTROL-PLANE state — dozens of entries, mutated
   * by rare admin statements already serialized under the HTTP store
   * lock — so plain driver-side files are the right tool; at cluster
@@ -40,9 +43,12 @@ object StoreMeta {
 
   // filenames must survive arbitrary idents (PLC IPs with dots are fine,
   // but a quoted ident can hold '/'); URL-encoding is bijective and keeps
-  // ASCII-sortable listings for the common case
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+  // ASCII-sortable listings for the common case. A leading '.' is escaped
+  // too: dot-names are StoreLayout.writeFile's temporary files
+  private def enc(s: String): String = {
+    val e = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    if (e.startsWith(".")) "%2E" + e.substring(1) else e
+  }
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
 
@@ -51,6 +57,7 @@ object StoreMeta {
 
   private def list(d: File): Seq[String] =
     Option(d.listFiles()).getOrElse(Array.empty[File])
+      .filterNot(_.getName.startsWith("."))
       .map(f => dec(f.getName)).toSeq.sorted
 
   // ---- databases ----------------------------------------------------------
@@ -88,10 +95,8 @@ object StoreMeta {
     metaDir(store, "rp", enc(db), enc(name))
 
   private def writeRp(store: String, rp: Rp): Unit = {
-    val f = rpFile(store, rp.db, rp.name)
-    f.getParentFile.mkdirs()
-    Files.writeString(Paths.get(f.getPath),
-      s"${rp.durationSec} ${rp.replication} ${rp.isDefault}"): Unit
+    StoreLayout.writeFile(rpFile(store, rp.db, rp.name),
+      s"${rp.durationSec} ${rp.replication} ${rp.isDefault}")
     // one default per db (InfluxDB's invariant): setting DEFAULT clears it
     // on the db's other policies
     if (rp.isDefault)
@@ -195,8 +200,7 @@ object StoreMeta {
         s"continuous query ${st.name} requires GROUP BY time(...)")
     val f = cqFile(store, st.db, st.name)
     if (f.isFile) throw InfluxQLParseException("continuous query already exists")
-    f.getParentFile.mkdirs()
-    Files.writeString(Paths.get(f.getPath), InfluxQLRender.render(st)): Unit
+    StoreLayout.writeFile(f, InfluxQLRender.render(st))
   }
 
   def dropCq(store: String, name: String, db: String): Unit = {
@@ -217,9 +221,7 @@ object StoreMeta {
   }
 
   def setCqLastHi(store: String, db: String, name: String, hiNs: Long): Unit = {
-    val f = metaDir(store, "cqstate", enc(db), enc(name))
-    f.getParentFile.mkdirs()
-    Files.writeString(Paths.get(f.getPath), hiNs.toString): Unit
+    StoreLayout.writeFile(metaDir(store, "cqstate", enc(db), enc(name)), hiNs.toString)
   }
 
   def listCqs(store: String, db: Option[String] = None): Seq[Cq] = {
@@ -251,9 +253,7 @@ object StoreMeta {
   def createSub(store: String, st: CreateSubscription): Unit = {
     val f = subFile(store, st.db, st.rp, st.name)
     if (f.isFile) throw InfluxQLParseException("subscription already exists")
-    f.getParentFile.mkdirs()
-    Files.writeString(Paths.get(f.getPath),
-      (st.mode +: st.destinations).mkString("\n")): Unit
+    StoreLayout.writeFile(f, (st.mode +: st.destinations).mkString("\n"))
   }
 
   def dropSub(store: String, name: String, db: String, rp: String): Unit = {
@@ -345,9 +345,7 @@ object StoreMeta {
     metaDir(store, "users", enc(name))
 
   private def writeUser(store: String, u: User): Unit = {
-    val f = userFile(store, u.name)
-    f.getParentFile.mkdirs()
-    Files.writeString(Paths.get(f.getPath), s"${u.pwHash} ${u.admin}"): Unit
+    StoreLayout.writeFile(userFile(store, u.name), s"${u.pwHash} ${u.admin}")
   }
 
   private def readUser(store: String, name: String): Option[User] = {
@@ -418,9 +416,7 @@ object StoreMeta {
     st.db match {
       case None => writeUser(store, u.copy(admin = true)) // GRANT ALL TO u
       case Some(db) =>
-        val f = metaDir(store, "grants", enc(st.user), enc(db))
-        f.getParentFile.mkdirs()
-        Files.writeString(Paths.get(f.getPath), st.priv): Unit
+        StoreLayout.writeFile(metaDir(store, "grants", enc(st.user), enc(db)), st.priv)
     }
   }
 
@@ -435,8 +431,8 @@ object StoreMeta {
         val f = metaDir(store, "grants", enc(st.user), enc(db))
         val cur = if (f.isFile) Files.readString(Paths.get(f.getPath)) else ""
         (cur, st.priv) match {
-          case ("ALL", "READ")  => Files.writeString(Paths.get(f.getPath), "WRITE"): Unit
-          case ("ALL", "WRITE") => Files.writeString(Paths.get(f.getPath), "READ"): Unit
+          case ("ALL", "READ")  => StoreLayout.writeFile(f, "WRITE")
+          case ("ALL", "WRITE") => StoreLayout.writeFile(f, "READ")
           case (c, p) if c == p || p == "ALL" => f.delete(): Unit
           case _ => () // revoking a privilege the user lacks is a no-op
         }

@@ -79,16 +79,11 @@ object QDedup {
     * quadratically). The cut is an integer count both engines replay
     * (duckBands carries the same QUALIFY), and at ≤ sf0.1 no bucket
     * comes near it (top bucket 9 at sf0.1, 91 at sf1), so oracle rows
-    * are untouched where the driver verifies. Injectable for specs.
-    *
-    * Frozen as a val at object init (ADVICE r11): the DuckDB oracle
-    * fragments ([[duckBands]], q_dedup_stopbuckets) interpolate this once
-    * when the object loads, so a live re-read on the Spark side could
-    * apply a DIFFERENT cut than the already-frozen oracle strings if the
-    * property changed mid-session — both engines must see one value.
+    * are untouched where the driver verifies. The DuckDB oracle
+    * fragments ([[duckBands]], q_dedup_stopbuckets) interpolate the same
+    * constant, so both engines apply one cut.
     */
-  val maxBucket: Long =
-    sys.props.get("graft.dedup.maxBucket").map(_.toLong).getOrElse(256L)
+  val maxBucket: Long = 256L
 
   /** The banded MinHash signature table (doc_id, mh0..mh7, band_id, k) —
     * the LSH candidate-generation frame (4 bands × 2 rows). The full
@@ -170,8 +165,7 @@ object QDedup {
   }
 
   /** DuckDB twin of [[bandedSignatures]] (bands CTE over sig), including
-    * the [[maxBucket]] stop-bucket QUALIFY (read at object init; the
-    * oracle string is frozen per session like every other fragment). */
+    * the [[maxBucket]] stop-bucket QUALIFY. */
   private val duckBands: String =
     s"""$duckBandsRaw,
        |bands AS (SELECT * FROM braw
@@ -510,7 +504,7 @@ object QDedup {
         "forced (hot buckets grow linearly with the corpus, their candidate pairs " +
         "quadratically): per (band, bucket size) the bucket count, the pair " +
         "fan-out those buckets would generate, and whether the cut drops them. " +
-        "The report a dedup rollout reads to site graft.dedup.maxBucket — and the " +
+        "The report a dedup rollout reads to site the stop-bucket cap — and the " +
         "first place a corpus full of boilerplate shows up. Integer-only.",
       s"""WITH $duckBase, $duckSig, $duckBandsRaw,
          |bs AS (SELECT band_id, k, count(*) AS sz FROM braw GROUP BY band_id, k)

@@ -22,7 +22,9 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * and `recover` run with no scan or other mutation in flight (the HTTP
   * node's store write lock); `appendFile` only adds a file, beside scans.
   * [[move]] and [[rmTree]] are the one rename and the one recursive delete
-  * of the code base; [[VectorIndexStore]] builds its own protocol on them.
+  * of the code base, and [[writeFile]] the one small-file replace: the
+  * admin catalog's files and the vector index's commit point `CURRENT`
+  * ([[VectorIndexStore]]).
   */
 object StoreLayout {
 
@@ -35,7 +37,7 @@ object StoreLayout {
   def partitionDir(store: String, m: String, date: String): File =
     new File(measurementDir(store, m), ExternalCatalogUtils.getPartitionPathString("date", date))
 
-  private def children(d: File): Seq[File] = Option(d.listFiles()).fold(Seq.empty[File])(_.toSeq)
+  private[sinks] def children(d: File): Seq[File] = Option(d.listFiles()).fold(Seq.empty[File])(_.toSeq)
 
   /** The unescaped value of a visible `key=value` directory. */
   private def value(f: File, key: String): Option[String] =
@@ -123,6 +125,19 @@ object StoreLayout {
         else if (f.isDirectory && visible(f)) move(f, hidden(f, "stray"))
       }
     }
+  }
+
+  /** Replace the content of the small file `f` in one step: `content` is
+    * written to a hidden temporary file beside it, which is renamed over
+    * `f`. A crash leaves the old content or the new, never an empty or
+    * partial file; at worst a hidden temporary file stays behind. */
+  def writeFile(f: File, content: String): Unit = {
+    f.getParentFile.mkdirs()
+    val tmp = new File(f.getParentFile, s".${f.getName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.writeString(tmp.toPath, content)
+      move(tmp, f)
+    } finally tmp.delete(): Unit
   }
 
   /** Rename in one step, or throw. Replaces a file; never a non-empty dir. */

@@ -1,10 +1,13 @@
 package graft.sinks
 
+import java.io.File
+import java.nio.file.Files
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Kmeans, VectorMath}
-import StoreLayout.{move, rmTree}
+import StoreLayout.{children, move, rmTree}
 
 /** IVF vector index as a STORE LIFECYCLE artifact (r10, VERDICT r9 #6).
   *
@@ -18,110 +21,123 @@ import StoreLayout.{move, rmTree}
   *    [[graft.functions.Kmeans]]) and writes the inverted lists as a
   *    parquet table PARTITIONED BY cluster — a probe's fine scan prunes
   *    to nprobe directories at the file-listing level;
-  *  - `append` lands new vectors in `delta/` (one bounded parquet write,
-  *    no index work on the ingest path — the lazy invalidation: the index
-  *    is simply stale while delta is non-empty);
-  *  - `tick` (the daemon-tick hook) ASSIGNS delta vectors to the existing
-  *    centroids — one bounded pass over delta only, centroids untouched —
-  *    and folds them into the partitioned lists. Only when the unindexed
-  *    fraction passes `retrainFraction` does it retrain from the full
-  *    corpus (the compaction analogy: appends are cheap, the expensive
-  *    fold is amortized and incremental);
+  *  - `appendLocal` lands new vectors in `delta/` (one small parquet file
+  *    per call, no index work on the ingest path — the lazy invalidation:
+  *    the index is simply stale while delta is non-empty);
+  *  - `tick` (the daemon-tick hook) bootstraps the index from delta, or
+  *    ASSIGNS delta vectors to the existing centroids — one bounded pass
+  *    over delta only, centroids untouched — and folds them into the
+  *    lists. Only when the unindexed fraction passes `retrainFraction`
+  *    does it retrain from the full corpus (the compaction analogy:
+  *    appends are cheap, the expensive fold is amortized and incremental);
   *  - `search` reads centroids (k×d longs), picks top-`nprobe` cells on
   *    the driver, and fine-scans ONLY those cluster partitions with exact
   *    float cosine.
   *
-  * Layout: `indexDir/centroids.parquet` (cid, cv), `indexDir/lists/`
-  * (cluster=…/ partitioned: vec_id, embedding), `indexDir/delta/`.
-  * Callers serialize mutations exactly like store compaction (the HTTP
-  * server's write lock); `search` between an `append` and the next `tick`
-  * serves the indexed corpus — the documented staleness window, readable
-  * via [[staleCount]].
+  * Layout under `indexDir`:
+  *  - `dim`: the one embedding dimension ([[checkDim]]);
+  *  - `delta/part-*.parquet` (vec_id, embedding): appended, not yet folded;
+  *  - `v<g>/centroids.parquet` (cid, cv) and `v<g>/lists/cluster=…/`
+  *    (vec_id, embedding): version `g`, never changed once committed;
+  *  - `CURRENT`: the committed generation `g` on its first line, then the
+  *    names of the delta files that `v<g>` folded in.
   *
-  * Commit protocol: its own, not [[StoreLayout.replace]], which swaps ONE
-  * directory. A retrain commits two artifacts that must flip together —
-  * centroids and the lists assigned to them — plus the generation the
-  * driver caches key on, and [[recoverFolding]] reads a missing live
-  * `centroids.parquet` as "a build commit started: roll forward". The
-  * point store's rule for a `.old` without its live dir (rename it back)
-  * would undo half of that commit. The renames and recursive deletes the
-  * markers are made of are [[StoreLayout.move]] and [[StoreLayout.rmTree]].
+  * Every change — [[build]], and [[tick]]'s bootstrap, retrain,
+  * incremental fold and compaction — takes three steps: stage the whole
+  * `v<g+1>`, commit it by replacing `CURRENT` ([[StoreLayout.writeFile]])
+  * under `crit`, then delete `v<g>` and the delta files it folded. Each
+  * tick first deletes every `v*` that `CURRENT` does not name and every
+  * delta file it lists, so a crash at any step leaves either `v<g>` with
+  * its delta, and the change is redone, or the committed `v<g+1>` with
+  * leftovers that are deleted: no vector is lost or indexed twice. One
+  * mutator at a time (the daemon tick); `search` between an append and
+  * the next tick serves the indexed corpus — the documented staleness
+  * window, readable via [[staleCount]].
   */
 object VectorIndexStore {
 
-  /** Runner for the store's SHORT exclusive sections — directory renames
-    * and the commit swap, never the train/assign/list-write work (r12,
-    * VERDICT r11 #1: the daemon tick used to hold the HTTP server's
-    * global write lock across the FULL IVF retrain — 241 s at sf10,
-    * hours at 100 TB — freezing every /query, /write and /ann endpoint.
-    * The staged `.building` + rename machinery already made the swap the
-    * only step that needs exclusion, so the expensive phases now run
-    * outside it and callers inject their lock through this hook).
-    * [[Critical.inline]] (no locking) is the default for single-caller
-    * lifecycle code and specs that serialize externally.
+  /** Runner for the store's one exclusive step — the replacement of
+    * `CURRENT` — never the train/assign/list-write work (r12, VERDICT r11
+    * #1: the daemon tick used to hold the HTTP server's global write lock
+    * across the FULL IVF retrain — 241 s at sf10, hours at 100 TB —
+    * freezing every /query, /write and /ann endpoint). Callers inject
+    * their lock through this hook. [[Critical.inline]] (no locking) is the
+    * default for single-caller lifecycle code and specs that serialize
+    * externally.
     */
   trait Critical { def apply[T](f: => T): T }
   object Critical {
     val inline: Critical = new Critical { def apply[T](f: => T): T = f }
   }
 
-  private def listsDir(d: String) = s"$d/lists"
-  private def deltaDir(d: String) = s"$d/delta"
-  private def foldingDir(d: String) = s"$d/delta.folding"
-  private def centPath(d: String) = s"$d/centroids.parquet"
-  private def listsBuilding(d: String) = s"$d/lists.building"
-  private def centBuilding(d: String) = s"$d/centroids.building.parquet"
-  private def listsCompacting(d: String) = s"$d/lists.compacting"
+  /** A fold that would leave more list files than this per cell rewrites
+    * the lists to one file per cell instead of linking them (every fold
+    * adds one file per cell it touches). */
+  private val CompactFilesPerCell = 4
 
+  private def deltaDir(d: String) = new File(d, "delta")
   private def dimPath(d: String) = s"$d/dim"
-  private def genPath(d: String) = s"$d/gen"
+  private def currentFile(d: String) = new File(d, "CURRENT")
+  private def versionDir(d: String, g: Long) = new File(d, s"v$g")
+  private def centPath(d: String, g: Long) = s"$d/v$g/centroids.parquet"
+  private[graft] def listsDir(d: String, g: Long) = s"$d/v$g/lists"
 
-  /** The index GENERATION: a counter bumped atomically by every committed
-    * index mutation — centroid swaps (build commit, crash roll-forward)
-    * AND incremental list folds. The driver-side centroid cache and the
-    * hot-cell cache key on it (r12, VERDICT r11 #2 — /ann/query paid a
-    * parquet read per request for a k×d table that only changes on
-    * retrain); incremental folds leave centroids byte-identical but DO
-    * change cell membership, so they must invalidate too (the
-    * probe-finds-new-vector lifecycle test pins this). An index predating
-    * the marker reads as generation 0 and its first rebuild bumps to 1,
-    * invalidating any cached copy.
+  /** The index GENERATION: the first line of `CURRENT`, 0 before the
+    * first commit. Every commit bumps it — retrains, and incremental folds,
+    * which leave centroids byte-identical but DO change cell membership.
+    * The driver-side centroid cache and the hot-cell cache key on it (r12,
+    * VERDICT r11 #2 — /ann/query paid a parquet read per request for a
+    * k×d table that only changes on retrain).
     */
   def generation(indexDir: String): Long = {
-    val f = new java.io.File(genPath(indexDir))
+    val f = currentFile(indexDir)
     if (!f.exists()) 0L
-    else try java.nio.file.Files.readString(f.toPath).trim.toLong
-    catch { case _: NumberFormatException => 0L }
+    else {
+      val r = Files.newBufferedReader(f.toPath)
+      try r.readLine().trim.toLong finally r.close()
+    }
   }
 
-  private def bumpGeneration(indexDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val p = Paths.get(genPath(indexDir))
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, ".gen", ".tmp")
-    Files.writeString(tmp, (generation(indexDir) + 1L).toString): Unit
-    move(tmp.toFile, p.toFile)
-  }
+  /** Has a version been committed? Searches need one. */
+  def built(indexDir: String): Boolean = currentFile(indexDir).exists()
+
+  /** Driver-side cache of the delta file names that `CURRENT` lists, keyed
+    * by (indexDir → generation): `CURRENT` is written once per generation,
+    * and [[staleCount]] runs per `/ann/query`. */
+  private val foldedCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Set[String])]()
+
+  private def folded(indexDir: String): Set[String] =
+    if (!built(indexDir)) Set.empty
+    else {
+      val hit = foldedCache.get(indexDir)
+      if (hit != null && hit._1 == generation(indexDir)) hit._2
+      else {
+        val lines = Files.readString(currentFile(indexDir).toPath).split('\n')
+        val entry = (lines.head.trim.toLong, lines.tail.filter(_.nonEmpty).toSet)
+        foldedCache.put(indexDir, entry): Unit
+        entry._2
+      }
+    }
 
   /** Driver-side centroid cache keyed by (indexDir → generation): a k×d
     * long table, ≤ 2¹⁶ cells by [[graft.functions.Kmeans.cellsFor]]'s cap.
     * Callers that serve reads ([[search]]/[[searchBatch]]) go through
     * this; the maintenance paths keep reading the parquet directly (once
-    * per tick, always post-commit). Entries are only ever REPLACED, and
-    * the generation check runs under the caller's read lock while the
-    * swap+bump holds the write side — a cached generation can never serve
-    * the next generation's centroids.
+    * per tick). Entries are only ever REPLACED, and the generation is read
+    * under the caller's read lock while the commit holds the write side —
+    * a cached generation can never serve the next generation's centroids.
     */
   private val centCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[(Int, Seq[Long])])]()
 
-  private def cachedCentroids(spark: SparkSession, indexDir: String): Seq[(Int, Seq[Long])] = {
-    val gen = generation(indexDir)
+  private def cachedCentroids(spark: SparkSession, indexDir: String,
+      g: Long): Seq[(Int, Seq[Long])] = {
     val hit = centCache.get(indexDir)
-    if (hit != null && hit._1 == gen) hit._2
+    if (hit != null && hit._1 == g) hit._2
     else {
-      val loaded = loadCentroids(spark, indexDir)
-      centCache.put(indexDir, (gen, loaded)): Unit
+      val loaded = loadCentroids(spark, indexDir, g)
+      centCache.put(indexDir, (g, loaded)): Unit
       loaded
     }
   }
@@ -172,44 +188,84 @@ object VectorIndexStore {
       .filter(_.nonEmpty).map(_.toInt)
   }
 
-  /** Does `d` hold at least one COMMITTED (visible) data file? A dir that
-    * exists but lists only dot/underscore names (an appendLocal write in
-    * flight, or its crash orphan) must read as EMPTY — spark.read.parquet
-    * on it throws UNABLE_TO_INFER_SCHEMA (the r11 chaos-found 500). */
-  private def hasVisibleFiles(d: java.io.File): Boolean = StoreLayout.dataFiles(d).nonEmpty
-
-  /** Lifecycle trace for concurrency diagnosis (`-Dgraft.vindex.trace=true`). */
-  private def trace(msg: => String): Unit =
-    if (java.lang.Boolean.getBoolean("graft.vindex.trace"))
-      System.err.println(f"[vindex ${System.currentTimeMillis() % 100000}%05d] $msg")
-
   private def quantized(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"),
       expr(Kmeans.quantExpr("embedding")).as("qv"))
 
-  private def loadCentroids(spark: SparkSession, indexDir: String): Seq[(Int, Seq[Long])] =
-    spark.read.parquet(centPath(indexDir))
+  private def loadCentroids(spark: SparkSession, indexDir: String,
+      g: Long): Seq[(Int, Seq[Long])] =
+    spark.read.parquet(centPath(indexDir, g))
       .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toVector: Seq[Long]))
       .sortBy(_._1).toSeq
 
-  /** Train on `emb` (vec_id, embedding) and write the full index.
-    *
-    * Staged, not in-place: centroids.building is written FIRST, then
-    * lists.building, then the commit renames both over the live dirs
-    * (cent before lists). [[recoverFolding]] depends on exactly this
-    * order to tell an uncommitted build (roll back) from a half-committed
-    * swap (roll forward) — an in-place mode("overwrite") would leave a
-    * crashed retrain with no index at all.
-    *
-    * Only the COMMIT SWAP runs under `crit` (r12): training + the full
-    * assignment write — minutes at scale — touch nothing a concurrent
-    * reader or delta writer can see, so a served store keeps answering
-    * /ann/query (against the old index) and accepting /ann/write for the
-    * whole build, and freezes only for the O(files) rename swap.
+  private def isVersion(f: File) = f.isDirectory && f.getName.matches("v\\d+")
+
+  /** Every `v*` but the committed one: staged or replaced versions. */
+  private def unnamedVersions(indexDir: String): Seq[File] = {
+    val keep = if (built(indexDir)) s"v${generation(indexDir)}" else ""
+    children(new File(indexDir)).filter(f => isVersion(f) && f.getName != keep)
+  }
+
+  /** Hard-link the data files of `from` into `to`, directory by directory
+    * (`Files.createLink`, as [[checkDim]] does): a staged version shares
+    * the committed one's files instead of copying them. */
+  private def linkTree(from: File, to: File): Unit = {
+    to.mkdirs()
+    StoreLayout.dataFiles(from).foreach(f =>
+      Files.createLink(new File(to, f.getName).toPath, f.toPath))
+    children(from).filter(_.isDirectory).foreach(d => linkTree(d, new File(to, d.getName)))
+  }
+
+  /** Move an index in the previous layout — `gen`, `centroids.parquet`
+    * and `lists/` at the top — into `v<gen>` and commit it. A crash part
+    * way is finished by the next tick: `gen` is deleted last. Any other
+    * entry is a leftover of an interrupted change under that layout's own
+    * protocol; adoption refuses it by name rather than guess.
     */
-  def build(spark: SparkSession, emb: DataFrame, indexDir: String,
-      k: Int = 0, iters: Int = 5, crit: Critical = Critical.inline): Unit = {
-    VectorMath.register(spark)
+  private def adoptPreviousLayout(indexDir: String): Unit = {
+    val gen = new File(indexDir, "gen")
+    val live = Seq("centroids.parquet", "lists").map(new File(indexDir, _))
+    if (!gen.exists() && !live.exists(_.exists())) return
+    val known = Set("dim", "delta", "gen", "CURRENT", "centroids.parquet", "lists")
+    children(new File(indexDir)).find(f => !f.getName.startsWith(".") &&
+        !known(f.getName) && !isVersion(f)).foreach { f =>
+      throw new IllegalStateException(s"cannot adopt the vector index at $indexDir: " +
+        s"${f.getName} is left from an interrupted change in the previous layout; " +
+        "resolve or remove it by hand")
+    }
+    val g = if (gen.exists()) Files.readString(gen.toPath).trim.toLong else 0L
+    val v = versionDir(indexDir, g)
+    v.mkdirs()
+    live.filter(_.exists()).foreach(f => move(f, new File(v, f.getName)))
+    StoreLayout.writeFile(currentFile(indexDir), s"$g\n")
+    rmTree(gen)
+  }
+
+  /** Delete what the commit point does not name: every `v*` but the
+    * current version, and the delta files that version folded in. */
+  private def recover(indexDir: String): Unit = {
+    unnamedVersions(indexDir).foreach(rmTree)
+    folded(indexDir).foreach(n => rmTree(new File(deltaDir(indexDir), n)))
+  }
+
+  /** Commit the staged `v<g>`, folding in `deltaFiles`, then delete the
+    * version it replaces and those files. */
+  private def commit(indexDir: String, g: Long, deltaFiles: Seq[File],
+      crit: Critical): Unit = {
+    crit {
+      StoreLayout.writeFile(currentFile(indexDir),
+        (g.toString +: deltaFiles.map(_.getName)).mkString("", "\n", "\n"))
+      // appendLocal's crash orphans: a caller whose appends run
+      // concurrently passes a `crit` that excludes them
+      children(deltaDir(indexDir)).filter(_.getName.endsWith(".inprogress")).foreach(rmTree)
+    }
+    recover(indexDir)
+  }
+
+  /** Train on `emb` (vec_id, embedding) and write a whole version to
+    * `vdir`. */
+  private def stageFresh(spark: SparkSession, emb: DataFrame, vdir: File,
+      k: Int, iters: Int): Unit = {
     val qdf = graft.queries.Q.materialize(quantized(emb))
     // k = 0 → corpus-scaled: √n cells bounded by ≥32-member occupancy
     // (Kmeans.cellsFor — VERDICT r10 #5: 8 fixed cells is no index at
@@ -217,33 +273,29 @@ object VectorIndexStore {
     // and assignment switches to the broadcast-join aggregate past k=64,
     // so a scaled k costs one n×k assignment pass, not k driver passes.
     val kk = if (k > 0) k else Kmeans.cellsFor(qdf.count())
-    trace(s"build: training k=$kk")
     val cents = Kmeans.trainScaled(qdf, kk, iters)
     val sq = spark; import sq.implicits._
-    cents.map { case (cid, cv) => (cid, cv) }.toDF("cid", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(centBuilding(indexDir))
+    cents.toDF("cid", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids.parquet")
     Kmeans.assignScaled(qdf, cents)
       .select("vec_id", "embedding", "cluster")
       .repartition(col("cluster")) // one file per cluster, not one per task
-      .write.partitionBy("cluster").mode("overwrite").parquet(listsBuilding(indexDir))
-    crit {
-      val cent = new java.io.File(centPath(indexDir))
-      val lists = new java.io.File(listsDir(indexDir))
-      rmTree(cent); move(new java.io.File(centBuilding(indexDir)), cent)
-      rmTree(lists); move(new java.io.File(listsBuilding(indexDir)), lists)
-      bumpGeneration(indexDir)
-      trace(s"build: committed swap, gen=${generation(indexDir)}")
-    }
+      .write.partitionBy("cluster").mode("overwrite").parquet(s"$vdir/lists")
   }
 
-  /** Land new vectors unindexed — the ingest path does NO index work.
-    * NOTE: Spark's parquet append shares one `_temporary` staging dir per
-    * target, so CONCURRENT callers of this DataFrame path abort each
-    * other's task files — single-writer lifecycle code only. Concurrent
-    * ingest (the HTTP front door) goes through [[appendLocal]].
+  /** Train on `emb` (vec_id, embedding) and commit it as the next version.
+    * Only the commit runs under `crit` (r12): training and the full
+    * assignment write — minutes at scale — touch nothing a reader can
+    * see, so a served store keeps answering /ann/query (against the old
+    * version) and accepting /ann/write for the whole build.
     */
-  def append(spark: SparkSession, emb: DataFrame, indexDir: String): Unit =
-    emb.select("vec_id", "embedding").write.mode("append").parquet(deltaDir(indexDir))
+  def build(spark: SparkSession, emb: DataFrame, indexDir: String,
+      k: Int = 0, iters: Int = 5, crit: Critical = Critical.inline): Unit = {
+    VectorMath.register(spark)
+    val g = generation(indexDir) + 1
+    stageFresh(spark, emb, versionDir(indexDir, g), k, iters)
+    commit(indexDir, g, Nil, crit)
+  }
 
   private lazy val deltaSchema: org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -263,16 +315,18 @@ object VectorIndexStore {
     * shared `_temporary` staging): one UUID-named parquet file written with
     * parquet-mr, the [[PointStoreDirect.append]] discipline, in Spark's
     * standard 3-level LIST encoding so scans merge it with Spark-written
-    * delta files seamlessly. No Spark job on the ingest path at all.
+    * delta files seamlessly. No Spark job on the ingest path at all, and
+    * no lock against the tick: a tick folds the delta files it listed and
+    * never renames `delta/`.
     */
   def appendLocal(rows: Seq[(Long, Array[Float])], indexDir: String): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    // hidden while written, so a concurrent delta scan (staleCount / tick
-    // under the shared read lock) never sees a half-written footer; a crash
-    // mid-write leaves an invisible orphan that the next fold clears
-    val fin = StoreLayout.appendFile(new java.io.File(deltaDir(indexDir))) { tmp =>
+    // hidden while written, so a concurrent delta scan (staleCount, the
+    // tick) never sees a half-written footer; a crash mid-write leaves an
+    // invisible orphan that the next commit deletes
+    StoreLayout.appendFile(deltaDir(indexDir)) { tmp =>
       val writer = ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(tmp))
         .withType(deltaSchema)
         .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -285,23 +339,22 @@ object VectorIndexStore {
         emb.foreach(v => lst.addGroup("list").add("element", v))
         writer.write(g)
       } finally writer.close()
-    }
-    trace(s"appendLocal: committed ${rows.size} rows (${fin.getName})")
+    }: Unit
   }
 
-  /** Vectors appended since the last tick (the staleness window). Counted
+  /** Vectors appended and not yet folded (the staleness window): the
+    * committed delta files that `CURRENT` does not list as folded. Counted
     * from parquet FOOTER metadata driver-side (r12) — every `/ann/query`
     * response carries this number, and a Spark `count()` job per request
     * (planning + scheduling, ~100 ms) dwarfed the served search once cells
-    * went resident. Row counts live in each file's footer; delta files are
-    * one-per-POST and bounded by the tick cadence, so this is a few
-    * ~1 ms footer reads. Parquet-exact: it is the same metadata Spark's
+    * went resident. Parquet-exact: it is the same metadata Spark's
     * count-pushdown reads. Files mid-write are invisible (dot-prefixed,
     * the r11 rename-into-place discipline), matching the Spark listing.
     */
   def staleCount(spark: SparkSession, indexDir: String): Long = {
-    val d = new java.io.File(deltaDir(indexDir))
-    val files = StoreLayout.dataFiles(d).filter(_.getName.endsWith(".parquet"))
+    val done = folded(indexDir)
+    val files = StoreLayout.dataFiles(deltaDir(indexDir))
+      .filter(f => f.getName.endsWith(".parquet") && !done(f.getName))
     if (files.isEmpty) 0L
     else files.map { f =>
       // committed delta files are IMMUTABLE (written hidden, renamed into
@@ -322,8 +375,8 @@ object VectorIndexStore {
         footerRows.put(key, java.lang.Long.valueOf(n)): Unit
         n
       } catch {
-        // a lock-free caller can race the tick's delta→folding rename:
-        // a vanished file means those vectors just got indexed — count 0
+        // a lock-free caller can race the cleanup after a commit: a
+        // vanished file means those vectors just got indexed — count 0
         case _: java.io.FileNotFoundException => 0L
       }
     }.sum
@@ -333,231 +386,76 @@ object VectorIndexStore {
   private val footerRows =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** No maintenance in flight and nothing pending: delta empty, no
-    * `delta.folding` marker, no staged `.building` dirs. With builds now
-    * running OUTSIDE the store lock (r12), `staleCount == 0` alone no
-    * longer means "every append is searchable" — vectors mid-fold live in
-    * the marker dir for the whole (possibly minutes-long) build. Ops
-    * drain loops and specs should wait on THIS.
+  /** No maintenance in flight and nothing pending: no committed delta file
+    * and no version besides the current one. With builds running OUTSIDE
+    * the store lock (r12), a tick stages a whole version while its delta
+    * files still wait in `delta/`; ops drain loops and specs wait on THIS.
     */
   def quiesced(indexDir: String): Boolean =
-    !hasVisibleFiles(new java.io.File(deltaDir(indexDir))) &&
-      !new java.io.File(foldingDir(indexDir)).exists() &&
-      !new java.io.File(listsBuilding(indexDir)).exists() &&
-      !new java.io.File(centBuilding(indexDir)).exists() &&
-      !new java.io.File(listsCompacting(indexDir)).exists()
+    StoreLayout.dataFiles(deltaDir(indexDir)).isEmpty && unnamedVersions(indexDir).isEmpty
 
-  /** Crash recovery: an orphaned `delta.folding/` means a prior tick died
-    * between folding and cleanup, so its list-append may or may not have
-    * committed. Re-folding blindly would duplicate every delta vector in
-    * the index forever (top-k would return the same vec_id twice); instead
-    * fold only the vectors NOT already present in the lists (anti-join on
-    * vec_id — the recovery pass is idempotent, so a crash during recovery
-    * just re-enters here), then clear the marker.
-    */
-  private def recoverFolding(spark: SparkSession, indexDir: String,
-      crit: Critical = Critical.inline): Unit = {
-    val fDir  = new java.io.File(foldingDir(indexDir))
-    val lb    = new java.io.File(listsBuilding(indexDir))
-    val cb    = new java.io.File(centBuilding(indexDir))
-    val lists = new java.io.File(listsDir(indexDir))
-    val cent  = new java.io.File(centPath(indexDir))
-    // Compaction recovery (r12). Compaction is content-preserving, so its
-    // crash rules are simpler than the build's: an orphaned
-    // lists.compacting NEXT TO live lists may be a half-written rewrite —
-    // always roll BACK (the live lists stay the source of truth and a
-    // later tick just re-compacts); compacting WITHOUT live lists means
-    // the commit's rmTree(lists) ran, so the rewrite had completed — roll
-    // forward.
-    val lc = new java.io.File(listsCompacting(indexDir))
-    if (lc.exists() && lists.exists()) rmTree(lc)
-    else if (lc.exists()) crit {
-      move(lc, lists)
-      bumpGeneration(indexDir)
-    }
-    // Retrain-swap recovery first. Build writes cb THEN lb; commit is
-    // delete cent → rename cb→cent → delete lists → rename lb→lists. Every
-    // crash state is therefore unambiguous:
-    //  - cb exists, cent gone       → commit started: roll FORWARD (adopt both);
-    //  - cb and lb exist (cent too) → build never committed: roll back,
-    //    fall through to the incremental fold of delta.folding;
-    //  - cb alone                   → tmp write died before lb: roll back;
-    //  - lb alone                   → centroids already committed (the old
-    //    lists no longer match them): finish adopting lb. delta.folding's
-    //    vectors are IN lb's corpus, so the anti-join below then folds
-    //    nothing and just clears the marker.
-    // The live dirs mutate only inside crit — a concurrent reader must
-    // never see lists mid-removal; removing orphaned .building stages is
-    // invisible to readers and stays outside.
-    if (cb.exists() && !cent.exists()) crit {
-      move(cb, cent)
-      rmTree(lists); move(lb, lists)
-      bumpGeneration(indexDir) // adopted centroids = a new generation
-    } else if (cb.exists() && lb.exists()) { rmTree(lb); rmTree(cb) }
-    else if (cb.exists()) rmTree(cb)
-    else if (lb.exists()) crit {
-      rmTree(lists); move(lb, lists)
-      bumpGeneration(indexDir) // cent committed pre-crash, unbumped
-    }
-    if (!fDir.exists()) return
-    trace("recover: folding marker present")
-    if (!hasVisibleFiles(fDir)) { trace("recover: orphan marker cleared"); rmTree(fDir); return } // crash orphan only
-    val pending = spark.read.parquet(fDir.getPath).select("vec_id", "embedding")
-      .join(spark.read.parquet(listsDir(indexDir)).select("vec_id"),
-        Seq("vec_id"), "left_anti")
-    val frozen = graft.queries.Q.materialize(quantized(pending))
-    if (frozen.head(1).nonEmpty) {
-      val cents = loadCentroids(spark, indexDir)
-      Kmeans.assignScaled(frozen, cents)
-        .select("vec_id", "embedding", "cluster")
-        .write.partitionBy("cluster").mode("append").parquet(listsDir(indexDir))
-      bumpGeneration(indexDir) // cell membership changed
-    }
-    rmTree(fDir)
-  }
-
-  /** Daemon-tick maintenance. Returns (indexedDelta, retrained).
+  /** Daemon-tick maintenance: fold the committed delta files into the next
+    * version. Returns (vectors folded, built or retrained).
     *
-    * Crash discipline: `delta/` is RENAMED to `delta.folding/` (an atomic
-    * directory move — the marker) before any index work, the fold reads
-    * from the marker dir, and only a completed fold removes it. A crash at
-    * any point leaves either an intact `delta/` (nothing happened) or a
-    * `delta.folding/` that the next tick folds idempotently
-    * ([[recoverFolding]]) — no vector is ever lost or duplicated.
-    */
-  /** `crit` bounds the ONLY two steps a concurrent reader/writer can
-    * observe: the delta→folding rename (excludes racing [[appendLocal]]
-    * commits, whose rename-into-delta would otherwise lose its target
-    * directory mid-flight) and — inside [[build]] — the commit swap. The
-    * count/assign/retrain work in between runs unlocked: it reads the
-    * marker dir (tick-private) and the lists (append-only between swaps,
-    * atomic per-file commits), so searches keep serving throughout.
+    *  - no version yet: BOOTSTRAP — train on the delta;
+    *  - delta larger than `retrainFraction` of the indexed corpus: RETRAIN
+    *    on lists ∪ delta;
+    *  - otherwise assign the delta to the current centroids (incremental)
+    *    and stage `v<g+1>` as hard links to `v<g>` plus the assigned
+    *    vectors, one file per touched cell — or, when that would leave
+    *    more than [[CompactFilesPerCell]] files per cell, as one rewrite
+    *    of the lists (compaction rides the fold).
+    *
+    * It first moves an index in the previous layout into `v<gen>`, then
+    * deletes what no commit names. `crit` bounds the commit alone; the
+    * delta files are listed once, so appends that land meanwhile wait for
+    * the next tick.
     */
   def tick(spark: SparkSession, indexDir: String,
       retrainFraction: Double = 0.5, k: Int = 0, iters: Int = 5,
       crit: Critical = Critical.inline): (Long, Boolean) = {
     VectorMath.register(spark)
-    recoverFolding(spark, indexDir, crit)
-    val dDir = new java.io.File(deltaDir(indexDir))
-    if (!dDir.exists()) return (0L, false)
-    if (!hasVisibleFiles(dDir)) return (0L, false) // only an in-flight write
-    val fDir = new java.io.File(foldingDir(indexDir))
-    crit(move(dDir, fDir))
-    trace(s"tick: staged delta -> folding")
-    val delta = spark.read.parquet(fDir.getPath)
+    adoptPreviousLayout(indexDir)
+    recover(indexDir)
+    val files = StoreLayout.dataFiles(deltaDir(indexDir)).filter(_.getName.endsWith(".parquet"))
+    if (files.isEmpty) return (0L, false)
+    // the files listed above, not the ones appended since: they are the
+    // fold's record in CURRENT. One directory read (a path per file would
+    // list each in its own Spark task), pruned by file name at planning.
+    val delta = spark.read.parquet(deltaDir(indexDir).getPath)
+      .where(col("_metadata.file_name").isin(files.map(_.getName): _*))
+      .select("vec_id", "embedding")
     val nDelta = delta.count()
-    trace(s"tick: nDelta=$nDelta")
-    if (nDelta == 0L) { rmTree(fDir); return (0L, false) }
-    val nIndexed = spark.read.parquet(listsDir(indexDir)).count()
-    val retrain = nDelta.toDouble > retrainFraction * nIndexed
-    trace(s"tick: nIndexed=$nIndexed retrain=$retrain")
+    if (nDelta == 0L) { files.foreach(rmTree); return (0L, false) } // nothing to fold
+    val g = generation(indexDir)
+    val next = versionDir(indexDir, g + 1)
+    val lists = new File(listsDir(indexDir, g))
+    val retrain = !built(indexDir) ||
+      nDelta.toDouble > retrainFraction * spark.read.parquet(lists.getPath).count()
     if (retrain) {
-      // the amortized full fold: corpus = lists ∪ delta, retrain + rewrite
-      val corpus = spark.read.parquet(listsDir(indexDir)).select("vec_id", "embedding")
-        .unionByName(delta.select("vec_id", "embedding"))
-      // materialize BEFORE the overwrite below invalidates its source files
-      val frozen = graft.queries.Q.materialize(corpus)
-      build(spark, frozen, indexDir, k, iters, crit)
+      val corpus =
+        if (!built(indexDir)) delta
+        else spark.read.parquet(lists.getPath).select("vec_id", "embedding").unionByName(delta)
+      stageFresh(spark, corpus, next, k, iters)
     } else {
-      // incremental: assign ONLY the delta against the existing centroids —
-      // one bounded pass, centroids byte-identical afterwards
-      val cents = loadCentroids(spark, indexDir)
-      Kmeans.assignScaled(
-          graft.queries.Q.materialize(quantized(delta)), // freeze before the marker dir clears
-          cents)
-        .select("vec_id", "embedding", "cluster")
-        .write.partitionBy("cluster").mode("append").parquet(listsDir(indexDir))
-      bumpGeneration(indexDir) // centroids untouched, cell membership changed
-      trace(s"tick: incremental fold appended $nDelta")
+      val assigned = graft.queries.Q.materialize(
+        Kmeans.assignScaled(quantized(delta), loadCentroids(spark, indexDir, g))
+          .select("vec_id", "embedding", "cluster"))
+      val touched = assigned.select("cluster").distinct().collect().map(r => s"cluster=${r.getInt(0)}")
+      val live = children(lists).filter(_.getName.startsWith("cluster="))
+      val nFiles = live.map(StoreLayout.dataFiles(_).size).sum + touched.length
+      val nCells = (live.map(_.getName) ++ touched).distinct.size
+      linkTree(new File(centPath(indexDir, g)), new File(s"$next/centroids.parquet"))
+      val out =
+        if (nFiles > CompactFilesPerCell * nCells)
+          spark.read.parquet(lists.getPath).select("vec_id", "embedding", "cluster")
+            .unionByName(assigned)
+        else { linkTree(lists, new File(s"$next/lists")); assigned }
+      out.repartition(col("cluster")) // one file per cell written
+        .write.partitionBy("cluster").mode("append").parquet(s"$next/lists")
     }
-    rmTree(fDir)
-    trace(s"tick: cleared folding marker")
-    // lists compaction rides the tick AFTER the fold clears its marker:
-    // when incremental folds have accreted past ~4 files per cell, rewrite
-    // to one file per cluster (graft.ann.compactFilesPerCell tunes it)
-    if (!retrain) {
-      val (dirs, files) = listsFileStats(indexDir)
-      val perCell = spark.conf.get("graft.ann.compactFilesPerCell", "4").toInt
-      if (dirs > 0 && files > perCell.toLong * dirs) {
-        trace(s"tick: compacting lists ($files files over $dirs cells)")
-        compactLists(spark, indexDir, crit)
-      }
-    }
+    commit(indexDir, g + 1, files, crit)
     (nDelta, retrain)
-  }
-
-  /** Small-file stats of the live lists: (cluster dirs, visible part
-    * files). Every incremental fold appends one file per touched cluster,
-    * so files grow O(folds × cells) while dirs stay at the cell count.
-    */
-  private def listsFileStats(indexDir: String): (Int, Int) = {
-    val d = new java.io.File(listsDir(indexDir))
-    val dirs = Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-    val files = dirs.map(StoreLayout.dataFiles(_).size).sum
-    (dirs.length, files)
-  }
-
-  /** Compact the inverted lists back to ~one file per cluster (r12 — the
-    * missing half of the compaction analogy: PointStoreDirect.compact
-    * handles the point store, but lists only got rewritten on RETRAIN, so
-    * a write-heavy index accreted one file per touched cluster per tick
-    * and every later fold's rowcount, the recovery anti-join, and the
-    * cold-cell Spark scans degraded with file count, not data size).
-    * Content-preserving staged rewrite: read live lists → write
-    * lists.compacting partitioned by cluster (one shuffle partition per
-    * cluster ⇒ one file) → swap under `crit` + generation bump. Must run
-    * on the tick thread only (a concurrent fold's append would be lost in
-    * the swap); readers keep serving the old lists until the rename.
-    */
-  def compactLists(spark: SparkSession, indexDir: String,
-      crit: Critical = Critical.inline): Unit = {
-    val lists = new java.io.File(listsDir(indexDir))
-    if (!lists.exists()) return
-    val lc = listsCompacting(indexDir)
-    spark.read.parquet(lists.getPath)
-      .select("vec_id", "embedding", "cluster")
-      .repartition(col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(lc)
-    crit {
-      rmTree(lists)
-      move(new java.io.File(lc), lists)
-      bumpGeneration(indexDir)
-    }
-    trace("compactLists: committed")
-  }
-
-  /** Daemon-tick entry for a SERVED index (r11 — the HTTP front door's
-    * maintenance hook): if the index has never been built and vectors are
-    * waiting in `delta/`, BOOTSTRAP it from them (train + write lists);
-    * otherwise run the normal incremental [[tick]]. The bootstrap reuses
-    * the tick's marker discipline — delta is renamed to `delta.folding`
-    * BEFORE the build, so a crash after the staged build commits but
-    * before the marker clears is healed by [[recoverFolding]]'s anti-join
-    * (every pending vector is already in the lists → fold nothing, clear
-    * the marker). Returns (vectorsIndexed, builtOrRetrained).
-    */
-  def maintain(spark: SparkSession, indexDir: String,
-      retrainFraction: Double = 0.5, k: Int = 0, iters: Int = 5,
-      crit: Critical = Critical.inline): (Long, Boolean) = {
-    if (new java.io.File(listsDir(indexDir)).exists())
-      return tick(spark, indexDir, retrainFraction, k, iters, crit)
-    val dDir = new java.io.File(deltaDir(indexDir))
-    if (!dDir.exists()) return (0L, false)
-    val fDir = new java.io.File(foldingDir(indexDir))
-    if (!fDir.exists()) {
-      if (!hasVisibleFiles(dDir)) return (0L, false) // only an in-flight write
-      crit(move(dDir, fDir))
-    }
-    if (!hasVisibleFiles(fDir)) { rmTree(fDir); return (0L, false) } // crash orphan
-    val corpus = spark.read.parquet(fDir.getPath).select("vec_id", "embedding")
-    val n = corpus.count()
-    trace(s"maintain: bootstrap n=$n")
-    if (n == 0L) { rmTree(fDir); return (0L, false) }
-    build(spark, corpus, indexDir, k, iters, crit)
-    rmTree(fDir)
-    trace(s"maintain: bootstrap committed, folding cleared")
-    (n, true)
   }
 
   /** Batched search — the realistic serving call: a whole probe FRAME
@@ -571,7 +469,8 @@ object VectorIndexStore {
       topK: Int, nprobe: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     VectorMath.register(spark)
-    val cents = cachedCentroids(spark, indexDir)
+    val g = generation(indexDir)
+    val cents = cachedCentroids(spark, indexDir, g)
     val sq = spark; import sq.implicits._
     val centDf = broadcast(cents.map { case (cid, cv) => (cid, cv) }.toDF("cid", "cv"))
     val qp = probes.select(col("probe_id"), col("embedding").as("pe"),
@@ -584,7 +483,7 @@ object VectorIndexStore {
     // one pruned scan for the UNION of probed cells (driver-bounded: ≤ k)
     val cells = sel.select("cid").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(listsDir(indexDir))
+    val lists = spark.read.parquet(listsDir(indexDir, g))
       .filter(col("cluster").isin(cells: _*))
     val wk = Window.partitionBy("probe_id").orderBy(col("score").desc, col("vec_id"))
     sel.join(lists, col("cluster") === col("cid"))
@@ -599,7 +498,7 @@ object VectorIndexStore {
     * scheduling) to fine-scan nprobe cells that are usually a few hundred
     * KB. This is the serving-node RAM tier an IVF deployment runs: probed
     * cells' vectors stay resident, keyed by (indexDir, GENERATION,
-    * cluster) so a commit swap can never serve stale vectors (old-gen
+    * cluster) so a commit can never serve stale vectors (old-gen
     * entries age out of the LRU), bounded by a byte budget
     * (`graft.ann.cellCacheMB`, default 256; 0 disables). A cell whose
     * fine scan exceeds the per-query residency cap falls back to the
@@ -650,7 +549,8 @@ object VectorIndexStore {
   def search(spark: SparkSession, indexDir: String, probe: Seq[Double],
       topK: Int, nprobe: Int = 3): DataFrame = {
     VectorMath.register(spark)
-    val cents = cachedCentroids(spark, indexDir)
+    val gen = generation(indexDir)
+    val cents = cachedCentroids(spark, indexDir, gen)
     val qp: Seq[Long] = probe.map(x =>
       math.floor(math.max(-1.0, math.min(1.0, x)) * 127.0 + 0.5).toLong)
     val cells = cents
@@ -660,7 +560,6 @@ object VectorIndexStore {
 
     val budgetMb = spark.conf.get("graft.ann.cellCacheMB", "256").toLong
     if (budgetMb > 0) {
-      val gen = generation(indexDir)
       val resident = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[(Long, Array[Float])])]
       val missing = scala.collection.mutable.ArrayBuffer.empty[Int]
       cells.foreach { cid =>
@@ -674,7 +573,7 @@ object VectorIndexStore {
       val cap = budgetMb * 1024 * 1024 / 2
       var ok = true
       if (missing.nonEmpty) {
-        val fetched = spark.read.parquet(listsDir(indexDir))
+        val fetched = spark.read.parquet(listsDir(indexDir, gen))
           .filter(col("cluster").isin(missing.toSeq: _*))
           .select("cluster", "vec_id", "embedding")
           .collect()
@@ -706,7 +605,7 @@ object VectorIndexStore {
     }
 
     val pLit = s"array(${probe.map(v => s"${v}D").mkString(",")})"
-    spark.read.parquet(listsDir(indexDir))
+    spark.read.parquet(listsDir(indexDir, gen))
       .filter(col("cluster").isin(cells: _*))
       .withColumn("score", expr(s"vec_cos(embedding, $pLit)"))
       .orderBy(col("score").desc, col("vec_id"))

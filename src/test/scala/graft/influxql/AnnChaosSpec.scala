@@ -85,10 +85,8 @@ class AnnChaosSpec extends SparkTestBase {
       }
       (vecWriters ++ pointWriters ++ readers).foreach(_.start())
       (vecWriters ++ pointWriters).foreach(_.join(120000))
-      // drain: keep ticking until every appended vector is folded in.
-      // staleCount==0 alone is NOT drained anymore (r12): a retrain-in-
-      // flight holds vectors in delta.folding while delta reads empty —
-      // wait for full quiescence (no delta, no marker, no .building).
+      // drain: keep ticking until every appended vector is folded in —
+      // full quiescence: no delta file and no version but the current.
       val idx = InfluxQLHttp.annIndexDir(store)
       val deadline = System.currentTimeMillis() + 120000
       var quiet = false
@@ -101,7 +99,8 @@ class AnnChaosSpec extends SparkTestBase {
       assert(quiet, "delta never drained")
       assert(bad.get() === 0, s"${bad.get()} failed requests during chaos")
       // every written vector is in the folded lists exactly once
-      val ids = spark.read.parquet(s"$idx/lists").select("vec_id").collect()
+      val ids = spark.read.parquet(graft.sinks.VectorIndexStore.listsDir(idx,
+          graft.sinks.VectorIndexStore.generation(idx))).select("vec_id").collect()
         .map(_.getLong(0)).sorted
       assert(ids.toSeq === (0L until (nWriters * perWriter).toLong),
         s"lost or duplicated vectors: ${ids.length} of ${nWriters * perWriter}")
@@ -126,13 +125,14 @@ class AnnChaosSpec extends SparkTestBase {
     val dim = 48
     val n = 40000L
     import org.apache.spark.sql.functions._
-    // deterministic non-trivial corpus straight into delta via the
-    // single-writer lifecycle path (POSTing 40k vectors would dominate
-    // the test); the first daemon tick then runs the full bootstrap build
+    // deterministic non-trivial corpus straight into delta, in 5000-vector
+    // files (POSTing 40k vectors would dominate the test); the first
+    // daemon tick then runs the full bootstrap build
     val emb = spark.range(n).select(col("id").as("vec_id"),
       expr(s"transform(sequence(0, ${dim - 1}), d -> cast(sin(id * (d + 1)) AS float))")
         .as("embedding"))
-    graft.sinks.VectorIndexStore.append(spark, emb, idx)
+    emb.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      .grouped(5000).foreach(graft.sinks.VectorIndexStore.appendLocal(_, idx))
     graft.sinks.VectorIndexStore.checkDim(idx, dim)
     val h = InfluxQLHttp.startStore(spark, store, cqTickSec = Some(1L))
     try {
@@ -140,7 +140,6 @@ class AnnChaosSpec extends SparkTestBase {
       // one point so /query has a real (cheap) measurement to plan
       assert(http(port, "POST", "/write?db=plc",
         Some("m,alias=a value=1.0 1704067200000000000")) == 204)
-      val listsDir = new java.io.File(s"$idx/lists")
       val obs = new java.util.concurrent.ConcurrentLinkedQueue[Obs]()
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val probeQ = (0 until dim).map(d => math.sin(17.0 * (d + 1))).mkString(",")
@@ -161,13 +160,13 @@ class AnnChaosSpec extends SparkTestBase {
           s"/ann/query?probe=$probeQ&k=3&nprobe=2", None)))
       val tStart = System.currentTimeMillis()
       threads.foreach(_.start())
-      // the build window closes when the commit swap publishes lists/
+      // the build window closes when the commit publishes the first version
       val deadline = tStart + 240000L
-      while (!listsDir.exists() && System.currentTimeMillis() < deadline)
+      while (!graft.sinks.VectorIndexStore.built(idx) && System.currentTimeMillis() < deadline)
         Thread.sleep(25)
       val tBuilt = System.currentTimeMillis()
       stop.set(true); threads.foreach(_.join(15000))
-      assert(listsDir.exists(), "index never built within 240s")
+      assert(graft.sinks.VectorIndexStore.built(idx), "index never built within 240s")
       val buildMs = tBuilt - tStart
       // the window must be long enough that "completed during the build"
       // is meaningful — if hardware ever makes this build sub-3s, grow n

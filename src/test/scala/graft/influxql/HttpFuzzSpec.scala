@@ -136,7 +136,7 @@ class HttpFuzzSpec extends SparkTestBase {
       // guarantees a single-dimension corpus (mixed-dim attempts were
       // 400ed above), so the tick cannot trip and queries never 5xx —
       // a probe of the wrong dimensionality is a 400, not a crash
-      graft.sinks.VectorIndexStore.maintain(spark, InfluxQLHttp.annIndexDir(store.toString))
+      graft.sinks.VectorIndexStore.tick(spark, InfluxQLHttp.annIndexDir(store.toString))
       val probed = graft.sinks.VectorIndexStore
         .dimOf(InfluxQLHttp.annIndexDir(store.toString))
         .map(d => (0 until d).map(i => s"0.$i").mkString(","))

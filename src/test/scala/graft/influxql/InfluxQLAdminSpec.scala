@@ -628,6 +628,35 @@ class InfluxQLAdminSpec extends SparkTestBase {
     } finally h.stop()
   }
 
+  test("catalog files are replaced whole: a leftover temporary file is not listed and the live file keeps its content") {
+    val store = java.nio.file.Files.createTempDirectory("graft-meta-tmp").toString
+    StoreMeta.createDatabase(store, CreateDatabase("db1"))
+    StoreMeta.createUser(store, CreateUser("u1", "pw", admin = false))
+    StoreMeta.createRp(store, CreateRetention("keep2w", "db1", 14 * 86400L, 1, isDefault = true))
+    // what a crash between the temporary write and its rename leaves
+    val meta = new java.io.File(store, "_meta")
+    val userFile = new java.io.File(meta, "users/u1")
+    val userContent = java.nio.file.Files.readString(userFile.toPath)
+    // (a full one: a listing that read it would show one entry more)
+    for ((leftover, content) <- Seq("users/.u1.0f1e.tmp" -> userContent,
+        "rp/db1/.keep2w.0f1e.tmp" -> "86400 1 false"))
+      java.nio.file.Files.writeString(new java.io.File(meta, leftover).toPath, content)
+    StoreMeta.alterRp(store, AlterRetention("keep2w", "db1", Some(28 * 86400L), None, isDefault = true))
+    assert(java.nio.file.Files.readString(userFile.toPath) == userContent)
+    def show(q: String) = mapper.readTree(InfluxQLResult.render(spark, store, q))
+      .at("/results/0/series/0/values")
+    val users = show("SHOW USERS")
+    assert(users.size() == 1 && users.get(0).get(0).asText() == "u1", users.toString)
+    assert(StoreMeta.authenticate(store, "u1", "pw"))
+    val rps = show("SHOW RETENTION POLICIES ON db1")
+    assert((0 until rps.size()).map(rps.get(_).get(0).asText()) == Seq("keep2w"), rps.toString)
+    assert(StoreMeta.listRps(store, Some("db1")).map(r => (r.name, r.durationSec, r.isDefault)) ==
+      Seq(("keep2w", 28 * 86400L, true)))
+    // a name with a leading dot is escaped, so it is no temporary file
+    StoreMeta.createUser(store, CreateUser(".dot", "pw2", admin = false))
+    assert(StoreMeta.listUsers(store).map(_.name) == Seq(".dot", "u1"))
+  }
+
   test("legacy unsalted-sha256 user files still authenticate and migrate to salted PBKDF2") {
     val store = java.nio.file.Files.createTempDirectory("graft-legacy-hash").toString
     // a pre-r9 user file: "<sha256-hex(password)> <admin>"

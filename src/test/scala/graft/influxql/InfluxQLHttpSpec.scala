@@ -141,6 +141,47 @@ class InfluxQLHttpSpec extends SparkTestBase {
     } finally h.stop()
   }
 
+  test("sub-second GROUP BY time buckets go out as RFC3339 with their fraction, as epoch=u integers and in CSV") {
+    val store = java.nio.file.Files.createTempDirectory("graft-http-subsecond").toFile
+    val h = InfluxQLHttp.startStore(spark, store.toString)
+    try {
+      val conn = new URI(s"http://127.0.0.1:${h.port}/write?db=plc").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      // points at +0, +0.6 and +1.0 ms: one per 500µs bucket
+      conn.getOutputStream.write(("plcus,alias=a value=1.0 1704067200000000000\n" +
+        "plcus,alias=a value=2.0 1704067200000600000\n" +
+        "plcus,alias=a value=3.0 1704067200001000000").getBytes("UTF-8"))
+      assert(conn.getResponseCode == 204)
+      conn.disconnect()
+      val q = enc("SELECT COUNT(value) AS n FROM plcus WHERE time >= '2024-01-01T00:00:00Z' " +
+        "AND time < '2024-01-01T00:00:00.0015Z' GROUP BY time(500u)")
+      def times(body: String): Seq[String] = {
+        val vs = mapper.readTree(body).at("/results/0/series/0/values")
+        (0 until vs.size()).map(vs.get(_).get(0).asText())
+      }
+      val (c1, b1) = get(h.port, s"/query?q=$q")
+      assert(c1 == 200, b1.take(300))
+      // trailing zeros trimmed, and no fraction at all on a whole second
+      assert(times(b1) == Seq("2024-01-01T00:00:00Z", "2024-01-01T00:00:00.0005Z",
+        "2024-01-01T00:00:00.001Z"), b1.take(300))
+      val (c2, b2) = get(h.port, s"/query?q=$q&epoch=u")
+      assert(c2 == 200)
+      assert(times(b2) == Seq("1704067200000000", "1704067200000500", "1704067200001000"),
+        b2.take(300))
+      assert(mapper.readTree(b2).at("/results/0/series/0/values/1/0").isNumber)
+      val c3 = new URI(s"http://127.0.0.1:${h.port}/query?q=$q").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      c3.setRequestProperty("Accept", "application/csv")
+      assert(c3.getResponseCode == 200)
+      val csv = new String(c3.getInputStream.readAllBytes(), "UTF-8").linesIterator.toSeq
+      c3.disconnect()
+      assert(csv == Seq("name,tags,time,n", "plcus,,1704067200000000000,1",
+        "plcus,,1704067200000500000,1", "plcus,,1704067200001000000,1"), csv.mkString("\n"))
+    } finally h.stop()
+  }
+
   test("/write accepts multi-field lines: one store point per field, alias = field key") {
     val store = java.nio.file.Files.createTempDirectory("graft-http-multifield").toFile
     val h = InfluxQLHttp.startStore(spark, store.toString)

@@ -61,7 +61,8 @@ class KmeansGateSpec extends SparkTestBase {
     val n = emb.count()
     val expectK = graft.functions.Kmeans.cellsFor(n)
     assert(expectK === 45, s"cellsFor($n) should be 45 at sf0.1")
-    val cells = spark.read.parquet(s"${idx.getPath}/lists")
+    val cells = spark.read.parquet(
+        VectorIndexStore.listsDir(idx.getPath, VectorIndexStore.generation(idx.getPath)))
       .select("cluster").distinct().count()
     assert(cells >= expectK - 5 && cells <= expectK,
       s"trained $cells populated cells for k=$expectK")

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * embeddings → tick → a probe finds them WITHOUT a full rebuild (the
   * centroid artifact is byte-identical across the incremental tick), and
   * the retrain threshold still triggers the full fold when delta dwarfs
-  * the indexed corpus.
+  * the indexed corpus. Every change commits one version through
+  * `CURRENT`; the crash-state tests put each kind of change in each state
+  * a crash can leave it in.
   */
 class VectorIndexStoreSpec extends SparkTestBase {
 
@@ -21,8 +23,16 @@ class VectorIndexStoreSpec extends SparkTestBase {
     .select("vec_id", "embedding")
 
   private def centroids(dir: String) =
-    spark.read.parquet(s"$dir/centroids.parquet")
+    spark.read.parquet(s"$dir/v${VectorIndexStore.generation(dir)}/centroids.parquet")
       .orderBy("cid").collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq
+
+  /** The current version's lists. */
+  private def lists(dir: String) =
+    spark.read.parquet(VectorIndexStore.listsDir(dir, VectorIndexStore.generation(dir)))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Float])] =
+    df.select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
 
   test("build → search returns exact cosine top-k from the probed cells only") {
     val dir = freshDir()
@@ -47,9 +57,7 @@ class VectorIndexStoreSpec extends SparkTestBase {
     // a new vector engineered to be the global nearest neighbor of itself:
     // clone vector 3's embedding under a fresh id
     val donor = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1)
-    val sq = spark; import sq.implicits._
-    val newVecs = Seq((100001L, donor)).toDF("vec_id", "embedding")
-    VectorIndexStore.append(spark, newVecs, dir)
+    VectorIndexStore.appendLocal(Seq((100001L, donor.toArray)), dir)
     assert(VectorIndexStore.staleCount(spark, dir) === 1L)
 
     // pre-tick: the staleness window — the probe does NOT see the new id
@@ -88,69 +96,16 @@ class VectorIndexStoreSpec extends SparkTestBase {
     }
   }
 
-  test("crash between fold and cleanup: the next tick does not duplicate delta vectors") {
-    val dir = freshDir()
-    VectorIndexStore.build(spark, corpus, dir)
-    val donor = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1)
-    val sq = spark; import sq.implicits._
-    VectorIndexStore.append(spark, Seq((100001L, donor)).toDF("vec_id", "embedding"), dir)
-    // simulate the worst crash window: the fold COMMITTED its list-append
-    // but died before clearing the marker — i.e. run a full tick, then
-    // resurrect delta/ as delta.folding/ with the same vector
-    assert(VectorIndexStore.tick(spark, dir)._1 === 1L)
-    Seq((100001L, donor)).toDF("vec_id", "embedding")
-      .write.parquet(s"$dir/delta.folding")
-    VectorIndexStore.tick(spark, dir) // recovery path
-    val copies = spark.read.parquet(s"$dir/lists")
-      .filter(col("vec_id") === 100001L).count()
-    assert(copies === 1L, s"recovery must not duplicate the folded vector (got $copies)")
-    assert(!new java.io.File(s"$dir/delta.folding").exists())
-    // the opposite window — fold never committed — must not LOSE the vector
-    Seq((100002L, donor)).toDF("vec_id", "embedding")
-      .write.parquet(s"$dir/delta.folding")
-    VectorIndexStore.tick(spark, dir)
-    assert(spark.read.parquet(s"$dir/lists")
-      .filter(col("vec_id") === 100002L).count() === 1L)
-  }
-
-  test("crash mid retrain-swap: an uncommitted build rolls back, a half-commit rolls forward") {
-    val dir = freshDir()
-    VectorIndexStore.build(spark, corpus, dir)
-    val before = spark.read.parquet(s"$dir/lists").count()
-    // uncommitted build: both .building dirs present, live index intact →
-    // next tick discards them and the index is unchanged
-    spark.read.parquet(s"$dir/centroids.parquet")
-      .write.parquet(s"$dir/centroids.building.parquet")
-    spark.read.parquet(s"$dir/lists").write.partitionBy("cluster")
-      .parquet(s"$dir/lists.building")
-    VectorIndexStore.tick(spark, dir)
-    assert(!new java.io.File(s"$dir/lists.building").exists())
-    assert(!new java.io.File(s"$dir/centroids.building.parquet").exists())
-    assert(spark.read.parquet(s"$dir/lists").count() === before)
-    // half-commit: centroids renamed (cb gone), lists swap pending → next
-    // tick adopts lists.building
-    val sq = spark; import sq.implicits._
-    val donor = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1)
-    spark.read.parquet(s"$dir/lists")
-      .unionByName(Seq((200001L, donor, 0)).toDF("vec_id", "embedding", "cluster"))
-      .write.partitionBy("cluster").parquet(s"$dir/lists.building")
-    VectorIndexStore.tick(spark, dir)
-    assert(spark.read.parquet(s"$dir/lists").count() === before + 1)
-    assert(spark.read.parquet(s"$dir/lists")
-      .filter(col("vec_id") === 200001L).count() === 1L)
-  }
-
   test("a delta larger than the retrain fraction triggers the full fold") {
     val dir = freshDir()
-    val sq = spark; import sq.implicits._
     val half = corpus.filter(col("vec_id") < 250L)
     val rest = corpus.filter(col("vec_id") >= 250L)
     VectorIndexStore.build(spark, half, dir)
-    VectorIndexStore.append(spark, rest, dir)
+    VectorIndexStore.appendLocal(rows(rest), dir)
     val (indexed, retrained) = VectorIndexStore.tick(spark, dir)
     assert(indexed === rest.count() && retrained, "delta > 50% of indexed must retrain")
     // the rebuilt index covers the full corpus
-    val n = spark.read.parquet(s"$dir/lists").count()
+    val n = lists(dir).count()
     assert(n === corpus.count())
   }
 
@@ -183,7 +138,7 @@ class VectorIndexStoreSpec extends SparkTestBase {
     VectorIndexStore.search(spark, dir, probe, topK = 3).collect(): Unit
     val centsG1 = centroids(dir)
     // retrain from a corpus 3x the indexed half — centroids move
-    VectorIndexStore.append(spark, rest, dir)
+    VectorIndexStore.appendLocal(rows(rest), dir)
     val (_, retrained) = VectorIndexStore.tick(spark, dir)
     assert(retrained)
     assert(VectorIndexStore.generation(dir) === 2L,
@@ -197,80 +152,15 @@ class VectorIndexStoreSpec extends SparkTestBase {
       s"post-retrain search must find vec 400 via the new centroids, got ${post.toSeq}")
     // incremental ticks leave centroids untouched but DO bump the
     // generation (r12: cell membership changed — the hot-cell cache must
-    // not serve the pre-fold cell), and the freshly folded vector is
-    // visible through the caches immediately
-    val sq = spark; import sq.implicits._
-    VectorIndexStore.append(spark,
-      Seq((300001L, donor)).toDF("vec_id", "embedding"), dir)
+    // not serve the pre-fold cell), by exactly one commit, and the freshly
+    // folded vector is visible through the caches immediately
+    VectorIndexStore.appendLocal(Seq((300001L, donor.toArray)), dir)
     assert(VectorIndexStore.tick(spark, dir) === ((1L, false)))
-    assert(VectorIndexStore.generation(dir) >= 3L,
-      "incremental fold must bump the generation (cell-cache invalidation); " +
-        "a post-fold lists compaction may add one more bump")
+    assert(VectorIndexStore.generation(dir) === 3L,
+      "an incremental fold is one commit: the generation goes up by exactly 1")
     val folded = VectorIndexStore.search(spark, dir, probe, topK = 3).collect()
     assert(folded.map(_.getLong(0)).contains(300001L),
       s"post-fold search must see the folded vector, got ${folded.toSeq}")
-  }
-
-  test("lists compaction: accreted fold files rewrite to ~one per cluster; results identical (r12)") {
-    val dir = freshDir()
-    val sq = spark; import sq.implicits._
-    VectorIndexStore.build(spark, corpus, dir)
-    val probe = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1).map(_.toDouble)
-    val donor = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1)
-    def listsFiles(): Int = {
-      val d = new java.io.File(s"$dir/lists")
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(cd => cd.listFiles().count(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))).sum
-    }
-    try {
-      val before = VectorIndexStore.search(spark, dir, probe, topK = 5).collect()
-      // accrete: folds append one file per touched cluster while the
-      // threshold is out of reach
-      spark.conf.set("graft.ann.compactFilesPerCell", "1000000")
-      val base = listsFiles()
-      for (i <- 0 until 4) {
-        VectorIndexStore.append(spark,
-          Seq((200001L + i, donor)).toDF("vec_id", "embedding"), dir)
-        VectorIndexStore.tick(spark, dir)
-      }
-      assert(listsFiles() === base + 4, "each fold should add one file")
-      // threshold 1: the next tick's fold pushes past one file per cell
-      // and the compaction rewrite collapses the accretion
-      spark.conf.set("graft.ann.compactFilesPerCell", "1")
-      VectorIndexStore.append(spark,
-        Seq((200100L, donor)).toDF("vec_id", "embedding"), dir)
-      VectorIndexStore.tick(spark, dir)
-      val nCells = Option(new java.io.File(s"$dir/lists").listFiles()).get
-        .count(_.getName.startsWith("cluster="))
-      assert(listsFiles() <= nCells, s"${listsFiles()} files over $nCells cells after compaction")
-      // content preserved: the original corpus hits are still served
-      val after = VectorIndexStore.search(spark, dir, probe, topK = 5).collect()
-      assert(after.head.getLong(0) === before.head.getLong(0))
-    } finally spark.conf.unset("graft.ann.compactFilesPerCell")
-  }
-
-  test("compaction crash states recover: half-written stage rolls back, post-rm stage rolls forward (r12)") {
-    val dir = freshDir()
-    VectorIndexStore.build(spark, corpus, dir)
-    val probe = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1).map(_.toDouble)
-    val lists = new java.io.File(s"$dir/lists")
-    val lc = new java.io.File(s"$dir/lists.compacting")
-    // (a) crash mid-rewrite: stage next to live lists → recovery rolls back
-    lc.mkdirs()
-    new java.io.File(lc, "cluster=0").mkdirs()
-    VectorIndexStore.tick(spark, dir) // recoverFolding runs first
-    assert(!lc.exists() && lists.exists(), "half-written stage must roll back")
-    assert(VectorIndexStore.search(spark, dir, probe, topK = 1).collect().nonEmpty)
-    // (b) crash between rm(lists) and rename: stage alone → roll forward
-    val gen0 = VectorIndexStore.generation(dir)
-    assert(lists.renameTo(lc)) // simulate: rewrite completed, rm(lists) ran
-    VectorIndexStore.tick(spark, dir)
-    assert(lists.exists() && !lc.exists(), "completed stage must roll forward")
-    assert(VectorIndexStore.generation(dir) > gen0, "adoption must bump the generation")
-    assert(VectorIndexStore.search(spark, dir, probe, topK = 1)
-      .collect().head.getLong(0) === 3L)
   }
 
   test("hot-cell cache: bit-identical to the Spark fine scan, and job-free once resident (r12)") {
@@ -292,5 +182,164 @@ class VectorIndexStoreSpec extends SparkTestBase {
     val plan = VectorIndexStore.search(spark, dir, probe, topK = 10)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("LocalRelation"), s"expected LocalRelation, got:\n$plan")
+  }
+
+  /** One clone of a member of every cell, under fresh ids from `base`: a
+    * fold of these touches every cell once (a clone assigns to its
+    * original's cell — same embedding, same centroids). */
+  private def onePerCell(dir: String, base: Long): Seq[(Long, Array[Float])] =
+    lists(dir).groupBy("cluster").agg(min(col("vec_id")).as("vec_id"))
+      .join(lists(dir).select("vec_id", "embedding"), "vec_id")
+      .select(col("cluster"), col("embedding")).collect().toSeq
+      .map(r => (base + r.getInt(0), r.getSeq[Float](1).toArray))
+
+  private def listsFiles(dir: String): (Int, Int) = {
+    val cellDirs = new java.io.File(
+      VectorIndexStore.listsDir(dir, VectorIndexStore.generation(dir))).listFiles()
+      .filter(_.getName.startsWith("cluster="))
+    (cellDirs.map(StoreLayout.dataFiles(_).size).sum, cellDirs.length)
+  }
+
+  test("lists compaction: accreted fold files rewrite to ~one per cluster; results identical (r12)") {
+    val dir = freshDir()
+    VectorIndexStore.build(spark, corpus, dir)
+    val probe = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1).map(_.toDouble)
+    val before = VectorIndexStore.search(spark, dir, probe, topK = 5).collect()
+    val (built, nCells) = listsFiles(dir)
+    assert(built === nCells, "a build writes one file per cell")
+    // three folds that touch every cell: one more file per cell each
+    for (round <- 1 to 3) {
+      VectorIndexStore.appendLocal(onePerCell(dir, 100000L * round), dir)
+      assert(VectorIndexStore.tick(spark, dir) === ((nCells.toLong, false)))
+      assert(listsFiles(dir) === ((nCells * (round + 1), nCells)),
+        s"fold $round should add one file per cell")
+    }
+    // the fourth would leave 5 files per cell, past the 4 the fold allows:
+    // it stages the lists as one rewrite instead, in the same one commit
+    val gen = VectorIndexStore.generation(dir)
+    VectorIndexStore.appendLocal(onePerCell(dir, 400000L), dir)
+    VectorIndexStore.tick(spark, dir)
+    assert(VectorIndexStore.generation(dir) === gen + 1)
+    assert(listsFiles(dir) === ((nCells, nCells)), "compaction leaves one file per cell")
+    val ids = lists(dir).select("vec_id").collect().map(_.getLong(0))
+    assert(ids.length === ids.distinct.length && ids.length === 500 + 4 * nCells)
+    // content preserved: the original corpus hits are still served
+    val after = VectorIndexStore.search(spark, dir, probe, topK = 5).collect()
+    assert(after.head.getLong(0) === before.head.getLong(0))
+  }
+
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    if (from.isDirectory) {
+      to.mkdirs()
+      from.listFiles().foreach(f => copyTree(f, new java.io.File(to, f.getName)))
+    } else java.nio.file.Files.copy(from.toPath, to.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+
+  /** The two states a crash can leave a change in, for the change the
+    * next tick makes to the index `setup` writes. The change runs once on
+    * a copy, for its staged version `v<g+1>` and its `CURRENT`. Then, each
+    * on a fresh copy of the index before the change:
+    *  1. an uncommitted `v<g+1>`, whole, or partial (half its cells);
+    *  2. a committed `CURRENT` with the folded delta files and `v<g>` still
+    *     on disk.
+    * After the next tick every vec_id is indexed exactly once, the
+    * generation is the change's, and the index is quiesced. */
+  private def crashStates(setup: String => Unit): Unit = {
+    import java.io.File
+    val pre = freshDir()
+    setup(pre)
+    val g0 = VectorIndexStore.generation(pre)
+    val want = ((if (VectorIndexStore.built(pre)) ids(lists(pre)) else Nil) ++
+      ids(spark.read.parquet(s"$pre/delta"))).sorted
+    val done = freshDir()
+    copyTree(new File(pre), new File(done))
+    VectorIndexStore.tick(spark, done)
+    val g1 = VectorIndexStore.generation(done)
+    assert(g1 === g0 + 1 && ids(lists(done)) === want)
+    val staged = new File(done, s"v$g1")
+    val states = Seq[(String, File => Unit)](
+      "whole uncommitted version" -> (d => copyTree(staged, new File(d, s"v$g1"))),
+      "partial uncommitted version" -> { d =>
+        copyTree(staged, new File(d, s"v$g1"))
+        val cellDirs = new File(d, s"v$g1/lists").listFiles().filter(_.isDirectory).sortBy(_.getName)
+        cellDirs.take(cellDirs.length / 2 + 1).foreach(StoreLayout.rmTree)
+      },
+      "committed, not cleaned up" -> { d =>
+        copyTree(staged, new File(d, s"v$g1"))
+        copyTree(new File(done, "CURRENT"), new File(d, "CURRENT"))
+        // the folded files are indexed now: they are not stale
+        assert(VectorIndexStore.staleCount(spark, d.getPath) === 0L)
+      })
+    states.foreach { case (name, crash) =>
+      val d = freshDir()
+      copyTree(new File(pre), new File(d))
+      crash(new File(d))
+      VectorIndexStore.tick(spark, d)
+      assert(VectorIndexStore.generation(d) === g1, name)
+      assert(ids(lists(d)) === want, s"$name: every vector indexed exactly once")
+      assert(VectorIndexStore.quiesced(d), name)
+      assert(VectorIndexStore.staleCount(spark, d) === 0L, name)
+    }
+  }
+
+  test("crash states of a bootstrap: the next tick finishes or redoes it") {
+    crashStates(dir => VectorIndexStore.appendLocal(rows(corpus), dir))
+  }
+
+  test("crash states of a retrain: the next tick finishes or redoes it") {
+    crashStates { dir =>
+      VectorIndexStore.build(spark, corpus.filter(col("vec_id") < 250L), dir)
+      VectorIndexStore.appendLocal(rows(corpus.filter(col("vec_id") >= 250L)), dir)
+    }
+  }
+
+  test("crash states of an incremental fold: the next tick finishes or redoes it") {
+    crashStates { dir =>
+      VectorIndexStore.build(spark, corpus, dir)
+      VectorIndexStore.appendLocal(onePerCell(dir, 100000L), dir)
+    }
+  }
+
+  test("crash states of a compacting fold: the next tick finishes or redoes it") {
+    crashStates { dir =>
+      VectorIndexStore.build(spark, corpus, dir)
+      for (round <- 1 to 4) {
+        VectorIndexStore.appendLocal(onePerCell(dir, 100000L * round), dir)
+        if (round < 4) VectorIndexStore.tick(spark, dir)
+      }
+    }
+  }
+
+  test("an index in the previous layout is adopted on the first tick; a staging leftover is refused by name") {
+    import java.io.File
+    val dir = freshDir()
+    VectorIndexStore.build(spark, corpus, dir)
+    VectorIndexStore.build(spark, corpus, dir) // generation 2
+    // the previous layout: gen, centroids.parquet and lists/ at the top
+    StoreLayout.move(new File(dir, "v2/centroids.parquet"), new File(dir, "centroids.parquet"))
+    StoreLayout.move(new File(dir, "v2/lists"), new File(dir, "lists"))
+    StoreLayout.rmTree(new File(dir, "v2"))
+    new File(dir, "CURRENT").delete(): Unit
+    java.nio.file.Files.writeString(new File(dir, "gen").toPath, "2"): Unit
+    assert(!VectorIndexStore.built(dir))
+    // a leftover of that layout's own protocol: refused, named, untouched
+    val leftover = new File(dir, "lists.building")
+    leftover.mkdirs()
+    val e = intercept[IllegalStateException](VectorIndexStore.tick(spark, dir))
+    assert(e.getMessage.contains("lists.building"), e.getMessage)
+    assert(new File(dir, "lists").isDirectory && new File(dir, "gen").isFile)
+    StoreLayout.rmTree(leftover)
+    // adopted as v2, then the pending delta folds into v3
+    val donor = corpus.filter(col("vec_id") === 3L).head().getSeq[Float](1)
+    VectorIndexStore.appendLocal(Seq((100001L, donor.toArray)), dir)
+    assert(VectorIndexStore.tick(spark, dir) === ((1L, false)))
+    assert(VectorIndexStore.generation(dir) === 3L)
+    assert(new File(dir).list().sorted.toSeq === Seq("CURRENT", "delta", "v3"))
+    assert(ids(lists(dir)) === (0L until 500L) :+ 100001L)
+    val hits = VectorIndexStore.search(spark, dir, donor.map(_.toDouble), topK = 2).collect()
+    assert(hits.map(_.getLong(0)).toSet === Set(3L, 100001L))
   }
 }
