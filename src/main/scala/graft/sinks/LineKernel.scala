@@ -123,8 +123,22 @@ object LineKernel {
     * shortest digits (`Double.toString`, plain `int.frac` form in the
     * decimal range). The Formatter's `%.2f` rounds the same digits the
     * same way, so 1.005 gives 101, not the 100 its binary value would.
+    *
+    * The digits lie within ulp(mag)/2 of `mag`, and `t = mag*100` within
+    * ulp(t)/2 of the exact product, so the digits times 100 lie within
+    * 50·ulp(mag) + ulp(t)/2 of `t`. Unless `t`'s fraction is nearer 0.5
+    * than a bound above that, it rounds on the same side as the digits
+    * would, and no digits are printed; near a `.xx5` boundary they are.
     */
-  private def hundredths(mag: Double): Long = {
+  private[sinks] def hundredths(mag: Double): Long = {
+    val t = mag * 100
+    val f = math.floor(t)
+    val r = t - f
+    if (math.abs(r - 0.5) > 64 * math.ulp(mag) + math.ulp(t)) f.toLong + (if (r > 0.5) 1 else 0)
+    else digitHundredths(mag)
+  }
+
+  private def digitHundredths(mag: Double): Long = {
     val s = java.lang.Double.toString(mag)
     val dot = s.indexOf('.')
     var cents = 0L

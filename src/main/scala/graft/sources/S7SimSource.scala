@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -22,11 +23,14 @@ import scala.jdk.CollectionConverters._
   * onward (schema, partitioning, decode via the DecodeS7 expression) is
   * the real pipeline.
   *
-  * Scale/partitioning: ONE InputPartition PER PLC per micro-batch — the
-  * Spark-native form of the reference's process-per-PLC model
-  * (InfluxConnector2.py:288-291, README.md:71): devices poll in parallel
-  * across executors, each partition owning its device connection
-  * exclusively (no shared-client locks, ref :143-145).
+  * Scale/partitioning: the reference runs one OS process per PLC
+  * (InfluxConnector2.py:288-291, README.md:71); here the devices are the
+  * partitions of one source. A micro-batch plans min(devices with
+  * registers, `defaultParallelism`) input partitions, each a fixed group
+  * of devices balanced by register count ([[S7SimSource.assign]]), so a
+  * batch is a few well-sized tasks however large the fleet, and each
+  * device is still polled by exactly one task (no shared-client locks,
+  * ref :143-145).
   *
   * What each device polls is its register list ([[S7SimDevice]]). With
   * the `catalog` option (the XML tag catalog, parsed by
@@ -132,6 +136,27 @@ object S7SimSource {
     }
   }
 
+  /** The devices each input partition polls: the devices with registers
+    * in min(their number, `parallelism`) non-empty groups, balanced by
+    * register count (the rows a device yields per tick). Largest device
+    * first, each to the group with the fewest registers so far (the lower
+    * index on a tie), so no group exceeds another by more than one
+    * device's registers; a group lists its devices by `plcIdx`. The same
+    * input always gives the same groups.
+    */
+  private[sources] def assign(devices: Seq[S7SimDevice], parallelism: Int): Seq[Seq[S7SimDevice]] = {
+    val polled = devices.filter(_.registers.nonEmpty)
+    val n = math.min(polled.size, parallelism)
+    val groups = Array.fill(n)(Vector.empty[S7SimDevice])
+    val load = new Array[Long](n)
+    polled.sortBy(d => (-d.registers.size, d.plcIdx)).foreach { d =>
+      val g = load.indices.minBy(i => (load(i), i))
+      groups(g) :+= d
+      load(g) += d.registers.size
+    }
+    groups.toSeq.map(_.sortBy(_.plcIdx))
+  }
+
   /** The S7 type code register `tagIdx` reads as. */
   def typeCode(tagIdx: Int): Int = TypeCycle(tagIdx % 4)
 
@@ -165,7 +190,9 @@ private[sources] class S7SimTable(devices: Seq[S7SimDevice], intervalMs: Long,
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = S7SimSource.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new S7SimMicroBatchStream(devices, intervalMs, ticksPerPoll)
+          new S7SimMicroBatchStream(
+            S7SimSource.assign(devices, SparkSession.active.sparkContext.defaultParallelism),
+            intervalMs, ticksPerPoll)
       }
     }
 }
@@ -174,7 +201,10 @@ private[sources] case class TickOffset(tick: Long) extends Offset {
   override def json(): String = tick.toString
 }
 
-private[sources] class S7SimMicroBatchStream(devices: Seq[S7SimDevice], intervalMs: Long,
+/** `groups` are the devices each input partition polls, as
+  * [[S7SimSource.assign]] planned them; every micro-batch reuses them.
+  */
+private[sources] class S7SimMicroBatchStream(groups: Seq[Seq[S7SimDevice]], intervalMs: Long,
     ticksPerPoll: Long = 1L)
     extends MicroBatchStream with SupportsAdmissionControl {
   // `ticksPerPoll` simulated ticks become available per latestOffset poll
@@ -208,10 +238,7 @@ private[sources] class S7SimMicroBatchStream(devices: Seq[S7SimDevice], interval
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (tickOf(start), tickOf(end))
-    // Process-per-PLC → partition-per-PLC: each device polls independently;
-    // a device with nothing to poll gets no partition
-    devices.filter(_.registers.nonEmpty)
-      .map(d => S7SimPartition(d, s, e, intervalMs): InputPartition).toArray
+    groups.map(g => S7SimPartition(g, s, e, intervalMs): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -219,30 +246,46 @@ private[sources] class S7SimMicroBatchStream(devices: Seq[S7SimDevice], interval
 }
 
 private[sources] case class S7SimPartition(
-    device: S7SimDevice, startTick: Long, endTick: Long, intervalMs: Long)
+    devices: Seq[S7SimDevice], startTick: Long, endTick: Long, intervalMs: Long)
   extends InputPartition
 
-/** Walks the device's register list once per tick. Everything but the
-  * buffer depends only on the register or the tick, so it is built once
-  * per partition or per tick; a row allocates only its buffer and its
-  * value array.
+/** Walks each device of the partition in turn, and each device's register
+  * list once per tick. Everything but the buffer depends only on the
+  * device, the register or the tick, so it is built once per device or per
+  * tick; a row allocates only its buffer and its value array.
   */
 private[sources] class S7SimReader(p: S7SimPartition) extends PartitionReader[InternalRow] {
-  private val plcIdx = p.device.plcIdx
-  private val regs = p.device.registers.map(_.idx).toArray
-  private val plc = UTF8String.fromString(p.device.plc)
-  private val aliases = p.device.registers.map(r => UTF8String.fromString(r.alias)).toArray
-  private val typeCodes = regs.map(S7SimSource.typeCode)
-  private val bits = regs.map(S7SimSource.bit)
-  private var tick = p.startTick
-  private var ts: Any = micros(tick) // boxed once per tick
+  private val devices = p.devices.iterator
+  private var plcIdx = 0
+  private var regs = Array.emptyIntArray
+  private var plc: UTF8String = _
+  private var aliases: Array[UTF8String] = _
+  private var typeCodes: Array[Int] = _
+  private var bits: Array[Int] = _
+  private var tick = p.endTick // no device yet: the first next() starts one
+  private var ts: Any = null // boxed once per tick
   private var r = -1
 
   private def micros(t: Long): Long = S7SimSource.BaseMicros + t * p.intervalMs * 1000L
 
+  private def start(d: S7SimDevice): Unit = {
+    plcIdx = d.plcIdx
+    regs = d.registers.map(_.idx).toArray
+    plc = UTF8String.fromString(d.plc)
+    aliases = d.registers.map(r => UTF8String.fromString(r.alias)).toArray
+    typeCodes = regs.map(S7SimSource.typeCode)
+    bits = regs.map(S7SimSource.bit)
+    tick = p.startTick
+    ts = micros(tick)
+    r = 0
+  }
+
   override def next(): Boolean = {
     r += 1
     if (r >= regs.length) { r = 0; tick += 1; ts = micros(tick) }
+    // a device's last tick is done: the next device starts at the first
+    // tick (planning gives no device without registers)
+    while (tick >= p.endTick && devices.hasNext) start(devices.next())
     tick < p.endTick
   }
 

@@ -131,6 +131,39 @@ class LineProtocolSpec extends SparkTestBase {
       s"expected format_line inside a WholeStageCodegen stage in:\n$plan")
   }
 
+  /** Hundredths from the shortest digits alone: `Double.toString`'s integer
+    * part and first three decimals, HALF_UP at the third. The reference for
+    * the kernel's arithmetic fast path.
+    */
+  private def digitHundredths(mag: Double): Long = {
+    val s = java.lang.Double.toString(mag)
+    val dot = s.indexOf('.')
+    def frac(k: Int): Int = if (dot + k < s.length) s.charAt(dot + k) - '0' else 0
+    s.substring(0, dot).toLong * 100 + frac(1) * 10 + frac(2) + (if (frac(3) >= 5) 1 else 0)
+  }
+
+  test("property: the kernel's hundredths equal the shortest digits' HALF_UP rounding") {
+    val rnd = new scala.util.Random(20241020L)
+    val n = 200000
+    // log-uniform over the decimal range [1e-3, 1e7)
+    val logUniform = Iterator.fill(n)(math.pow(10, -3 + 10 * rnd.nextDouble()))
+    // (k+0.5)/100: the .xx5 boundaries, and up to 4 ulps either side
+    val ties = Iterator.fill(n) {
+      val k = (rnd.nextDouble() * 1e9).toLong
+      var x = (k + 0.5) / 100
+      val steps = rnd.nextInt(9) - 4
+      (0 until steps.abs).foreach(_ => x = if (steps > 0) Math.nextUp(x) else Math.nextDown(x))
+      x
+    }
+    // one-decimal floats widened to double, as DecodeS7 gives S7 REALs
+    val widened = Iterator.fill(n)((rnd.nextInt(100000000) / 10.0f).toDouble)
+    val values = (logUniform ++ ties ++ widened).filter(x => x >= 1e-3 && x < 1e7).toVector
+    assert(values.size > 2 * n)
+    val bad = values.filter(x => LineKernel.hundredths(x) != digitHundredths(x))
+    assert(bad.isEmpty, bad.take(3).map(x => s"$x: ${LineKernel.hundredths(x)} != ${digitHundredths(x)}")
+      .mkString("; "))
+  }
+
   test("a NULL value gives a NULL line, not the malformed `m a=nu ts`") {
     import spark.implicits._
     val df = Seq(("m", "a", Some(1.0), 5L), ("m", "a", None, 6L)).toDF("m", "a", "v", "ts")
