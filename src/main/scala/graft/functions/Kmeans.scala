@@ -55,20 +55,6 @@ object Kmeans {
     seeds
   }
 
-  /** One Lloyd update: assign (projection), per-dim floored integer mean
-    * (one k×d aggregate), empty clusters keep their previous centroid. */
-  def lloydStep(qdf: DataFrame, cents: Seq[(Int, Seq[Long])]): Seq[(Int, Seq[Long])] = {
-    val rows = qdf.withColumn("__a", assignCol("qv", cents))
-      .select(col("__a.cid").as("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
-      .groupBy("cid", "pos")
-      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("cv"))
-      .collect()
-    val byCid = rows.groupBy(_.getInt(0)).map { case (cid, rs) =>
-      cid -> (rs.sortBy(_.getInt(1)).map(_.getLong(2)).toVector: Seq[Long])
-    }
-    cents.map { case (cid, old) => cid -> byCid.getOrElse(cid, old) }
-  }
-
   /** Full training run: (seed centroids, trained centroids). */
   def train(qdf: DataFrame, k: Int, iters: Int): (Seq[(Int, Seq[Long])], Seq[(Int, Seq[Long])]) = {
     val seeds = farthestSeeds(qdf, k)
@@ -141,10 +127,11 @@ object Kmeans {
       df.join(asg, "vec_id")
     }
 
-  /** One Lloyd update via [[assignScaled]] — same per-dim floored integer
-    * mean, empty clusters keep their previous centroid; only k×d longs
-    * reach the driver. */
-  def lloydStepScaled(qdf: DataFrame, cents: Seq[(Int, Seq[Long])]): Seq[(Int, Seq[Long])] = {
+  /** One Lloyd update of both trainers: assign ([[assignScaled]] — the
+    * literal projection for small k), per-dim floored integer mean (one
+    * k×d aggregate), empty clusters keep their previous centroid; only
+    * k×d longs reach the driver. */
+  def lloydStep(qdf: DataFrame, cents: Seq[(Int, Seq[Long])]): Seq[(Int, Seq[Long])] = {
     val rows = assignScaled(qdf, cents)
       .select(col("cluster").as("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
       .groupBy("cid", "pos")
@@ -167,7 +154,7 @@ object Kmeans {
       qdf.orderBy(xxhash64(col("vec_id")), col("vec_id"))
         .select("vec_id", "qv").limit(256 * k))
     var c = hashSeeds(sample, k)
-    for (_ <- 1 to iters) c = lloydStepScaled(sample, c)
+    for (_ <- 1 to iters) c = lloydStep(sample, c)
     c
   }
 }

@@ -3,6 +3,7 @@ package graft.influxql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sinks.StoreLayout
 import InfluxQLAst._
 
 /** Batch executor for REGISTERED continuous queries — the InfluxDB 1.x CQ
@@ -24,10 +25,11 @@ import InfluxQLAst._
   *    (else `EVERY`, else one bucket), rounded up to whole buckets —
   *    late-arriving points inside the horizon are folded in by
   *    recomputation, InfluxDB's RESAMPLE FOR contract;
-  *  - results land via DYNAMIC partition overwrite of exactly the
-  *    recomputed `(measurement=<target>, date=…)` partitions: re-runs are
-  *    idempotent, recomputation replaces, and untouched history is never
-  *    rewritten — the at-scale property (a 100 TB store re-rolls one
+  *  - each recomputed `(measurement=<target>, date=…)` partition that has
+  *    rows is swapped in whole by [[StoreLayout.replace]], the store's
+  *    partition commit: re-runs are idempotent, recomputation replaces, a
+  *    crash leaves the old day or the new one, and untouched history is
+  *    never rewritten — the at-scale property (a 100 TB store re-rolls one
   *    day's partitions, not the table).
   *
   * The streaming twin is [[InfluxQLPlanner.continuous]] (same SELECT
@@ -41,8 +43,8 @@ object CqRunner {
 
   /** Run every registered CQ that is due at `nowNs`. Returns one [[CqRun]]
     * per executed CQ (skipped = not listed). Callers serialize ticks with
-    * store writers (the HTTP server's write lock) — the runner itself does
-    * one dynamic-overwrite write per due CQ.
+    * store writers (the HTTP server's write lock) — the runner itself
+    * swaps in one partition per recomputed day that has rows.
     *
     * Per-CQ error ISOLATION: one failing CQ (source measurement dropped,
     * plan error, a stale registration) logs and the tick continues with
@@ -71,11 +73,11 @@ object CqRunner {
     val hiNs = Math.floorDiv(nowNs, bucketNs) * bucketNs
     val horizonNs = cq.forSec.orElse(cq.everySec).map(_ * 1000000000L).getOrElse(bucketNs)
     val nBuckets = math.max(1L, -Math.floorDiv(-horizonNs, bucketNs)) // ceil
-    // The write replaces whole (target, date=) partitions — the store's
+    // Each write replaces a whole (target, date=) partition — the store's
     // retention/shard granularity — so the recompute range must cover
     // every bucket of each touched day: extend the horizon's lower bound
     // to its UTC day start (same-day rollups outside the horizon would
-    // otherwise be dropped by the overwrite). Buckets past `hi` cannot
+    // otherwise be dropped by the swap). Buckets past `hi` cannot
     // exist yet (no earlier run had a larger hi), so the upper side needs
     // no extension. InfluxDB recomputes at shard granularity for the same
     // reason.
@@ -124,23 +126,17 @@ object CqRunner {
       }
     val points = df.select(
       col("time").cast("timestamp").as("ts"),
-      lit(target).as("measurement"),
       aliasCol.as("alias"),
       col(aggCols.head).cast("double").as("value"),
       tagsCol.as("tags"))
 
-    val out = points.withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
-    val rows = out.count()
-    // dynamic overwrite: ONLY the (target, recomputed-date) partitions are
-    // replaced; an empty result still advances the high-water mark but
-    // must not touch the store (overwrite with an empty frame in dynamic
-    // mode rewrites nothing, but skip the job entirely)
-    if (rows > 0)
-      out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("measurement", "date")
-        .parquet(storeDir)
+    // ONLY the recomputed days that have rows are replaced; an empty
+    // result still advances the high-water mark but touches no partition
+    val date = date_format(col("ts"), "yyyy-MM-dd")
+    val days = points.groupBy(date).count().collect()
+    days.foreach(r => StoreLayout.replace(
+      StoreLayout.partitionDir(storeDir, target, r.getString(0)), points.filter(date === r.getString(0))))
     StoreMeta.setCqLastHi(storeDir, cq.db, cq.name, hiNs)
-    Some(CqRun(cq.name, cq.db, target, loNs, hiNs, rows))
+    Some(CqRun(cq.name, cq.db, target, loNs, hiNs, days.map(_.getLong(1)).sum))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{PointStoreDirect, StoreLayout}
+import graft.sinks.{PointStore, PointStoreDirect, StoreLayout}
 import graft.tables.Tables
 import InfluxQLAst._
 
@@ -435,7 +435,7 @@ object InfluxQLPlanner {
     StoreLayout.partitions(dir).map { case StoreLayout.Partition(m, start, _) =>
       val rp = rps.find(r => r.db == m && r.isDefault)
       val expiry = rp.filter(_.durationSec > 0)
-        .map(r => s"${start.plusDays(1 + r.durationSec / 86400)}T00:00:00Z")
+        .map(r => s"${start.plusDays(1L + PointStore.retentionDays(r.durationSec))}T00:00:00Z")
         .getOrElse("")
       (Math.abs(scala.util.hashing.MurmurHash3.stringHash(s"$m/$start").toLong),
         m, rp.map(_.name).getOrElse("autogen"), start.toString, s"${start}T00:00:00Z",
@@ -1094,7 +1094,7 @@ object InfluxQLPlanner {
         if (durSec < 86400L)
           throw InfluxQLParseException(
             "retention duration under 1d not supported (date-partitioned store)")
-        graft.sinks.PointStore.expireRetention(dir, (durSec / 86400L).toInt, today)
+        PointStore.expireRetention(dir, PointStore.retentionDays(durSec), today)
       case other => throw InfluxQLParseException(s"not a retention policy: $other")
     }
 

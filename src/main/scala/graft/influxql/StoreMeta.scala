@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.sinks.StoreLayout
+import graft.sinks.{PointStore, StoreLayout}
 import InfluxQLAst._
 
 /** File-backed admin metadata for a point store — the database /
@@ -170,13 +170,8 @@ object StoreMeta {
       listRps(store, Some(db))
         .find(rp => rp.isDefault && rp.durationSec >= 86400L)
         .toSeq.flatMap { rp =>
-          graft.sinks.PointStore.expireRetention(
-            // Ceil, not floor: a date= partition may only drop once its
-            // NEWEST point is past the duration (InfluxDB drops a shard
-            // group when the whole group is expired). Floor on a
-            // non-day-multiple duration (36h -> 1) would delete points
-            // still inside the declared window.
-            store, ((rp.durationSec + 86399L) / 86400L).toInt, today, Some(db))
+          PointStore.expireRetention(
+            store, PointStore.retentionDays(rp.durationSec), today, Some(db))
         }
     }
 

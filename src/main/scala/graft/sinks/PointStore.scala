@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Batch point storage — SURVEY.md §2.1 S4/S5.
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * S4: the reference creates one InfluxDB database per PLC
   * (`create_database(plc_ip)`, Linux/InfluxConnector2.py:107-109). The
   * Spark-native equivalent is a measurement-partitioned table layout:
-  * `partitionBy("measurement")` gives per-device directories, so per-PLC
+  * `measurement=` directories give per-device partitions, so per-PLC
   * queries prune to one partition — the same isolation property, but one
   * catalog entry instead of n databases. At 100 TB add a time bucket
   * (`date`) as a second partition column so retention = dropping date
@@ -20,15 +21,18 @@ import org.apache.spark.sql.functions._
   */
 object PointStore {
 
-  /** Write points partitioned by device and day. Expects
-    * (ts, measurement, alias, value).
-    */
-  def writePartitioned(points: DataFrame, dir: String): Unit =
-    points
-      .withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("measurement", "date")
-      .parquet(dir)
+  /** Append points, (ts, measurement, alias, value), to the store at `dir`:
+    * each task sorts its rows by measurement, then `ts`, and streams them
+    * through [[PointStoreDirect.appendRuns]]. A retried task appends again
+    * (at-least-once). A point without a time or measurement is skipped. */
+  def writePartitioned(points: DataFrame, dir: String): Unit = {
+    val qe = points.filter(col("ts").isNotNull && col("measurement").isNotNull)
+      .select(unix_micros(col("ts")).as("us"), col("alias").cast("string"), col("value").cast("double"),
+        lit(null).cast("string"), col("measurement").cast("string").as("m"))
+      .sortWithinPartitions("m", "us").queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("writePartitioned"))(
+      qe.toRdd.foreachPartition(PointStoreDirect.appendRuns(_, dir)))
+  }
 
   /** Split a decoded frame into (good, deadLetter) on value validity —
     * P4's predicate, with the rejects kept instead of dropped.
@@ -39,6 +43,11 @@ object PointStore {
       .withColumn("error", lit("decode returned null (bad buffer/type)"))
     (good, dead)
   }
+
+  /** The `ttlDays` of a retention duration, rounded UP: a partition drops
+    * only once its NEWEST point is past the duration (InfluxDB drops a
+    * whole expired shard group); floor (36h → 1) drops points inside it. */
+  def retentionDays(durationSec: Long): Int = ((durationSec + 86399L) / 86400L).toInt
 
   /** Retention policy (the InfluxDB `CREATE RETENTION POLICY` surface,
     * ref README.md:3,13): drop `date=` partitions older than `ttlDays`

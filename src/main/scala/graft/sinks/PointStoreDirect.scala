@@ -9,7 +9,9 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{DoubleType, StringType, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver-direct appends into the point store's
   * `measurement=…/date=…` parquet layout — NO Spark job.
@@ -24,12 +26,6 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructType, Timestamp
   * append, with the file fully closed before the 204 goes out, so a scan
   * planned after the ack always lists it.
   *
-  * Layout compatibility: the same physical schema Spark writes for
-  * [[PointStore.writePartitioned]] rows (ts TIMESTAMP(MICROS, UTC),
-  * alias UTF8, value DOUBLE; measurement/date as partition directories,
-  * Spark-escaped), so directly-written and Spark-written files coexist in
-  * one table and every existing scan/DELETE/DROP path reads both.
-  *
   * Commit and recovery ([[StoreLayout]]): an append renames a finished
   * hidden file into place, so appends run beside scans and each other (the
   * HTTP server's store READ lock); compaction is [[StoreLayout.replace]]
@@ -37,9 +33,9 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructType, Timestamp
   * [[StoreLayout.recover]] when the store opens and before each compaction.
   *
   * Scale note: this is the CONTROL-plane ingest door (panels, daemons,
-  * influx-CLI inserts). Bulk 100 TB ingest still goes through the
-  * streaming pipeline / [[PointStore.writePartitioned]], which write from
-  * executors.
+  * influx-CLI inserts). Bulk 100 TB ingest goes through the streaming
+  * pipeline / [[PointStore.writePartitioned]], whose tasks write the same
+  * files from the executors through [[appendRuns]].
   */
 object PointStoreDirect {
 
@@ -91,9 +87,7 @@ object PointStoreDirect {
 
   private val conf = new Configuration()
 
-  /** UTC day of an epoch-ns timestamp — the store's `date=` partition
-    * value (PointStore uses date_format(ts) under the UTC session).
-    */
+  /** UTC day of an epoch-ns timestamp — the store's `date=` value. */
   def utcDate(tsNs: Long): String =
     LocalDate.ofInstant(Instant.ofEpochSecond(
       Math.floorDiv(tsNs, 1000000000L),
@@ -138,31 +132,47 @@ object PointStoreDirect {
 
   /** Append `points` to the store: one parquet file per touched
     * (measurement, date) partition, written synchronously on the calling
-    * thread through [[StoreLayout.appendFile]] (hidden while written,
-    * renamed into place after close). Unique filenames (UUID) make
-    * concurrent appends physically disjoint — there is no shared
-    * `_temporary` staging dir to race on, unlike two concurrent Spark
-    * append jobs. Written through java.nio, not a Hadoop FileSystem: no
-    * checksum sidecar is left behind under the temporary name.
+    * thread through [[appendRuns]]. Unique filenames (UUID) make
+    * concurrent appends physically disjoint, with no shared staging dir.
+    * Written through java.nio, not a Hadoop FileSystem: no checksum
+    * sidecar is left behind under the temporary name.
     */
   def append(points: Seq[Point], storeDir: String): Unit =
-    points.groupBy(p => (p.measurement, utcDate(p.tsNs))).foreach {
-      case ((measurement, date), ps) =>
-        StoreLayout.appendFile(StoreLayout.partitionDir(storeDir, measurement, date)) { tmp =>
-          val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
-            .withType(schema)
-            .withConf(conf)
-            .withCompressionCodec(CompressionCodecName.SNAPPY)
-            .build()
-          val gf = new SimpleGroupFactory(schema)
-          try ps.foreach { p =>
-            val g = gf.newGroup()
-            g.add("ts", Math.floorDiv(p.tsNs, 1000L)) // ns → µs, the column unit
-            g.add("alias", p.alias)
-            g.add("value", p.value)
-            p.tags.foreach(g.add("tags", _)) // optional — null when untagged
-            writer.write(g)
-          } finally writer.close()
-        }
+    appendRuns(points.groupBy(p => (p.measurement, utcDate(p.tsNs))).valuesIterator.flatten
+      .map(p => InternalRow(Math.floorDiv(p.tsNs, 1000L), // ns → µs, the column unit
+        UTF8String.fromString(p.alias), p.value, p.tags.map(UTF8String.fromString).orNull,
+        UTF8String.fromString(p.measurement))), storeDir)
+
+  /** Append `rows`, (ts µs, alias, value, tags, measurement), streamed:
+    * each run sharing a measurement and UTC day is one file, committed by
+    * [[StoreLayout.appendFile]]. A row is not read again once the next one
+    * is asked for, so a source may reuse one row object. */
+  private[sinks] def appendRuns(rows: Iterator[InternalRow], storeDir: String): Unit = {
+    val it = rows.buffered
+    def day(r: InternalRow) = Math.floorDiv(r.getLong(0), 86400L * 1000000L)
+    while (it.hasNext) {
+      val (m, d) = (it.head.getUTF8String(4).clone(), day(it.head))
+      val run = new Iterator[InternalRow] {
+        def hasNext = it.hasNext && it.head.getUTF8String(4) == m && day(it.head) == d
+        def next() = it.next()
+      }
+      StoreLayout.appendFile(
+          StoreLayout.partitionDir(storeDir, m.toString, LocalDate.ofEpochDay(d).toString)) { tmp =>
+        val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+          .withType(schema)
+          .withConf(conf)
+          .withCompressionCodec(CompressionCodecName.SNAPPY)
+          .build()
+        val gf = new SimpleGroupFactory(schema)
+        try run.foreach { r =>
+          val g = gf.newGroup()
+          g.add("ts", r.getLong(0))
+          if (!r.isNullAt(1)) g.add("alias", r.getString(1))
+          if (!r.isNullAt(2)) g.add("value", r.getDouble(2))
+          if (!r.isNullAt(3)) g.add("tags", r.getString(3))
+          writer.write(g)
+        } finally writer.close()
+      }
     }
+  }
 }

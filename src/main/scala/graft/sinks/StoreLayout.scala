@@ -14,9 +14,11 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * `measurement=plc%3A1`), so Spark-written and directly written data share
   * one tree. Spark's listing skips names starting with `.` or `_`; every
   * state between two commits lives under such a name:
-  *  - [[appendFile]]: `.part-<id>.inprogress`, renamed into place;
-  *  - [[replace]]: rows written to `.date=X.next`, `date=X` renamed to
-  *    `.date=X.old`, `.next` renamed to `date=X` (the commit), `.old` deleted;
+  *  - [[appendFile]] (`/write`, stream and bulk appends):
+  *    `.part-<id>.inprogress`, renamed into place;
+  *  - [[replace]] (compaction, DELETE, DROP SERIES, CQ rollups): rows written
+  *    to `.date=X.next`, `date=X` renamed to `.date=X.old` (if there is one),
+  *    `.next` renamed to `date=X` (the commit), `.old` deleted;
   *  - [[drop]]: renamed to `.<name>.dropped` (the commit), then deleted.
   * [[recover]] resolves what a crash at any step leaves. `replace`, `drop`
   * and `recover` run with no scan or other mutation in flight (the HTTP
@@ -80,13 +82,13 @@ object StoreLayout {
   private def hidden(dir: File, tag: String): File =
     new File(dir.getParentFile, s".${dir.getName}.$tag")
 
-  /** Swap `rows` in for the files of `dir`. `rows` may read `dir`: they are
-    * written out in full before `dir` moves. */
+  /** Swap `rows` in for the files of `dir` (or a new `dir`). `rows` may
+    * read `dir`: they are written out in full before `dir` moves. */
   def replace(dir: File, rows: DataFrame): Unit = {
     val (next, old) = (hidden(dir, "next"), hidden(dir, "old"))
     rows.write.mode("overwrite").parquet(next.getPath)
     rmTree(old) // a leftover beside a live dir is garbage (see recover)
-    move(dir, old)
+    if (dir.exists()) move(dir, old)
     move(next, dir)
     rmTree(old)
   }

@@ -734,15 +734,15 @@ object Pipelines {
       .queryName("graft-ingest")
       .start()
 
-  /** The same assembly sunk into the queryable point store
-    * (PointStore.writePartitioned layout — measurement + date partitions),
-    * which [[graft.influxql.InfluxQLPlanner.sqlStore]] then queries back:
-    * the reference's full loop (poll → decode → store → InfluxQL →
-    * Grafana) in one library. NOTE the store append is at-least-once
-    * across batch REPLAYS (a restarted failed batch re-appends);
-    * production would suffix files with the batch id and prune on read,
-    * or sink to a transactional table format — the line-protocol sink
-    * shows the batchId-idempotent pattern.
+  /** The same assembly sunk into the queryable point store by
+    * PointStore.writePartitioned (each task's files renamed into place by
+    * the store's append commit), which [[graft.influxql.InfluxQLPlanner.sqlStore]]
+    * queries back: the reference's full loop (poll → decode → store →
+    * InfluxQL → Grafana) in one library. NOTE the store append is
+    * at-least-once across batch REPLAYS (a restarted failed batch
+    * re-appends); production would suffix files with the batch id and prune
+    * on read, or sink to a transactional table format — the line-protocol
+    * sink shows the batchId-idempotent pattern.
     */
   def ingestToStore(spark: SparkSession, configXml: String, storeDir: String,
       checkpointDir: String, trigger: Trigger = Trigger.AvailableNow(),

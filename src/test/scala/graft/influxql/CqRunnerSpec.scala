@@ -109,7 +109,9 @@ class CqRunnerSpec extends SparkTestBase {
       var got = Map.empty[(String, String), Double]
       while (got.isEmpty && System.currentTimeMillis() < deadline) {
         Thread.sleep(500)
-        if (new java.io.File(store, "measurement=plc1_live").isDirectory)
+        // the tick swaps a day in through a hidden `.date=….next`, so the
+        // measurement directory can exist before its first day does
+        if (new java.io.File(store, "measurement=plc1_live/date=2024-01-01").isDirectory)
           got = spark.read.parquet(s"$store/measurement=plc1_live")
             .select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"), col("alias"), col("value"))
             .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
@@ -118,6 +120,25 @@ class CqRunnerSpec extends SparkTestBase {
         ("2024-01-01 00:00:00", "a") -> 3.0,
         ("2024-01-01 00:01:00", "a") -> 9.0), got)
     } finally h.stop()
+  }
+
+  test("bulk appends and CQ rollups leave only measurement directories at the store root") {
+    val store = java.nio.file.Files.createTempDirectory("graft-cqrun-root").toString
+    seed(store, ("2024-01-01 00:00:10", "a", 2.0), ("2024-01-01 00:00:40", "a", 4.0),
+      ("2024-01-02 00:00:10", "a", 6.0))
+    StoreMeta.createCq(store, InfluxQLParser.parse(
+      "CREATE CONTINUOUS QUERY two ON db1 RESAMPLE FOR 2d BEGIN " +
+        "SELECT MEAN(value) AS m INTO plc1_1m FROM plc1 GROUP BY time(1m), alias END")
+      .asInstanceOf[CreateCq])
+    val runs = CqRunner.runDue(spark, store, ts("2024-01-02 00:05:00").getTime * 1000000L)
+    assert(runs.map(_.rows) == Seq(2L), runs)
+    assert(targetByBucket(store) == Map(
+      ("2024-01-01 00:00:00", "a") -> 3.0, ("2024-01-02 00:00:00", "a") -> 6.0))
+    // the admin catalog lives in `_meta`; nothing else but measurements
+    val root = new java.io.File(store).list().toSeq.filter(_ != "_meta").sorted
+    assert(root == Seq("measurement=plc1", "measurement=plc1_1m"), root)
+    val days = root.map(m => m -> new java.io.File(store, m).list().toSeq.sorted)
+    assert(days.forall(_._2 == Seq("date=2024-01-01", "date=2024-01-02")), days)
   }
 
   test("a CQ without INTO or GROUP BY time is rejected at CREATE time (never registered)") {

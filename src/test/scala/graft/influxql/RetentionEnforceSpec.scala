@@ -58,6 +58,24 @@ class RetentionEnforceSpec extends SparkTestBase {
     val dropped = StoreMeta.enforceRetention(store, LocalDate.parse("2024-02-01"))
     assert(dropped.size === 1 && dropped.head.endsWith("date=2024-01-29"))
     assert(new java.io.File(store, "measurement=hrs/date=2024-01-30").exists())
+    // SHOW SHARDS gives today-2 the expiry the service keeps: the next day
+    // it drops the partition
+    val expiry = InfluxQLPlanner.sqlStore(spark, store, "SHOW SHARDS").collect()
+      .map(r => (r.getString(3), r.getString(6))).toSeq
+    assert(expiry == Seq(("2024-01-30", "2024-02-02T00:00:00Z")), expiry)
+    assert(StoreMeta.enforceRetention(store, LocalDate.parse("2024-02-01")).isEmpty)
+    assert(StoreMeta.enforceRetention(store, LocalDate.parse("2024-02-02"))
+      .map(_.takeRight(15)) == Seq("date=2024-01-30"))
+    // CREATE RETENTION POLICY applied at once counts the same days
+    val now = java.nio.file.Files.createTempDirectory("graft-rp36-now").toString
+    PointStoreDirect.append(Seq(
+      PointStoreDirect.Point(ns("2024-01-30"), "hrs", "t", 1.0),
+      PointStoreDirect.Point(ns("2024-01-29"), "hrs", "t", 2.0)), now)
+    val applied = InfluxQLPlanner.applyRetention(
+      "CREATE RETENTION POLICY rp36 ON hrs DURATION 36h REPLICATION 1 DEFAULT", now,
+      LocalDate.parse("2024-02-01"))
+    assert(applied.map(_.takeRight(15)) == Seq("date=2024-01-29"), applied)
+    assert(new java.io.File(now, "measurement=hrs/date=2024-01-30").exists())
   }
 
   test("the served store's daemon tick expires data declared by CREATE RETENTION POLICY") {

@@ -20,16 +20,15 @@ class StoreTagsSpec extends SparkTestBase {
 
   /** A store holding Telegraf-shaped tagged points (via the direct
     * writer, same code path as /write) NEXT TO legacy untagged rows
-    * (via the Spark writer, the pre-tags file layout).
+    * (a Spark write of the pre-tags file layout).
     */
   private def freshStore(): String = {
     val store = java.nio.file.Files.createTempDirectory("graft-tags").toString
     import spark.implicits._
-    // legacy shape: Spark-written partition without a tags column
-    graft.sinks.PointStore.writePartitioned(
-      Seq((Timestamp.valueOf("2024-01-01 00:00:05"), "cpu", "usage_idle", 50.0))
-        .toDF("ts", "measurement", "alias", "value"),
-      store)
+    // legacy shape: a Spark-written file without a tags column
+    Seq((Timestamp.valueOf("2024-01-01 00:00:05"), "usage_idle", 50.0))
+      .toDF("ts", "alias", "value")
+      .write.parquet(s"$store/measurement=cpu/date=2024-01-01")
     // tagged points, two hosts × two fields (exploded per field like
     // /write does), plus a second day for the DELETE case
     def tags(host: String): Option[String] =

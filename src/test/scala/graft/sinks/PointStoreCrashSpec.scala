@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 /** A crash at any step of a store mutation leaves a store that reopens to
   * exactly the committed points. Each test builds by hand the directories a
   * crash at one step leaves — a partition swap (DELETE, DROP SERIES,
-  * compaction), a drop (DROP, retention, DROP SHARD) or a `/write` append —
+  * compaction, a CQ rollup), a drop (DROP, retention, DROP SHARD) or an
+  * append (`/write`, `writePartitioned`) —
   * then reopens the store through `startStore` and checks:
   *  - the point multiset is the one before the mutation, or after it once
   *    it has committed;
@@ -65,6 +66,10 @@ class PointStoreCrashSpec extends SparkTestBase {
   private def tree(f: File): Seq[File] =
     Option(f.listFiles()).toSeq.flatten.flatMap(c => c +: tree(c))
 
+  /** Names of the in-flight states a mutation leaves on disk. */
+  private def inFlight(store: File): Seq[String] = tree(store).map(_.getName).filter(n =>
+    n.startsWith(".") && Seq(".next", ".old", ".dropped", ".inprogress").exists(n.endsWith))
+
   /** Rows of `part` kept by a rewrite that removes alias `a`. */
   private def writeRewrite(part: File, to: File): Unit =
     spark.read.schema(PointStoreDirect.readSchema).parquet(part.getPath)
@@ -89,9 +94,7 @@ class PointStoreCrashSpec extends SparkTestBase {
     try {
       assert(points(store) == expected.sorted)
       days(store).foreach(d => assert(d.matches("\\d{4}-\\d{2}-\\d{2}"), s"partition date=$d"))
-      val inFlight = tree(store).map(_.getName).filter(n => n.startsWith(".") &&
-        Seq(".next", ".old", ".dropped", ".inprogress").exists(n.endsWith))
-      assert(inFlight.isEmpty, s"leftovers after reopen: $inFlight")
+      assert(inFlight(store).isEmpty, s"leftovers after reopen: ${inFlight(store)}")
       // a partial-day DELETE: the first hours of day 1 of plc1 go
       val (c, b) = postQuery(h.port, "DELETE FROM plc1 WHERE time < '2024-01-01T05:00:00Z'")
       assert(c == 200 && !b.contains("error"), b)
@@ -179,6 +182,71 @@ class PointStoreCrashSpec extends SparkTestBase {
     assert(!tree(store).exists(_.getName.endsWith(".inprogress.crc")))
     reopens(store, before :+ pt(late))
     assert(!day3.exists(), "an append that never committed leaves no empty partition")
+  }
+
+  // A CQ rollup of plc1 into plc1_1h by hour. Its first run, at 03:00 on
+  // day 2, commits day 2 of the target with one bucket; the run at the end
+  // of day 2 swaps in both of day 2's buckets. Each test crashes that
+  // second swap at one step, with the CQ's high-water mark not advanced.
+  private val day2 = "date=2024-01-02"
+  private val rollup: Seq[Pt] =
+    Seq(("plc1_1h", (t0 + 26 * H) / 1000L, "a", 5.0), ("plc1_1h", (t0 + 30 * H) / 1000L, "b", 6.0))
+
+  private def cqStore(): File = {
+    val store = fresh()
+    graft.influxql.StoreMeta.createCq(store.getPath, graft.influxql.InfluxQLParser.parse(
+      "CREATE CONTINUOUS QUERY roll ON db1 BEGIN " +
+        "SELECT MEAN(value) AS m INTO plc1_1h FROM plc1 GROUP BY time(1h), alias END")
+      .asInstanceOf[graft.influxql.InfluxQLAst.CreateCq])
+    val first = graft.influxql.CqRunner.runDue(spark, store.getPath, t0 + 27 * H)
+    assert(first.map(_.rows) == Seq(1L), first)
+    store
+  }
+
+  /** The second run's day 2 of the target, written as its swap writes it. */
+  private def writeRollup(to: File): Unit = {
+    import spark.implicits._
+    rollup.map { case (_, us, a, v) => (new java.sql.Timestamp(us / 1000L), a, v) }
+      .toDF("ts", "alias", "value").withColumn("tags", lit(null).cast("string"))
+      .write.parquet(to.getPath)
+  }
+
+  /** Reopen `store` with the CQ tick on at the end of day 2; after one
+    * tick the target holds the uncrashed rollup, each bucket once. */
+  private def reopensCq(store: File): Unit = {
+    val hi = t0 + 48 * H
+    val h = InfluxQLHttp.startStore(spark, store.getPath, nowNs = Some(hi), cqTickSec = Some(1L))
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!graft.influxql.StoreMeta.cqLastHi(store.getPath, "db1", "roll").contains(hi) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(200)
+    } finally h.stop()
+    assert(graft.influxql.StoreMeta.cqLastHi(store.getPath, "db1", "roll").contains(hi))
+    assert(points(store).filter(_._1 == "plc1_1h") == rollup)
+    assert(points(store).filter(_._1 != "plc1_1h") == before)
+    assert(inFlight(store).isEmpty, s"leftovers after reopen: ${inFlight(store)}")
+  }
+
+  test("CQ rollup: a crash with the new day written but not swapped leaves the old day, and the tick redoes it") {
+    val store = cqStore()
+    writeRollup(new File(mdir(store, "plc1_1h"), s".$day2.next"))
+    reopensCq(store)
+  }
+
+  test("CQ rollup: a crash between the two renames rolls the old day back, and the tick redoes it") {
+    val store = cqStore()
+    val part = new File(mdir(store, "plc1_1h"), day2)
+    writeRollup(new File(mdir(store, "plc1_1h"), s".$day2.next"))
+    assert(part.renameTo(new File(mdir(store, "plc1_1h"), s".$day2.old")))
+    reopensCq(store)
+  }
+
+  test("CQ rollup: a crash after the commit rename keeps the new day, and the tick redoes it") {
+    val store = cqStore()
+    val part = new File(mdir(store, "plc1_1h"), day2)
+    assert(part.renameTo(new File(mdir(store, "plc1_1h"), s".$day2.old")))
+    writeRollup(part)
+    reopensCq(store)
   }
 
   test("a DELETE interrupted under the older __tmp swap reopens to the pre-DELETE points") {
